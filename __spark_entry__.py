@@ -1429,8 +1429,8 @@ WITH t AS (
 ),
 c AS (
   SELECT doc_id, n_tokens,
-         sum(n_tokens) OVER (ORDER BY h, doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         (sum(n_tokens) OVER (ORDER BY h, doc_id
+                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT
            AS cum_tokens
   FROM t
 )

@@ -36,6 +36,9 @@ import sys
 # importable both via spark-submit --py-files and as a plain local script
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+OPS = ("stats", "dedup", "neardup", "sample", "pack", "vocab", "filter", "split",
+       "decontaminate")
+
 
 def main(argv: list[str] | None = None, spark=None) -> dict:
     ap = argparse.ArgumentParser()
@@ -54,6 +57,23 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     ap.add_argument("--min-shared", type=int, default=2,
                     help="decontaminate: min shared fingerprints to report")
     args = ap.parse_args(argv)
+    # validate everything before any Spark work: a bad call fails fast
+    ops = [o.strip() for o in args.ops.split(",") if o.strip()]
+    unknown = [o for o in ops if o not in OPS]
+    if unknown:
+        ap.error(f"unknown op(s) {unknown}; choose from {list(OPS)}")
+    if (args.mix is None) != (args.mix_total is None):
+        ap.error("--mix and --mix-total go together")
+    if "decontaminate" in ops and args.eval_input is None:
+        ap.error("--ops decontaminate requires --eval-input")
+    weights = None
+    if args.mix is not None:
+        try:
+            weights = {
+                k: float(v) for k, v in (kv.split("=", 1) for kv in args.mix.split(","))
+            }
+        except ValueError:
+            ap.error(f"--mix must be key=weight[,key=weight...], got {args.mix!r}")
 
     from pyspark.sql import SparkSession, functions as F
 
@@ -63,7 +83,6 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet(args.input)
-    ops = [o.strip() for o in args.ops.split(",") if o.strip()]
     written: dict[str, int] = {}
 
     def _write(name: str, df) -> None:
@@ -114,13 +133,7 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
                 _write("sample_budget", token_budget_sample(docs, args.budget_tokens))
             if args.source_cap is not None:
                 _write("sample_capped", capped_per_key_sample(docs, cap=args.source_cap))
-            if args.mix is not None:
-                if args.mix_total is None:
-                    ap.error("--mix requires --mix-total")
-                weights = {
-                    k: float(v)
-                    for k, v in (kv.split("=", 1) for kv in args.mix.split(","))
-                }
+            if weights is not None:
                 _write("sample_mix", mixture_sample(docs, weights, args.mix_total))
             if args.uniform_n is not None:
                 _write("sample_uniform", uniform_sample(docs, args.uniform_n))
@@ -152,15 +165,11 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         elif op == "decontaminate":
             from splade_spark.curation import decontamination_pairs
 
-            if args.eval_input is None:
-                ap.error("--ops decontaminate requires --eval-input")
             evals = spark.read.parquet(args.eval_input)
             _write(
                 "decontamination",
                 decontamination_pairs(docs, evals, min_shared=args.min_shared),
             )
-        else:
-            ap.error(f"unknown op {op!r}")
 
     print(json.dumps({"written": written}), flush=True)
     if owns_spark:

@@ -153,3 +153,13 @@ def decode_impacts(blob: bytes, n_docs: int) -> np.ndarray:
     width = mv[1]
     dtype = "<f4" if width == 4 else "<f8"
     return np.frombuffer(mv, dtype=dtype, count=n_docs, offset=2)
+
+
+def decode_blocks(docs_bins, impacts_bins, n_docs) -> tuple[np.ndarray, np.ndarray]:
+    """A run of blocks (parallel blob/count sequences) → (doc_ids int64,
+    impacts float64), concatenated in the order given."""
+    docs = [decode_doc_ids(b, n) for b, n in zip(docs_bins, n_docs)]
+    impacts = [decode_impacts(b, n) for b, n in zip(impacts_bins, n_docs)]
+    if not docs:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    return np.concatenate(docs), np.concatenate(impacts).astype(np.float64, copy=False)

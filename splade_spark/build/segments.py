@@ -54,9 +54,7 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from splade_spark.build.codec import (
-    decode_doc_ids, decode_impacts, encode_doc_ids, encode_impacts,
-)
+from splade_spark.build.codec import decode_blocks, encode_doc_ids, encode_impacts
 from splade_spark.config import EngineConfig, DEFAULT
 
 BLOCK_SCHEMA = StructType(
@@ -85,9 +83,77 @@ def with_segment_id(postings: DataFrame, n_segments: int) -> DataFrame:
     )
 
 
-def pack_segment(
-    postings: DataFrame, cfg: EngineConfig = DEFAULT, n_partitions: int | None = None
-) -> DataFrame:
+def group_bounds(*cols: np.ndarray) -> np.ndarray:
+    """Offsets of the runs of equal values across aligned sorted ``cols``:
+    every run start, then the total length."""
+    starts = np.zeros(len(cols[0]), dtype=bool)
+    starts[:1] = True
+    for c in cols:
+        starts[1:] |= c[1:] != c[:-1]
+    return np.append(np.flatnonzero(starts), len(starts))
+
+
+def iter_sorted_groups(batches, keys: tuple[str, ...]):
+    """Re-cut a stream of pandas batches sorted by ``keys`` at group
+    boundaries → (frame, bounds) pairs, where ``frame`` holds only complete
+    groups and ``bounds`` are their ``group_bounds``. The group still open
+    at a batch's end is carried into the next batch."""
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        if len(pdf) == 0:
+            continue
+        bounds = group_bounds(*(pdf[k].to_numpy() for k in keys))
+        carry = pdf.iloc[bounds[-2]:]
+        if len(bounds) > 2:
+            yield pdf.iloc[: bounds[-2]], bounds[:-1]
+    if carry is not None and len(carry):
+        yield carry, group_bounds(*(carry[k].to_numpy() for k in keys))
+
+
+def _pack_blocks(arranged: DataFrame, cfg: EngineConfig, postings_of) -> DataFrame:
+    """Sorted (segment_id, term_id, doc_id, ...) rows → block rows.
+
+    ``postings_of(frame, bounds)`` turns a frame of complete groups into
+    (doc_ids, impacts, bounds) — one posting per doc, groups at ``bounds``.
+    Every packer emits its blocks here, so their bytes agree by construction.
+    """
+    block_size = cfg.block_size
+    columns = [f.name for f in BLOCK_SCHEMA.fields]
+
+    def _stream(batches):
+        for pdf, bounds in iter_sorted_groups(batches, ("segment_id", "term_id")):
+            seg = pdf["segment_id"].to_numpy()
+            tid = pdf["term_id"].to_numpy()
+            docs, impacts, post_bounds = postings_of(pdf, bounds)
+            rows = []
+            for g, (s, e) in enumerate(zip(post_bounds[:-1], post_bounds[1:])):
+                for b, start in enumerate(range(s, e, block_size)):
+                    d = docs[start : min(start + block_size, e)]
+                    w = impacts[start : min(start + block_size, e)]
+                    rows.append(
+                        (int(seg[bounds[g]]), int(tid[bounds[g]]), b, len(d), float(w.max()),
+                         int(d[0]), int(d[-1]), encode_doc_ids(d), encode_impacts(w))
+                    )
+            yield pd.DataFrame(rows, columns=columns)
+
+    return arranged.mapInPandas(_stream, BLOCK_SCHEMA)
+
+
+def _arrange(rows: DataFrame, cols: list[str]) -> DataFrame:
+    """Shuffle rows to their (segment, term) group, sorted by doc within it."""
+    if "segment_id" not in rows.columns:
+        rows = rows.withColumn("segment_id", F.lit(0))
+    return (
+        rows.select("segment_id", "term_id", "doc_id", *cols)
+        .repartition(rows.sparkSession.sparkContext.defaultParallelism * 2,
+                     "segment_id", "term_id")
+        .sortWithinPartitions("segment_id", "term_id", "doc_id")
+    )
+
+
+def pack_segment(postings: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
     """postings_long(term_id, doc_id, impact[, segment_id]) → block rows.
 
     If ``segment_id`` is absent everything is packed as segment 0.
@@ -100,72 +166,15 @@ def pack_segment(
     python-side sort — the sort happens in Spark's shuffle machinery
     (tungsten, spillable). Group size stays capped by segment_max_docs.
     """
-    if "segment_id" not in postings.columns:
-        postings = postings.withColumn("segment_id", F.lit(0))
-    block_size = cfg.block_size
-    spark = postings.sparkSession
-    if n_partitions is None:
-        n_partitions = spark.sparkContext.defaultParallelism * 2
-    arranged = (
-        postings.select("segment_id", "term_id", "doc_id", "impact")
-        .repartition(n_partitions, "segment_id", "term_id")
-        .sortWithinPartitions("segment_id", "term_id", "doc_id")
-    )
 
-    def _pack_stream(batches):
-        # carry: leftover rows of the group spanning a batch boundary
-        carry = None
-        out_rows: list = []
+    def postings_of(pdf, bounds):
+        return pdf["doc_id"].to_numpy(), pdf["impact"].to_numpy(dtype=np.float64), bounds
 
-        def flush_group(seg, tid, doc_ids, impacts):
-            for b, start in enumerate(range(0, len(doc_ids), block_size)):
-                d = doc_ids[start : start + block_size]
-                w = impacts[start : start + block_size]
-                out_rows.append(
-                    (int(seg), int(tid), b, len(d), float(w.max()),
-                     int(d[0]), int(d[-1]), encode_doc_ids(d), encode_impacts(w))
-                )
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            seg = pdf["segment_id"].to_numpy()
-            tid = pdf["term_id"].to_numpy()
-            # group boundary where (segment_id, term_id) changes
-            change = np.nonzero((seg[1:] != seg[:-1]) | (tid[1:] != tid[:-1]))[0] + 1
-            starts = np.concatenate(([0], change))
-            # last group may continue into the next batch → carry it
-            carry = pdf.iloc[starts[-1]:]
-            d_all = pdf["doc_id"].to_numpy()
-            w_all = pdf["impact"].to_numpy(dtype=np.float64)
-            for s, e in zip(starts[:-1], starts[1:]):
-                flush_group(seg[s], tid[s], d_all[s:e], w_all[s:e])
-            if out_rows:
-                yield pd.DataFrame(out_rows, columns=[f.name for f in BLOCK_SCHEMA.fields])
-                out_rows = []
-        if carry is not None and len(carry):
-            seg = carry["segment_id"].to_numpy()
-            tid = carry["term_id"].to_numpy()
-            change = np.nonzero((seg[1:] != seg[:-1]) | (tid[1:] != tid[:-1]))[0] + 1
-            starts = np.concatenate(([0], change, [len(carry)]))
-            d_all = carry["doc_id"].to_numpy()
-            w_all = carry["impact"].to_numpy(dtype=np.float64)
-            for s, e in zip(starts[:-1], starts[1:]):
-                flush_group(seg[s], tid[s], d_all[s:e], w_all[s:e])
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=[f.name for f in BLOCK_SCHEMA.fields])
-
-    return arranged.mapInPandas(_pack_stream, BLOCK_SCHEMA)
+    return _pack_blocks(_arrange(postings, ["impact"]), cfg, postings_of)
 
 
 def pack_segment_from_tf(
-    rows: DataFrame,
-    avgdl: float,
-    cfg: EngineConfig = DEFAULT,
-    n_partitions: int | None = None,
+    rows: DataFrame, avgdl: float, cfg: EngineConfig = DEFAULT
 ) -> DataFrame:
     """rows(term_id, doc_id, tf, doclen[, segment_id]) → packed block rows,
     where duplicate (term_id, doc_id) pairs are PRE-FOLD stemmed partials
@@ -176,79 +185,24 @@ def pack_segment_from_tf(
     vectorized ``reduceat`` before impacts are computed — the separate
     (doc, stemmed)-keyed fold exchange that ``fold_stemmed`` pays is gone.
     Impact math replicates the Catalyst expression op-for-op in float64
-    (same associativity), so blocks are byte-identical to the
+    (same associativity), and blocks come out of the same emitter as
+    ``pack_segment``'s, so they are byte-identical to the
     doc_impacts→postings_long→pack_segment route
     (tests/test_segments.py::test_pack_from_tf_byte_identical).
     """
-    if "segment_id" not in rows.columns:
-        rows = rows.withColumn("segment_id", F.lit(0))
-    block_size = cfg.block_size
     k1, b = float(cfg.k1), float(cfg.b)
     avgdl = float(avgdl)
-    spark = rows.sparkSession
-    if n_partitions is None:
-        n_partitions = spark.sparkContext.defaultParallelism * 2
-    arranged = (
-        rows.select("segment_id", "term_id", "doc_id", "tf", "doclen")
-        .repartition(n_partitions, "segment_id", "term_id")
-        .sortWithinPartitions("segment_id", "term_id", "doc_id")
-    )
 
-    def _impacts(tf: np.ndarray, doclen: np.ndarray) -> np.ndarray:
-        tf_d = tf.astype(np.float64)
-        dl = doclen.astype(np.float64)
-        norm = tf_d + k1 * ((1.0 - b) + (b * dl) / avgdl)
-        return (tf_d * (k1 + 1.0)) / norm
+    def postings_of(pdf, bounds):
+        seg, tid, doc = (pdf[c].to_numpy() for c in ("segment_id", "term_id", "doc_id"))
+        first = group_bounds(seg, tid, doc)[:-1]  # one run per (group, doc)
+        tf = np.add.reduceat(pdf["tf"].to_numpy(), first).astype(np.float64)
+        dl = pdf["doclen"].to_numpy()[first].astype(np.float64)
+        norm = tf + k1 * ((1.0 - b) + (b * dl) / avgdl)
+        impacts = (tf * (k1 + 1.0)) / norm
+        return doc[first], impacts, np.searchsorted(first, bounds)
 
-    def _pack_stream(batches):
-        carry = None
-        out_rows: list = []
-
-        def flush_group(seg, tid, doc_ids, tfs, doclens):
-            uniq, first = np.unique(doc_ids, return_index=True)
-            tf_m = np.add.reduceat(tfs, first) if uniq.size else tfs
-            w = _impacts(tf_m, doclens[first])
-            for blk, start in enumerate(range(0, len(uniq), block_size)):
-                d = uniq[start : start + block_size]
-                ww = w[start : start + block_size]
-                out_rows.append(
-                    (int(seg), int(tid), blk, len(d), float(ww.max()),
-                     int(d[0]), int(d[-1]), encode_doc_ids(d), encode_impacts(ww))
-                )
-
-        def flush_frame(pdf, starts_end=None):
-            seg = pdf["segment_id"].to_numpy()
-            tid = pdf["term_id"].to_numpy()
-            change = np.nonzero((seg[1:] != seg[:-1]) | (tid[1:] != tid[:-1]))[0] + 1
-            if starts_end is None:
-                starts = np.concatenate(([0], change))
-                tail = pdf.iloc[starts[-1]:]
-            else:
-                starts = np.concatenate(([0], change, [len(pdf)]))
-                tail = None
-            d_all = pdf["doc_id"].to_numpy()
-            tf_all = pdf["tf"].to_numpy()
-            dl_all = pdf["doclen"].to_numpy()
-            for s, e in zip(starts[:-1], starts[1:]):
-                flush_group(seg[s], tid[s], d_all[s:e], tf_all[s:e], dl_all[s:e])
-            return tail
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            carry = flush_frame(pdf)
-            if out_rows:
-                yield pd.DataFrame(out_rows, columns=[f.name for f in BLOCK_SCHEMA.fields])
-                out_rows = []
-        if carry is not None and len(carry):
-            flush_frame(carry, starts_end=True)
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=[f.name for f in BLOCK_SCHEMA.fields])
-
-    return arranged.mapInPandas(_pack_stream, BLOCK_SCHEMA)
+    return _pack_blocks(_arrange(rows, ["tf", "doclen"]), cfg, postings_of)
 
 
 def unpack_blocks(blocks: DataFrame) -> DataFrame:
@@ -264,26 +218,14 @@ def unpack_blocks(blocks: DataFrame) -> DataFrame:
 
     def _unpack(iter_pdf):
         for pdf in iter_pdf:
-            segs, tids, dids, imps = [], [], [], []
-            for r in pdf.itertuples(index=False):
-                d = decode_doc_ids(r.docs_bin, r.n_docs)
-                w = decode_impacts(r.impacts_bin, r.n_docs)
-                segs.append(np.full(r.n_docs, r.segment_id, dtype=np.int32))
-                tids.append(np.full(r.n_docs, r.term_id, dtype=np.int32))
-                dids.append(d)
-                imps.append(w)
-            if not segs:
-                yield pd.DataFrame(
-                    {"segment_id": [], "term_id": [], "doc_id": [], "impact": []}
-                ).astype({"segment_id": "int32", "term_id": "int32",
-                          "doc_id": "int64", "impact": "float64"})
-                continue
+            n = pdf["n_docs"].to_numpy()
+            docs, impacts = decode_blocks(pdf["docs_bin"], pdf["impacts_bin"], n)
             yield pd.DataFrame(
                 {
-                    "segment_id": np.concatenate(segs),
-                    "term_id": np.concatenate(tids),
-                    "doc_id": np.concatenate(dids),
-                    "impact": np.concatenate(imps).astype(np.float64),
+                    "segment_id": np.repeat(pdf["segment_id"].to_numpy(), n).astype(np.int32),
+                    "term_id": np.repeat(pdf["term_id"].to_numpy(), n).astype(np.int32),
+                    "doc_id": docs,
+                    "impact": impacts,
                 }
             )
 
@@ -490,17 +432,6 @@ def build_segmented_index(
         engine_table_exists(spark, "dictionary", index_dir)
     )
 
-    import sys
-
-    timing = os.environ.get("SPLADE_BUILD_TIMING") == "1"
-    _t_last = [time.monotonic()]
-
-    def _mark(label: str) -> None:
-        if timing:
-            now = time.monotonic()
-            print(f"[build-timing] {label}: {now - _t_last[0]:.2f}s", file=sys.stderr, flush=True)
-            _t_last[0] = now
-
     def _read_spread(path: str) -> DataFrame:
         df = spark.read.parquet(path)
         if df.rdd.getNumPartitions() < par:
@@ -546,7 +477,6 @@ def build_segmented_index(
             docs = docs.observe(obs, F.count(F.lit(1)).alias("n_docs"))
             docs.drop("tokens", "doclen").write.mode("overwrite").parquet(docs_path)
             n_docs_obs = int(obs.get["n_docs"])
-            _mark("chunk_write")
         docs = attach_tokens(_read_spread(docs_path))
         from pyspark.sql import Observation
         from splade_spark.build.postings import surface_term_counts
@@ -591,9 +521,7 @@ def build_segmented_index(
                 "corpus_stats",
                 index_dir,
             )
-            _mark("stats")
         write_engine_table(dictionary_df, "dictionary", index_dir)
-        _mark("dictionary")
 
     docs = attach_tokens(_read_spread(docs_path))
     stats = index.corpus_stats(spark)
@@ -666,7 +594,6 @@ def build_segmented_index(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("segment_id").parquet(blocks_root)
     elapsed = max(time.monotonic() - t0, 1e-9)
-    _mark("pack_write")
     # Manifest metrics WITHOUT another postings-sized pass: merged posting
     # counts come from the just-written block metadata (Σ n_docs per block);
     # per-segment doc counts from a doc_id-only column-pruned scan of the
@@ -690,7 +617,6 @@ def build_segmented_index(
         .collect()
     }
     surface.unpersist()
-    _mark("seg_stats")
 
     total_postings = sum(n_post_by_seg.values()) or 1
     done = 0

@@ -7,9 +7,12 @@ reference answers single queries in-process against a loaded Milvus
 collection (`collection.load()`, ingest.py:172); ``LocalSearcher`` is the
 same trade expressed Spark-natively: the (compact, compressed) posting
 blocks and dictionary are **collected once** from the segmented index into
-driver memory, and each query is then scored in pure numpy — identical
+driver memory, and each query is then scored in pure numpy by the same
+kernel the WAND paths run (``query/kernel.py score_term_lists``) — identical
 formulas, identical tie-break, rank-identical to the cluster paths
-(tests/test_local_search.py), at sub-10 ms per query.
+(tests/test_local_search.py), at sub-10 ms per query. Each term's blocks
+from every segment are decoded once at load into one doc-sorted list
+(segments are hash partitions of the doc space, so their lists interleave).
 
 Scale position: this is explicitly the SMALL-index / interactive tool — the
 collected index must fit the driver (fine for per-tenant or per-shard
@@ -19,16 +22,15 @@ stay on the distributed naive/WAND paths.
 
 from __future__ import annotations
 
-import math
 from collections import Counter
 
 import numpy as np
 
-from splade_spark.build.codec import decode_doc_ids, decode_impacts
+from splade_spark.build.codec import decode_blocks
+from splade_spark.build.segments import group_bounds
 from splade_spark.config import EngineConfig, DEFAULT
+from splade_spark.query.kernel import TermList, score_term_lists
 from splade_spark.text.analyzer import analyze_text
-
-SCORE_DECIMALS = 6
 
 
 class LocalSearcher:
@@ -41,12 +43,20 @@ class LocalSearcher:
         for r in dictionary_rows:
             self.term_id[r["term"]] = r["term_id"]
             self.idf[r["term_id"]] = r["idf"]
-        # term_id -> list of (doc_ids np.int64[], impacts np.float64[])
-        self.postings: dict[int, list] = {}
-        for r in block_rows:
-            d = decode_doc_ids(bytes(r["docs_bin"]), r["n_docs"])
-            w = decode_impacts(bytes(r["impacts_bin"]), r["n_docs"])
-            self.postings.setdefault(r["term_id"], []).append((d, w))
+        # term_id -> TermList over all segments, doc-sorted once here
+        rows = list(block_rows)
+        n = np.array([r["n_docs"] for r in rows], dtype=np.int64)
+        docs, impacts = decode_blocks(
+            [r["docs_bin"] for r in rows], [r["impacts_bin"] for r in rows], n
+        )
+        terms = np.repeat(np.array([r["term_id"] for r in rows], dtype=np.int64), n)
+        order = np.lexsort((docs, terms))
+        docs, impacts, terms = docs[order], impacts[order], terms[order]
+        bounds = group_bounds(terms)
+        self.postings: dict[int, TermList] = {
+            int(terms[s]): TermList(docs[s:e], impacts[s:e])
+            for s, e in zip(bounds[:-1], bounds[1:])
+        }
 
     @classmethod
     def load(cls, spark, index_dir: str, cfg: EngineConfig = DEFAULT) -> "LocalSearcher":
@@ -83,27 +93,8 @@ class LocalSearcher:
     def search(self, text: str, k: int | None = None) -> list[tuple[int, float]]:
         """→ [(doc_id, score)] top-k, ties (round(score,6) desc, doc_id asc)."""
         k = k if k is not None else self.cfg.top_k
-        weights = self.encode(text)
-        if not weights:
-            return []
-        acc_docs = np.empty(0, dtype=np.int64)
-        acc_scores = np.empty(0, dtype=np.float64)
-        # summation order fixed by ascending term_id (SURVEY §4 float spec)
-        for tid in sorted(weights):
-            blocks = self.postings.get(tid)
-            if not blocks:
-                continue
-            qw = weights[tid]
-            d = np.concatenate([b[0] for b in blocks])
-            s = qw * np.concatenate([b[1] for b in blocks])
-            all_d = np.concatenate((acc_docs, d))
-            all_s = np.concatenate((acc_scores, s))
-            acc_docs, inv = np.unique(all_d, return_inverse=True)
-            acc_scores = np.zeros(acc_docs.size, dtype=np.float64)
-            np.add.at(acc_scores, inv, all_s)
-        key = np.round(acc_scores, SCORE_DECIMALS)
-        order = np.lexsort((acc_docs, -key))[:k]
-        return [(int(acc_docs[i]), float(acc_scores[i])) for i in order]
+        docs, scores = score_term_lists(self.postings, self.encode(text), k)
+        return [(int(d), float(sc)) for d, sc in zip(docs, scores)]
 
     def search_batch(self, queries: list[tuple[int, str]], k: int | None = None):
         """[(query_id, text)] → {query_id: [(doc_id, score)]}."""

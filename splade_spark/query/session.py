@@ -78,7 +78,6 @@ class InteractiveSession:
         dictionary: DataFrame,
         cfg: EngineConfig = DEFAULT,
         max_terms: int = 5_000_000,
-        tune_conf: bool = True,
         prepare: bool = False,
         n_partitions: int = 32,
         max_literal_terms: int = 96,
@@ -117,13 +116,12 @@ class InteractiveSession:
                 self._prepared = None
             raise
         self._saved_conf: dict[str, str | None] = {}
-        if tune_conf:
-            for key, val in self._TUNED.items():
-                try:
-                    self._saved_conf[key] = self._spark.conf.get(key)
-                except Exception:  # noqa: BLE001 — unset conf
-                    self._saved_conf[key] = None
-                self._spark.conf.set(key, val)
+        for key, val in self._TUNED.items():
+            try:
+                self._saved_conf[key] = self._spark.conf.get(key)
+            except Exception:  # noqa: BLE001 — unset conf
+                self._saved_conf[key] = None
+            self._spark.conf.set(key, val)
 
     def encode(self, text: str) -> dict[int, float]:
         """Driver-side query encode: term_id → qtf·idf (OOV drops out)."""

@@ -2,44 +2,27 @@
 
 The optimized counterpart of query/naive.py — same scores, same ranks
 (three-way rank-identity is tested in tests/test_wand.py), but it reads the
-compressed segment blocks (build/segments.py) and skips decode work using the
-per-block ``max_impact`` / doc-range metadata.
+compressed segment blocks (build/segments.py) and scores each segment with
+the shared numpy kernel ``query/kernel.py score_term_lists`` (exact
+two-phase MaxScore; ``LocalSearcher`` runs the same kernel).
 
-Execution shape (SURVEY.md §3.2 Spark replacement):
+Execution shapes (SURVEY.md §3.2 Spark replacement):
 
-    blocks ⋈ broadcast(encoded queries) on term_id     -- inverted-index seek:
-                                                          only query-term rows
-                                                          are ever read; parquet
-                                                          min/max on term_id
-                                                          prunes row groups
-    groupBy(query_id, segment_id).applyInPandas(WAND)  -- per-segment top-k;
-                                                          group memory bounded
-                                                          by segment size
-    per_query_topk over segment candidates             -- global merge (tiny)
-
-Per-group traversal: an **exact two-phase MaxScore/block-max scheme**, fully
-numpy-vectorized. BM25 idf can be NEGATIVE after the epsilon floor (rank-bm25
-semantics, build/stats.py), so query weights split into:
-
-* **positive terms** (qw > 0) — the rare, high-idf, short lists. Scored
-  exactly by vectorized term-at-a-time accumulation over all their blocks:
-  ``U(d) = Σ_{t∈P, t∋d} qw_t·impact(t,d)``. Since negative terms only lower
-  scores, ``U(d)`` is an upper bound of the true score.
-* **negative terms** (qw ≤ 0) — terms with df > N/2: the monster lists where
-  skipping pays. A uniform pessimistic bound ``B = Σ_{t∈Ng} qw_t·max_impact``
-  gives the threshold ``θ = kth(U) + B`` (a valid lower bound on the true
-  k-th score, since ``true(d) ≥ U(d) + B`` per doc and order statistics are
-  monotone). Only candidates with ``U(d) ≥ θ − ε`` survive; negative-term
-  blocks are decoded ONLY when their [first_doc_id, last_doc_id] range
-  intersects a survivor (binary-search probe on block metadata — the
-  block-max skip).
-
-Survivor scores are EXACT (every relevant increment applied in float64) —
-required because rank-identity compares scores, not just docIDs. ε = 1e-6
-matches the rank rounding (query/topk.py SCORE_DECIMALS) so boundary ties are
-never pruned. Degenerate cases (fewer than k positive-term candidates — e.g.
-a query of only stop-adjacent terms) fall back to exact full accumulation
-over all terms: always correct, never fast-but-wrong.
+    topk_wand        blocks ⋈ broadcast(encoded queries) on term_id
+                       -- inverted-index seek: only query-term rows are
+                          ever read; parquet min/max on term_id prunes
+                          row groups
+                     groupBy(query_id, segment_id).applyInPandas(kernel)
+                       -- per-segment top-k; group memory bounded by
+                          segment size. Negative-weight terms are looked
+                          up from block metadata: only blocks whose
+                          [first_doc_id, last_doc_id] range holds a
+                          surviving candidate are decoded (the block-max
+                          skip, ``_TermBlocks``)
+    topk_wand_batch  one segment-sorted mapInPandas stream; each segment's
+                     term lists are decoded once and every query is scored
+                     against them
+    both             per_query_topk over segment candidates -- global merge
 """
 
 from __future__ import annotations
@@ -49,12 +32,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from splade_spark.build.codec import decode_doc_ids, decode_impacts
+from splade_spark.build.codec import decode_blocks
+from splade_spark.build.segments import group_bounds, iter_sorted_groups
 from splade_spark.config import EngineConfig, DEFAULT
 from splade_spark.query.encode import encode_queries
+from splade_spark.query.kernel import TermList, score_term_lists
 from splade_spark.query.topk import per_query_topk
-
-_EPS = 1e-6
 
 _HIT_SCHEMA = StructType(
     [
@@ -65,86 +48,43 @@ _HIT_SCHEMA = StructType(
 )
 
 
-def _accumulate(into_docs, into_scores, new_docs, new_scores):
-    """Merge (doc, score-increment) arrays into a (sorted-unique) accumulator."""
-    all_docs = np.concatenate((into_docs, new_docs))
-    all_scores = np.concatenate((into_scores, new_scores))
-    uniq, inv = np.unique(all_docs, return_inverse=True)
-    merged = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(merged, inv, all_scores)
-    return uniq, merged
+class _TermBlocks:
+    """One term's blocks in one segment (block order), decoded on demand."""
+
+    def __init__(self, cols: dict):
+        self.cols = cols
+        self.bound = float(cols["max_impact"].max())
+
+    def decode(self, within: np.ndarray | None = None):
+        c, sel = self.cols, slice(None)
+        if within is not None:  # only blocks whose doc range holds a survivor
+            lo = np.searchsorted(within, c["first_doc_id"], side="left")
+            hi = np.searchsorted(within, c["last_doc_id"], side="right")
+            sel = hi > lo
+        return decode_blocks(c["docs_bin"][sel], c["impacts_bin"][sel], c["n_docs"][sel])
 
 
-def _decode_term(rows: pd.DataFrame, qw: float):
-    """Decode every block of one term → (doc_ids, qw·impacts)."""
-    docs, scores = [], []
-    for r in rows.itertuples(index=False):
-        docs.append(decode_doc_ids(r.docs_bin, r.n_docs))
-        scores.append(qw * decode_impacts(r.impacts_bin, r.n_docs))
-    return np.concatenate(docs), np.concatenate(scores)
+def _term_blocks(cols: dict, s: int, e: int) -> dict:
+    """term_id → its block columns, over rows [s, e) sorted by (term_id, block_id)."""
+    tids = cols["term_id"]
+    bounds = s + group_bounds(tids[s:e])
+    return {
+        int(tids[a]): {c: v[a:b] for c, v in cols.items()}
+        for a, b in zip(bounds[:-1], bounds[1:])
+    }
 
 
 def _wand_group(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
-    qid = int(pdf["query_id"].iloc[0])
-    by_term = dict(tuple(pdf.groupby("term_id", sort=False)))
-    qw_of = {tid: float(g["qweight"].iloc[0]) for tid, g in by_term.items()}
-    pos = [t for t, w in qw_of.items() if w > 0]
-    neg = [t for t, w in qw_of.items() if w <= 0]
-
-    # ---- phase 1: exact accumulation over positive (short) lists ----------
-    acc_docs = np.empty(0, dtype=np.int64)
-    acc_scores = np.empty(0, dtype=np.float64)
-    for tid in pos:
-        d, s = _decode_term(by_term[tid], qw_of[tid])
-        acc_docs, acc_scores = _accumulate(acc_docs, acc_scores, d, s)
-
-    if neg:
-        B = sum(qw_of[t] * float(by_term[t]["max_impact"].max()) for t in neg)
-        theta = (
-            np.partition(acc_scores, acc_scores.size - k)[acc_scores.size - k] + B
-            if acc_docs.size >= k
-            else -np.inf
-        )
-        # Pruning is sound only when θ > 0: docs with no positive term have
-        # true score ≤ 0 and were never accumulated, so they may only be
-        # dropped when the k-th guaranteed score beats them.
-        if theta > _EPS:
-            # ---- phase 2: prune, then exact negative increments -----------
-            keep = acc_scores >= (theta - 2 * _EPS)  # 2ε: immune to round-to-6 ties
-            acc_docs, acc_scores = acc_docs[keep], acc_scores[keep]
-            for tid in neg:
-                g = by_term[tid]
-                firsts = g["first_doc_id"].to_numpy()
-                lasts = g["last_doc_id"].to_numpy()
-                lo = np.searchsorted(acc_docs, firsts, side="left")
-                hi = np.searchsorted(acc_docs, lasts, side="right")
-                hit_blocks = np.nonzero(hi > lo)[0]
-                rows = list(g.itertuples(index=False))
-                for bi in hit_blocks:
-                    r = rows[bi]
-                    d = decode_doc_ids(r.docs_bin, r.n_docs)
-                    s = qw_of[tid] * decode_impacts(r.impacts_bin, r.n_docs)
-                    idx = np.searchsorted(acc_docs, d)
-                    idx[idx == acc_docs.size] = 0
-                    m = acc_docs[idx] == d
-                    if m.any():
-                        np.add.at(acc_scores, idx[m], s[m])
-        else:
-            # Degenerate: not enough positive-term candidates for a sound
-            # threshold (e.g. all-negative query). Exact full accumulation.
-            for tid in neg:
-                d, s = _decode_term(by_term[tid], qw_of[tid])
-                acc_docs, acc_scores = _accumulate(acc_docs, acc_scores, d, s)
-
-    if acc_docs.size == 0:
-        return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-            {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-        )
-    # per-segment top-k with the frozen tie-break (round 6, doc_id asc)
-    key_score = np.round(acc_scores, 6)
-    order = np.lexsort((acc_docs, -key_score))[:k]
+    pdf = pdf.sort_values(["term_id", "block_id"])
+    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+    lists, weights = {}, {}
+    for tid, c in _term_blocks(cols, 0, len(pdf)).items():
+        lists[tid] = _TermBlocks(c)
+        weights[tid] = float(c["qweight"][0])
+    docs, scores = score_term_lists(lists, weights, k)
     return pd.DataFrame(
-        {"query_id": qid, "doc_id": acc_docs[order], "score": acc_scores[order]}
+        {"query_id": np.full(docs.size, cols["query_id"][0], dtype=np.int64),
+         "doc_id": docs, "score": scores}
     )
 
 
@@ -170,58 +110,6 @@ def topk_wand(
         lambda pdf: _wand_group(pdf, k), _HIT_SCHEMA
     )
     return per_query_topk(hits, k)
-
-
-def _score_queries_against_segment(term_cache: dict, weights_by_query: dict, k: int):
-    """Score every query against one segment's decoded term lists.
-
-    term_cache: term_id -> (docs int64 asc, qw-free impacts f64).
-    Decode cost is paid once per segment regardless of query count; the
-    two-phase pruning survives per query (θ from positive terms, vectorized
-    searchsorted increments for the negative head terms).
-    """
-    out = []
-    for qid, weights in weights_by_query.items():
-        present = [t for t in weights if t in term_cache]
-        if not present:
-            continue
-        pos = [t for t in present if weights[t] > 0]
-        neg = [t for t in present if weights[t] <= 0]
-        acc_docs = np.empty(0, dtype=np.int64)
-        acc_scores = np.empty(0, dtype=np.float64)
-        for tid in pos:
-            d, w = term_cache[tid]
-            acc_docs, acc_scores = _accumulate(acc_docs, acc_scores, d, weights[tid] * w)
-        if neg:
-            B = sum(weights[t] * float(term_cache[t][1].max()) for t in neg)
-            theta = (
-                np.partition(acc_scores, acc_scores.size - k)[acc_scores.size - k] + B
-                if acc_docs.size >= k
-                else -np.inf
-            )
-            if theta > _EPS:
-                keep = acc_scores >= (theta - 2 * _EPS)
-                acc_docs, acc_scores = acc_docs[keep], acc_scores[keep]
-                for tid in neg:
-                    d, w = term_cache[tid]
-                    idx = np.searchsorted(d, acc_docs)
-                    idx[idx == d.size] = 0
-                    m = d[idx] == acc_docs
-                    if m.any():
-                        acc_scores[m] += weights[tid] * w[idx[m]]
-            else:
-                for tid in neg:
-                    d, w = term_cache[tid]
-                    acc_docs, acc_scores = _accumulate(
-                        acc_docs, acc_scores, d, weights[tid] * w
-                    )
-        if acc_docs.size == 0:
-            continue
-        key = np.round(acc_scores, 6)
-        order = np.lexsort((acc_docs, -key))[:k]
-        for i in order:
-            out.append((qid, int(acc_docs[i]), float(acc_scores[i])))
-    return out
 
 
 def topk_wand_auto(
@@ -268,7 +156,6 @@ def topk_wand_batch(
     dictionary: DataFrame,
     k: int | None = None,
     cfg: EngineConfig = DEFAULT,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Batch-optimized WAND: one streaming pass over the blocks, all queries
     scored per segment from a shared decode cache.
@@ -290,8 +177,6 @@ def topk_wand_batch(
     """
     k = k if k is not None else cfg.top_k
     spark = blocks.sparkSession
-    if n_partitions is None:
-        n_partitions = spark.sparkContext.defaultParallelism * 2
     enc_rows = encode_queries(queries, dictionary, cfg).collect()
     weights_by_query: dict[int, dict[int, float]] = {}
     for r in enc_rows:
@@ -305,45 +190,28 @@ def topk_wand_batch(
     arranged = (
         blocks.filter(F.col("term_id").isin(wanted_terms))  # index seek + pushdown
         .select("segment_id", "term_id", "block_id", "n_docs", "docs_bin", "impacts_bin")
-        .repartition(n_partitions, "segment_id")
+        .repartition(spark.sparkContext.defaultParallelism * 2, "segment_id")
         .sortWithinPartitions("segment_id", "term_id", "block_id")
     )
 
     def _stream(batches):
-        carry = None
-
-        def score_segment(pdf):
-            cache = {}
-            for tid, g in pdf.groupby("term_id", sort=True):
-                ds, ws = [], []
-                for r in g.itertuples(index=False):
-                    ds.append(decode_doc_ids(r.docs_bin, r.n_docs))
-                    ws.append(decode_impacts(r.impacts_bin, r.n_docs))
-                cache[tid] = (np.concatenate(ds), np.concatenate(ws))
-            rows = _score_queries_against_segment(cache, weights_by_query, k)
-            if rows:
-                return pd.DataFrame(rows, columns=["query_id", "doc_id", "score"])
-            return None
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            segs = pdf["segment_id"].to_numpy()
-            change = np.nonzero(segs[1:] != segs[:-1])[0] + 1
-            starts = np.concatenate(([0], change))
-            carry = pdf.iloc[starts[-1]:]
-            for s, e in zip(starts[:-1], starts[1:]):
-                out = score_segment(pdf.iloc[s:e])
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            for seg_val, g in carry.groupby("segment_id", sort=True):
-                out = score_segment(g)
-                if out is not None:
-                    yield out
+        for pdf, bounds in iter_sorted_groups(batches, ("segment_id",)):
+            cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+            qids, docs, scores = [], [], []
+            for s, e in zip(bounds[:-1], bounds[1:]):  # one segment
+                lists = {
+                    tid: TermList(*decode_blocks(c["docs_bin"], c["impacts_bin"], c["n_docs"]))
+                    for tid, c in _term_blocks(cols, s, e).items()
+                }
+                for qid, weights in weights_by_query.items():
+                    d, sc = score_term_lists(lists, weights, k)
+                    qids.append(np.full(d.size, qid, dtype=np.int64))
+                    docs.append(d)
+                    scores.append(sc)
+            yield pd.DataFrame(
+                {"query_id": np.concatenate(qids), "doc_id": np.concatenate(docs),
+                 "score": np.concatenate(scores)}
+            )
 
     hits = arranged.mapInPandas(_stream, _HIT_SCHEMA)
     return per_query_topk(hits, k)

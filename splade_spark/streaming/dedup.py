@@ -108,7 +108,7 @@ def _canonicalize_group_fn(state_timeout_ms: int | None, event_time: bool = Fals
             out["is_first"] = out["doc_id"] == canonical_id
             yield out[["doc_id", "text_md5", "canonical_id", "is_first", "warc_ts"]]
             if event_time:
-                last_seen_ms = int(pdf["warc_ts"].max().timestamp() * 1000)
+                last_seen_ms = int(pdf["warc_ms"].max())
         if canonical_id is not None:
             state.update((canonical_id,))
             if state_timeout_ms is not None:
@@ -166,6 +166,9 @@ def stream_canonicalize(
         F.col(id_col).cast("long").alias("doc_id"),
         F.md5(F.col(text_col)).alias("text_md5"),
         F.col(time_col).alias("warc_ts"),
+        # epoch ms computed by Spark: the pandas side sees warc_ts as a
+        # tz-naive wall time in the session time zone, not as an instant
+        F.unix_millis(F.col(time_col)).alias("warc_ms"),
     )
     if event:
         prepped = prepped.withWatermark("warc_ts", watermark_delay)

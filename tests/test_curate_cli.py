@@ -6,6 +6,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
 
 from tests.conftest import SF_SMALL  # noqa: E402
@@ -44,3 +46,21 @@ def test_curate_all_ops(spark, tmp_path):
     # stats joins the four per-doc frames without row loss
     stats = spark.read.parquet(os.path.join(out, "stats.parquet"))
     assert {"word_tokens", "quality", "dup_line_frac", "lang_pred"} <= set(stats.columns)
+
+
+@pytest.mark.parametrize("bad", [
+    ["--ops", "stats,nosuchop"],
+    ["--ops", "sample", "--mix", "src0=0.5"],
+    ["--ops", "sample", "--mix-total", "6"],
+    ["--ops", "sample", "--mix", "src0", "--mix-total", "6"],
+    ["--ops", "decontaminate"],
+])
+def test_curate_rejects_bad_arguments_before_reading(spark, tmp_path, bad):
+    """Bad op lists and argument pairings are usage errors raised before the
+    input is read: the input path here does not exist."""
+    import curate
+
+    missing = str(tmp_path / "no_such_input.parquet")
+    with pytest.raises(SystemExit) as exc:
+        curate.main(["--input", missing, "--output", str(tmp_path / "out"), *bad], spark=spark)
+    assert exc.value.code == 2

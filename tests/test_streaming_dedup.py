@@ -186,6 +186,23 @@ def test_stream_canonicalize_event_time_expiry(spark, tmp_path):
     growing state forever. Batch boundaries forced by restarting the
     availableNow query per file against one checkpoint (watermark and state
     are checkpointed)."""
+    _event_time_expiry(spark, tmp_path)
+
+
+def test_stream_canonicalize_event_time_expiry_non_utc(spark, tmp_path):
+    """The expiry clock is the event's instant, not its wall time in the
+    session time zone: under UTC+9, epoch ms taken from the tz-naive pandas
+    timestamp would land 9 h late and alpha's state would never expire."""
+    key = "spark.sql.session.timeZone"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "Asia/Tokyo")
+    try:
+        _event_time_expiry(spark, tmp_path)
+    finally:
+        spark.conf.set(key, saved)
+
+
+def _event_time_expiry(spark, tmp_path):
     from splade_spark.streaming import stream_canonicalize
 
     src = str(tmp_path / "esrc")

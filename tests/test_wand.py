@@ -67,22 +67,73 @@ def test_three_way_rank_identity(spark, setup, n_segments, block_size):
     blocks.unpersist()
 
 
-def test_wand_negative_weight_terms_exact(spark, setup):
-    """Queries made of head terms (df > N/2 → negative idf) must still be
-    exact — exercises the degenerate fallback path in query/wand.py."""
+def test_wand_negative_weight_terms_exact(spark, setup, monkeypatch):
+    """Queries made of head terms must be exact on every numpy path. On a
+    corpus whose head terms (df > N/2) have NEGATIVE weight, a query mixing
+    in rare terms drives θ > ε: the kernel prunes and looks the negative
+    terms up at the survivors only, on topk_wand (block-range skip),
+    topk_wand_batch and LocalSearcher alike."""
+    from pyspark.sql import functions as F
+
+    from splade_spark.query import kernel, wand
+    from splade_spark.query.encode import encode_queries
+    from splade_spark.query.local import LocalSearcher
+
+    def _all_paths(frames, oracle, qid, qtext, k=5):
+        q = spark.createDataFrame([(qid, qtext)], ["query_id", "text"])
+        blocks = pack_segment(frames.postings, DEFAULT)
+        want = [(d, round(s, 6)) for d, s in oracle.topk(qtext, k)]
+        assert _collect(topk_naive(q, frames.postings, frames.dictionary, k=k)).get(qid, []) == want
+        assert _collect(topk_wand(q, blocks, frames.dictionary, k=k)).get(qid, []) == want
+        assert _collect(topk_wand_batch(q, blocks, frames.dictionary, k=k)).get(qid, []) == want
+        local = LocalSearcher.from_frames(frames, DEFAULT).search(qtext, k)
+        assert [(d, round(s, 6)) for d, s in local] == want
+        return q, blocks, want
+
     frames, oracle = setup
     head_terms = [
         r.term
         for r in frames.dictionary.orderBy("term_id").limit(3).collect()
     ]
-    qtext = " ".join(head_terms)
-    q = spark.createDataFrame([(100, qtext)], ["query_id", "text"])
-    blocks = pack_segment(frames.postings, DEFAULT)
-    naive = _collect(topk_naive(q, frames.postings, frames.dictionary, k=5))
-    wand = _collect(topk_wand(q, blocks, frames.dictionary, k=5))
-    want = [(d, round(s, 6)) for d, s in oracle.topk(qtext, 5)]
-    assert naive.get(100, []) == want
-    assert wand.get(100, []) == want
+    _all_paths(frames, oracle, 100, " ".join(head_terms))
+
+    # 8 head terms in all 40 docs, 10 rare terms in 2 docs each: the mean raw
+    # idf is negative, so the epsilon floor gives the head terms idf < 0
+    head = [f"h{i}" for i in range(8)]
+    docs = [
+        (i + 1, " ".join(head + ["h0"] * (i % 3) + ([f"r{i // 2}"] if i < 20 else [])))
+        for i in range(40)
+    ]
+    neg_frames = build_index_from_docs(spark.createDataFrame(docs, ["doc_id", "text"]), DEFAULT)
+    neg_frames.postings.cache().count()
+    neg_oracle = PandasOracle(DEFAULT)
+    for d, t in docs:
+        neg_oracle.add_doc(d, t)
+    neg_oracle.fit()
+    idf = {r.term: r.idf for r in neg_frames.dictionary.collect()}
+    assert all(idf[t] < 0 for t in head) and idf["r0"] > 0
+    qtext = "r0 r1 r2 r3 r4 h0 h1 h1"
+    q, blocks, want = _all_paths(neg_frames, neg_oracle, 101, qtext)
+
+    # the prune branch ran: negative terms were decoded at survivors only.
+    # Observed in-process; topk_wand_batch scores the same one-segment
+    # TermLists as LocalSearcher.
+    pruned = []
+    for cls in (kernel.TermList, wand._TermBlocks):
+        def _spy(self, within=None, _orig=cls.decode, _name=cls.__name__):
+            if within is not None:
+                pruned.append(_name)
+            return _orig(self, within)
+
+        monkeypatch.setattr(cls, "decode", _spy)
+    LocalSearcher.from_frames(neg_frames, DEFAULT).search(qtext, 5)
+    joined = blocks.join(
+        F.broadcast(encode_queries(q, neg_frames.dictionary)), "term_id"
+    ).toPandas()
+    got = wand._wand_group(joined, 5)
+    assert [(int(d), round(float(s), 6)) for d, s in zip(got["doc_id"], got["score"])] == want
+    assert set(pruned) == {"TermList", "_TermBlocks"}
+    neg_frames.postings.unpersist()
 
 
 def test_wand_auto_rank_identity_and_selection(spark, setup):
