@@ -4,22 +4,25 @@
     spark-submit --py-files splade_spark.zip scripts/compact_index.py \\
         --index /tmp/idx [--target-segments 1]
 
-Reads every committed segment's blocks, k-way merges posting lists by doc_id
-per term, re-blocks into ``--target-segments`` hash segments, and swaps the
-blocks tree + manifests CRASH-SAFELY: the new tree and new manifests are
-fully staged first (``blocks_compact`` / ``_manifest_next``), the atomic
-commit point is the ``_manifest_next/COMPLETE`` marker, and the actual swap
-is the idempotent ``recover_compaction`` routine (build/segments.py) that
-also runs at every build/compact start — a crash at any instant leaves
-exactly one consistent (blocks, manifests) pair. Query results are unchanged
-(same postings, new physical grouping) — asserted by tests/test_compaction.py.
+Reads every committed segment's blocks, re-hashes every posting into
+``--target-segments`` hash segments, re-blocks (``merge_segments``), and
+commits through the batch build's segment writer (``write_segments``). Manifest
+``n_docs`` counts the chunk docs (``docs/`` ∪ ``docs_stream/``) per new
+segment, zero-posting docs included, so Σ n_docs survives compaction. The
+writer swaps the blocks tree + manifests CRASH-SAFELY: the new tree and new
+manifests are fully staged first (``blocks_compact`` / ``_manifest_next``),
+the atomic commit point is the ``_manifest_next/COMPLETE`` marker, and the
+actual swap is the idempotent ``recover_compaction`` routine
+(build/segments.py) that also runs at every build/compact start — a crash
+at any instant leaves exactly one consistent (blocks, manifests) pair.
+Query results are unchanged (same postings, new physical grouping) —
+asserted by tests/test_compaction.py.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 
@@ -41,11 +44,9 @@ def main(argv: list[str] | None = None) -> None:
 def compact_index(spark, index_dir: str, target_segments: int = 1,
                   cfg=None) -> dict:
     """Merge all committed segments into ``target_segments`` new ones."""
-    from pyspark.sql import functions as F
-
     from splade_spark.build.segments import (
-        SegmentedIndex, _commit_manifest, _dir_bytes, pack_segment,
-        recover_compaction, unpack_blocks, with_segment_id,
+        _HASH_ASSIGN, SegmentedIndex, docs_per_segment, merge_segments,
+        recover_compaction, write_segments,
     )
     from splade_spark.config import DEFAULT
 
@@ -56,54 +57,22 @@ def compact_index(spark, index_dir: str, target_segments: int = 1,
     if not old:
         raise ValueError(f"no committed segments under {index_dir}")
 
-    long = unpack_blocks(idx.blocks(spark)).drop("segment_id")
-    long = with_segment_id(long, target_segments).cache()
-
-    new_root = os.path.join(index_dir, "blocks_compact")
     t0 = time.monotonic()
-    pack_segment(long, cfg).write.mode("overwrite").partitionBy("segment_id").parquet(new_root)
-    elapsed = max(time.monotonic() - t0, 1e-9)
-    seg_stats = {
-        int(r.segment_id): r
-        for r in long.groupBy("segment_id")
-        .agg(F.count(F.lit(1)).alias("n_postings"), F.countDistinct("doc_id").alias("n_docs"))
-        .collect()
-    }
-    long.unpersist()
-
-    # stage ALL new manifests, then the COMPLETE marker (the atomic commit
-    # point), then let the idempotent recovery routine perform the swap
-    man_next = os.path.join(index_dir, "_manifest_next")
-    total = sum(int(r.n_postings) for r in seg_stats.values()) or 1
-    for seg, r in seg_stats.items():
-        _commit_manifest(
-            idx,
-            {
-                "segment_id": seg,
-                "status": "committed",
-                "n_docs": int(r.n_docs),
-                "n_postings": int(r.n_postings),
-                "bytes": _dir_bytes(os.path.join(new_root, f"segment_id={seg}")),
-                "built_ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                "lineage": json.dumps(
-                    {
-                        "compacted_from": sorted(old),
-                        "segment_of": target_segments,
-                        "assign": "pmod(xxhash64(doc_id), n_segments)",
-                        "postings_per_sec": round(total / elapsed, 1),
-                    }
-                ),
-            },
-            manifest_dir=man_next,
-        )
-    with open(os.path.join(man_next, "COMPLETE"), "w") as f:
-        f.write(json.dumps({"target_segments": target_segments}))
-    recover_compaction(index_dir)  # the swap itself (crash-resumable)
+    # staged: blocks_compact + _manifest_next, COMPLETE marker, then the swap
+    new = write_segments(
+        idx,
+        merge_segments(idx.blocks(spark), target_segments, cfg),
+        docs_per_segment(idx.docs(spark), target_segments, range(target_segments)),
+        {"compacted_from": sorted(old), "segment_of": target_segments,
+         "assign": _HASH_ASSIGN},
+        cfg,
+        staged=True,
+    )
     out = {
         "old_segments": len(old),
-        "new_segments": len(seg_stats),
-        "n_postings": total,
-        "compact_sec": round(elapsed, 3),
+        "new_segments": len(new),
+        "n_postings": sum(m["n_postings"] for m in new.values()),
+        "compact_sec": round(time.monotonic() - t0, 3),
     }
     print(json.dumps(out), flush=True)
     return out

@@ -37,7 +37,7 @@ class IndexFrames:
     postings: DataFrame      # (term_id, doc_id, impact, tf)
 
 
-def _assemble(docs: DataFrame, cfg: EngineConfig, salted: bool) -> IndexFrames:
+def _assemble(docs: DataFrame, cfg: EngineConfig) -> IndexFrames:
     from splade_spark.build.chunker import attach_tokens
     from splade_spark.build.postings import surface_term_counts
     from splade_spark.build.stats import corpus_stats_from_surface
@@ -61,7 +61,7 @@ def _assemble(docs: DataFrame, cfg: EngineConfig, salted: bool) -> IndexFrames:
     tf = term_freqs(docs, cfg, surface=surface)
     if cfg.analyzer.stem:
         tf = tf.cache()  # the fold exchange runs once, not per consumer
-    dictionary = build_dictionary(tf, stats, cfg, salted=salted).cache()
+    dictionary = build_dictionary(tf, stats, cfg).cache()
     impacts = doc_impacts(tf, stats, cfg)
     postings = postings_long(impacts, dictionary)
     return IndexFrames(docs, stats, dictionary, postings)
@@ -71,17 +71,15 @@ def build_index_frames(
     pages: DataFrame,
     cfg: EngineConfig = DEFAULT,
     use_html: bool = True,
-    salted: bool = True,
 ) -> IndexFrames:
     """Full pipeline from web_pages(url, warc_ts, html, text, lang)."""
     docs = docs_from_chunks(chunk_pages(pages, cfg, use_html=use_html), cfg)
-    return _assemble(docs, cfg, salted)
+    return _assemble(docs, cfg)
 
 
 def build_index_from_docs(
     doc_rows: DataFrame,
     cfg: EngineConfig = DEFAULT,
-    salted: bool = True,
 ) -> IndexFrames:
     """Pipeline over pre-chunked rows (doc_id long, text string) — no splitter.
 
@@ -104,4 +102,4 @@ def build_index_from_docs(
         .withColumn("tokens", nostem_tokens(F.coalesce(F.col("norm"), F.col("text"))))
         .withColumn("doclen", F.size("tokens"))
     )
-    return _assemble(docs, cfg, salted)
+    return _assemble(docs, cfg)

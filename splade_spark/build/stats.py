@@ -15,11 +15,10 @@ Semantics of ``BM25SparseEmbedding(corpus)`` fit (instantiated at
 Everything here is plain Catalyst column math — whole-stage codegen, no UDFs.
 
 Skew note (SURVEY.md §4): ``groupBy(term)`` on a Zipfian corpus has head-term
-skew. ``salted=True`` (default) computes df in two phases —
-``groupBy(term, salt)`` partial counts then ``groupBy(term)`` final sum — so
-no single reducer sees a whole head term. Spark's partial aggregation already
-combines map-side; the explicit salt additionally bounds the final-stage key
-width and is the pattern that holds at 10^12 docs.
+skew. Spark's partial aggregation combines the df count map-side, so each
+reducer receives at most one partial count per (map task, term) — a head
+term costs the final stage one row per map task, not one per posting. (An
+explicit salt column would only add a hash exchange to the plan.)
 """
 
 from __future__ import annotations
@@ -69,7 +68,6 @@ def build_dictionary(
     tf: DataFrame,
     corpus_stats: DataFrame | int,
     cfg: EngineConfig = DEFAULT,
-    salted: bool = True,
 ) -> DataFrame:
     """tf(doc_id, term, tf) → dictionary(term, term_id int, df long, idf double).
 
@@ -95,15 +93,7 @@ def build_dictionary(
       build / streaming refit cycle (ADVICE r2).
     * range-partitioned (above): no single task ever holds the vocabulary.
     """
-    if salted:
-        partial = (
-            tf.withColumn("_salt", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.salt_buckets)))
-            .groupBy("term", "_salt")
-            .agg(F.count(F.lit(1)).alias("_pdf"))
-        )
-        df = partial.groupBy("term").agg(F.sum("_pdf").cast("long").alias("df"))
-    else:
-        df = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
+    df = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
 
     head = df.limit(_DRIVER_VOCAB_THRESHOLD + 1).collect()
     if len(head) <= _DRIVER_VOCAB_THRESHOLD:

@@ -50,9 +50,6 @@ class EngineConfig:
     # segmenting: max chunk-docs per segment (bounds applyInPandas group memory)
     segment_max_docs: int = 50_000
 
-    # build skew handling: salt fan-out for head-term pre-aggregation
-    salt_buckets: int = 16
-
     # query defaults
     top_k: int = 5
     rrf_k: int = 60

@@ -116,8 +116,15 @@ def _canonicalize_group_fn(state_timeout_ms: int | None, event_time: bool = Fals
                     if last_seen_ms is not None:
                         # expire when the WATERMARK passes last-seen +
                         # horizon — trigger-cadence-independent, the
-                        # bounded-state rule for a continuous crawl stream
-                        state.setTimeoutTimestamp(last_seen_ms + state_timeout_ms)
+                        # bounded-state rule for a continuous crawl stream.
+                        # Late rows are filtered by the previous batch's
+                        # watermark, so that can already be behind this
+                        # batch's; Spark rejects such a timeout, so a late
+                        # group expires at the next watermark advance.
+                        state.setTimeoutTimestamp(max(
+                            last_seen_ms + state_timeout_ms,
+                            state.getCurrentWatermarkMs() + 1,
+                        ))
                 else:
                     state.setTimeoutDuration(state_timeout_ms)
 

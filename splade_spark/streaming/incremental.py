@@ -8,11 +8,13 @@ merge stage (B8, build/segments.py merge_segments) compacts.
 
 Design decisions:
 
-* ``foreachBatch`` drives the SAME batch packing code path used by
-  build_segmented_index — one implementation of the physical format, two
+* ``foreachBatch`` drives the SAME code path as build_segmented_index:
+  ``segment_rows`` → ``pack_segment_from_tf`` → ``write_segments`` — one
+  implementation of the physical format and of the segment commit, two
   drivers (batch + streaming). Segment ids for streamed segments are
-  ``base + batch_id``; manifests are identical, so resume/merge/query treat
-  streamed segments exactly like batch-built ones.
+  ``base + batch_id``; manifests carry the same fields (lineage records the
+  stream batch instead of ``segment_of``), so merge/query treat streamed
+  segments exactly like batch-built ones.
 * Global BM25 stats (dictionary/corpus_stats) come from a FIT PREFIX: the
   dictionary is fit once on the initial corpus (or a prior batch build) and
   streamed segments encode against that frozen fit. That matches the
@@ -38,9 +40,7 @@ re-crawled pages by doc_id if a dedup policy is configured.
 
 from __future__ import annotations
 
-import json
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -63,10 +63,12 @@ def stream_build_segments(
     ``trigger_once=True`` (default) processes all available input then stops
     — the batch-incremental mode that needs no long-running driver.
     """
+    from pyspark.sql import Observation
+
     from splade_spark.build.chunker import chunk_pages, docs_from_chunks
-    from splade_spark.build.postings import stem_map_from_terms, surface_term_counts
+    from splade_spark.build.postings import surface_term_counts
     from splade_spark.build.segments import (
-        SegmentedIndex, _commit_manifest, _dir_bytes, pack_segment_from_tf,
+        SegmentedIndex, pack_segment_from_tf, segment_rows, write_segments,
     )
 
     index = SegmentedIndex(index_dir)
@@ -74,22 +76,15 @@ def stream_build_segments(
     def _process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         seg_id = base_segment_id + int(batch_id)
-        stats = index.corpus_stats(spark)
-        dictionary = index.dictionary(spark)
-
         docs = docs_from_chunks(chunk_pages(batch_df, cfg, use_html=use_html), cfg)
         # Persist this batch's chunk docs so a later refit_compact can re-fit
         # over the FULL corpus. Tokens and doclen are dropped (derived
         # projections, same convention as the batch chunk store — schemas
         # must match for the refit union). Partitioned by batch id + dynamic
         # overwrite → a replayed micro-batch rewrites only its own partition
-        # (idempotent, same guarantee as the blocks write below). The batch
-        # doc count rides the write as an observed aggregate — it feeds the
-        # manifest's n_docs with the SAME definition the batch builder uses
-        # (all docs stored for the segment, zero-token docs included;
-        # ADVICE r2 unified the two paths).
-        from pyspark.sql import Observation
-
+        # (idempotent, like the blocks write). The batch doc count rides the
+        # write as an observed aggregate: the segment's n_docs, zero-token
+        # docs included, as for every segment.
         obs = Observation()
         docs.drop("tokens", "doclen").observe(
             obs, F.count(F.lit(1)).alias("n_docs")
@@ -98,62 +93,17 @@ def stream_build_segments(
         ).option("partitionOverwriteMode", "dynamic").partitionBy("batch").parquet(
             os.path.join(index_dir, "docs_stream")
         )
-        n_docs_batch = int(obs.get["n_docs"])
-        # Same one-exchange shape as batch phase 1: surface tf (no shuffle) →
-        # batch-local stem map + frozen-dictionary broadcast joins → the pack
-        # repartition; stemmed partial duplicates merge inside the pack
-        # stream. The stem map is derived from THIS batch's surface terms so
-        # unseen surface forms still stem onto in-dictionary terms (frozen-
-        # fit OOV semantics unchanged).
-        surface = surface_term_counts(docs)
-        rows = surface
-        if cfg.analyzer.stem:
-            smap = stem_map_from_terms(rows.select("term").distinct())
-            rows = rows.join(F.broadcast(smap), "term").select(
-                F.col("term_stemmed").alias("term"), "doc_id", "tf", "doclen"
-            )
-        long = (
-            rows.join(F.broadcast(dictionary.select("term", "term_id")), "term")
-            .select("term_id", "doc_id", "tf", "doclen")
-            .withColumn("segment_id", F.lit(seg_id).cast("int"))
-        )
-        avgdl = float(stats.head().avgdl)
-        blocks_root = os.path.join(index_dir, "blocks")
-        seg_path = os.path.join(blocks_root, f"segment_id={seg_id}")
-        t0 = time.monotonic()
-        # same partitioned layout as batch builds; dynamic overwrite makes a
-        # replayed micro-batch idempotent (rewrites only its own segment dir)
-        pack_segment_from_tf(long, avgdl, cfg).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("segment_id").parquet(blocks_root)
-        elapsed = max(time.monotonic() - t0, 1e-9)
-        # n_postings from the just-written block metadata (Σ n_docs per
-        # block = distinct (term, doc) pairs after the in-pack merge) — same
-        # definition and same zero-extra-pass trick as the batch builder;
-        # the countDistinct over `long` it replaces re-ran the whole
-        # chunk→surface pipeline once more per micro-batch.
-        n_postings = (
-            int(
-                spark.read.parquet(seg_path)
-                .agg(F.coalesce(F.sum("n_docs"), F.lit(0)).alias("s"))
-                .head()["s"]
-            )
-            if os.path.isdir(seg_path)
-            else 0  # batch had no in-dictionary postings → no partition dir
-        )
-        _commit_manifest(
+        rows = segment_rows(surface_term_counts(docs), index.dictionary(spark), cfg)
+        write_segments(
             index,
-            {
-                "segment_id": seg_id,
-                "status": "committed",
-                "n_docs": n_docs_batch,
-                "n_postings": n_postings,
-                "bytes": _dir_bytes(seg_path),
-                "built_ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                "lineage": json.dumps(
-                    {"stream_batch_id": int(batch_id), "mode": "streaming-foreachBatch"}
-                ),
-            },
+            pack_segment_from_tf(
+                rows.withColumn("segment_id", F.lit(seg_id).cast("int")),
+                float(index.corpus_stats(spark).head().avgdl),
+                cfg,
+            ),
+            {seg_id: int(obs.get["n_docs"])},
+            {"stream_batch_id": int(batch_id), "mode": "streaming-foreachBatch"},
+            cfg,
         )
 
     writer = pages_stream.writeStream.foreachBatch(_process_batch).outputMode("append")
@@ -189,22 +139,8 @@ def refit_compact(
     """
     from splade_spark.build.segments import SegmentedIndex, build_segmented_index
 
-    old = SegmentedIndex(index_dir)
-    docs_parts = []
-    batch_docs_path = os.path.join(index_dir, "docs")
-    stream_docs_path = os.path.join(index_dir, "docs_stream")
-    if os.path.exists(os.path.join(batch_docs_path, "_SUCCESS")):
-        docs_parts.append(spark.read.parquet(batch_docs_path))
-    if os.path.isdir(stream_docs_path):
-        docs_parts.append(spark.read.parquet(stream_docs_path).drop("batch"))
-    if not docs_parts:
-        raise ValueError(f"no doc stores under {index_dir} to re-fit from")
-    docs = docs_parts[0]
-    for part in docs_parts[1:]:
-        docs = docs.unionByName(part)
-
+    docs = SegmentedIndex(index_dir).docs(spark)
     os.makedirs(new_index_dir, exist_ok=True)
-    new_docs_path = os.path.join(new_index_dir, "docs")
-    docs.write.mode("overwrite").parquet(new_docs_path)
+    docs.write.mode("overwrite").parquet(os.path.join(new_index_dir, "docs"))
     # the builder short-circuits its chunk phase on a committed docs store
     return build_segmented_index(None, new_index_dir, cfg, n_segments=n_segments)

@@ -91,13 +91,6 @@ def test_impacts(frames):
     assert got[("spark", 0)][0] == pytest.approx(imp(1, 4))
 
 
-def test_salted_equals_unsalted(spark):
-    df = spark.createDataFrame(MICRO, ["doc_id", "text"])
-    a = build_index_from_docs(df, CFG, salted=True).dictionary
-    b = build_index_from_docs(df, CFG, salted=False).dictionary
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_oracle_agrees_on_micro(frames):
     oracle = PandasOracle(CFG)
     for did, text in MICRO:

@@ -144,3 +144,32 @@ def test_resume_rejects_conflicting_n_segments(spark, tmp_path):
     # None → adopts the recorded layout (no new segments to build)
     idx = build_segmented_index(pages, idx_dir, DEFAULT, n_segments=None)
     assert sorted(idx.committed_segments()) == [0, 1, 2]
+
+
+def test_compaction_keeps_n_docs(spark, tmp_path):
+    """Manifest n_docs counts chunk docs, zero-posting docs included, in the
+    build AND in compaction: a stopword-only chunk has no postings but stays
+    a doc, so Σ n_docs equals corpus_stats.n_docs before and after."""
+    from pyspark.sql import functions as F
+
+    from compact_index import compact_index
+
+    docs = read_documents(spark, SF_SMALL).filter(F.col("doc_id") < 29)
+    stop = docs.filter(F.col("doc_id") == 0).select(
+        F.lit(10_000).cast("long").alias("doc_id"),
+        F.lit("the and of to in it is was").alias("text"),
+        "lang", "source", "n_chars",
+    )
+    pages = web_pages_from_documents(docs.unionByName(stop))
+    idx_dir = str(tmp_path / "idx")
+    idx = build_segmented_index(pages, idx_dir, DEFAULT, n_segments=3)
+    n_docs = idx.corpus_stats(spark).head().n_docs
+    assert n_docs == 30
+
+    def total():
+        return sum(m["n_docs"] for m in SegmentedIndex(idx_dir).committed_segments().values())
+
+    assert total() == n_docs
+    compact_index(spark, idx_dir, target_segments=2)
+    assert sorted(SegmentedIndex(idx_dir).committed_segments()) == [0, 1]
+    assert total() == n_docs

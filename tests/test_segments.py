@@ -73,11 +73,11 @@ def test_block_invariants(spark, frames):
 
 
 def test_merge_equals_single_segment_build(spark, frames):
-    """1-segment pack vs 4-segment pack + merge → byte-identical blocks."""
+    """1-segment pack vs 4-segment pack + merge into 1 → byte-identical blocks."""
     single = pack_segment(frames.postings, DEFAULT)
     four = pack_segment(with_segment_id(frames.postings, 4), DEFAULT)
     assert four.select("segment_id").distinct().count() > 1
-    merged = merge_segments(four, DEFAULT, target_segment_id=0)
+    merged = merge_segments(four, 1, DEFAULT)
     assert _blocks_key_rows(merged) == _blocks_key_rows(single)
 
 
@@ -171,3 +171,45 @@ def test_pack_from_tf_byte_identical(spark):
     got = {key(r): (r.n_docs, r.max_impact, r.first_doc_id, r.last_doc_id,
                     bytes(r.docs_bin), bytes(r.impacts_bin)) for r in got_blocks}
     assert ref == got and len(ref) > 50
+
+
+def _blocks_digest(spark, idx_dir):
+    """sha256 over the committed block rows in (segment, term, block) order."""
+    import hashlib
+
+    rows = SegmentedIndex(idx_dir).blocks(spark).select(
+        "segment_id", "term_id", "block_id", "n_docs", "max_impact",
+        "first_doc_id", "last_doc_id", "docs_bin", "impacts_bin",
+    ).collect()
+    h = hashlib.sha256()
+    for r in sorted(map(tuple, rows)):
+        h.update(repr(tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)).encode())
+    return h.hexdigest()
+
+
+def test_fit_is_one_checkpoint(spark, tmp_path):
+    """corpus_stats + dictionary are one checkpoint: with the dictionary
+    gone, a rerun refits both, and a segment rebuilt against the refit is
+    byte-identical to the first build's."""
+    import shutil
+
+    pages = web_pages_from_documents(read_documents(spark, SF_SMALL))
+    idx_dir = str(tmp_path / "idx")
+    idx = build_segmented_index(pages, idx_dir, DEFAULT, n_segments=3)
+    digest = _blocks_digest(spark, idx_dir)
+    stats = idx.corpus_stats(spark).collect()
+    dic = {r.term: (r.term_id, r.df) for r in idx.dictionary(spark).collect()}
+    manifest_1 = idx.committed_segments()[1]
+
+    shutil.rmtree(os.path.join(idx_dir, "dictionary"))
+    shutil.rmtree(os.path.join(idx_dir, "blocks", "segment_id=1"))
+    os.remove(os.path.join(idx.manifest_dir, "1.json"))
+    build_segmented_index(pages, idx_dir, DEFAULT)
+
+    assert idx.corpus_stats(spark).collect() == stats
+    assert {r.term: (r.term_id, r.df) for r in idx.dictionary(spark).collect()} == dic
+    assert _blocks_digest(spark, idx_dir) == digest
+    rebuilt = idx.committed_segments()[1]
+    assert (rebuilt["n_docs"], rebuilt["n_postings"]) == (
+        manifest_1["n_docs"], manifest_1["n_postings"]
+    )

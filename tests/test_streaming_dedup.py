@@ -202,14 +202,48 @@ def test_stream_canonicalize_event_time_expiry_non_utc(spark, tmp_path):
         spark.conf.set(key, saved)
 
 
+def test_stream_canonicalize_event_time_late_group(spark, tmp_path):
+    """A group whose last-seen + horizon is already behind the watermark.
+    Beta (T0+10h) and alpha (T0) are two micro-batches of one run: alpha's
+    batch filters late rows by the previous batch's watermark, so alpha
+    passes, while eviction uses the new one (T0+9h). Spark rejects a timeout
+    behind the watermark (the query would fail), so alpha's is clamped to
+    just past it and alpha expires once the watermark moves on."""
+    h = lambda hrs: T0 + dt.timedelta(hours=hrs)  # noqa: E731
+    got = _run_event_batches(spark, tmp_path, [
+        [[(1, "beta page", h(10))], [(2, "alpha page", T0)]],  # T0+2h < T0+9h
+        [[(3, "gamma page", h(12))]],  # watermark → T0+11h: alpha expires
+        [[(4, "alpha page", h(11.5))]],  # re-crawl after expiry → NEW canonical
+    ])
+    assert got == {1: (1, True), 2: (2, True), 3: (3, True), 4: (4, True)}
+
+
 def _event_time_expiry(spark, tmp_path):
+    h = lambda hrs: T0 + dt.timedelta(hours=hrs)  # noqa: E731
+    got = _run_event_batches(spark, tmp_path, [
+        [[(1, "alpha page", T0)]],   # seeds alpha's state; timeout ts = T0+2h
+        [[(2, "beta page", h(10))]],  # watermark → T0+9h (past alpha's timeout)
+        [[(3, "gamma page", h(10))]],  # alpha has NO data → timeout fires, state removed
+        [[(4, "alpha page", h(9.5))]],  # re-crawl after expiry → NEW canonical
+    ])
+    assert got == {1: (1, True), 2: (2, True), 3: (3, True), 4: (4, True)}
+
+
+def _run_event_batches(spark, tmp_path, runs):
+    """One availableNow run of an event-time stream_canonicalize (2 h
+    horizon, 1 h watermark delay) per entry of ``runs``, all against one
+    checkpoint; each run's batches are files read one per micro-batch.
+    Returns doc_id → (canonical_id, is_first)."""
     from splade_spark.streaming import stream_canonicalize
 
     src = str(tmp_path / "esrc")
     out_dir = str(tmp_path / "eout")
-
-    def _run_once():
-        stream = spark.readStream.schema(SCHEMA).parquet(src)
+    mode = "overwrite"
+    for batches in runs:
+        for b in batches:
+            spark.createDataFrame(b, SCHEMA).coalesce(1).write.mode(mode).parquet(src)
+            mode = "append"
+        stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
         q = (
             stream_canonicalize(
                 stream, state_timeout_hours=2.0, timeout_mode="event",
@@ -223,24 +257,10 @@ def _event_time_expiry(spark, tmp_path):
             .start()
         )
         q.awaitTermination(120)
-
-    h = lambda hrs: T0 + dt.timedelta(hours=hrs)  # noqa: E731
-    batches = [
-        [(1, "alpha page", T0)],   # seeds alpha's state; timeout ts = T0+2h
-        [(2, "beta page", h(10))],  # watermark → T0+9h (past alpha's timeout)
-        [(3, "gamma page", h(10))],  # alpha has NO data → timeout fires, state removed
-        [(4, "alpha page", h(9.5))],  # re-crawl after expiry → NEW canonical
-    ]
-    mode = "overwrite"
-    for b in batches:
-        spark.createDataFrame(b, SCHEMA).coalesce(1).write.mode(mode).parquet(src)
-        mode = "append"
-        _run_once()
-    got = {
+    return {
         r["doc_id"]: (r["canonical_id"], r["is_first"])
         for r in spark.read.parquet(out_dir).collect()
     }
-    assert got == {1: (1, True), 2: (2, True), 3: (3, True), 4: (4, True)}
 
 
 def test_windowed_event_counts_watermark(spark, tmp_path):
