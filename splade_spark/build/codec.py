@@ -6,7 +6,8 @@ Replaces the Milvus-internal SPARSE_INVERTED_INDEX segment format
 * docIDs: signed int64, ascending within a block. Encoded as an unsigned
   LEB128 varint stream: first value zigzag-encoded, then gaps
   ``doc[i] - doc[i-1]`` (≥ 1, already non-negative) as plain varints.
-* impacts: little-endian float32 array, same order as docIDs.
+* impacts: ``[version, width]`` header, then a little-endian float array
+  (width 8 = float64, the default; width 4 = float32), same order as docIDs.
 * every blob starts with a version byte (``VERSION = 1``) so future formats
   can coexist and segment merge can read v1 forever (SURVEY.md §7 risk
   register: "binary format evolution").

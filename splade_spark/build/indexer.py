@@ -61,7 +61,7 @@ def _assemble(docs: DataFrame, cfg: EngineConfig) -> IndexFrames:
     tf = term_freqs(docs, cfg, surface=surface)
     if cfg.analyzer.stem:
         tf = tf.cache()  # the fold exchange runs once, not per consumer
-    dictionary = build_dictionary(tf, stats, cfg).cache()
+    dictionary = build_dictionary(tf, int(stats.head()["n_docs"]), cfg).cache()
     impacts = doc_impacts(tf, stats, cfg)
     postings = postings_long(impacts, dictionary)
     return IndexFrames(docs, stats, dictionary, postings)

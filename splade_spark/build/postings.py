@@ -14,7 +14,7 @@ term counts come from a Catalyst run-length encode over ``sort_array(
 tokens)`` (``term_count_pairs``), so the (doc, term, tf) relation is emitted
 by a narrow ``inline`` with no exchange — the 10^12-doc property the round-1
 count-map UDF had, now without Python. Stemming folds the term space via
-``stem_map_df``: Porter2 runs once per DISTINCT surface term (a tiny
+``stem_map_from_terms``: Porter2 runs once per DISTINCT surface term (a tiny
 relation under Zipf), a broadcast join maps the already-counted (doc, term)
 rows, and one combiner-friendly (doc, stemmed)-keyed aggregation merges
 surface variants — identical stemmed tf to per-occurrence stemming (the
@@ -23,7 +23,7 @@ multiset of stemmed terms per doc is the same either way).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from splade_spark.config import EngineConfig, DEFAULT
 
@@ -94,19 +94,6 @@ def stem_map_from_terms(terms: DataFrame) -> DataFrame:
     return terms.withColumn("term_stemmed", stem_udf()(F.col("term")))
 
 
-def stem_map_df(docs: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """docs(…, tokens) → (term, term_stemmed): Porter2 over DISTINCT terms.
-
-    Prefer deriving the map from an already-computed (and ideally cached)
-    surface-tf relation — ``stem_map_from_terms(surface.select("term")
-    .distinct())`` — which dedups 1-per-(doc,term) rows instead of raw
-    occurrences. Broadcast the result into ``term_freqs``.
-    """
-    return stem_map_from_terms(
-        docs.select(F.explode(tokens_col).alias("term")).distinct()
-    )
-
-
 def fold_stemmed(surface: DataFrame, stem_map: DataFrame) -> DataFrame:
     """surface tf ⋈ broadcast(stem map) → stemmed tf.
 
@@ -153,18 +140,10 @@ def doc_impacts(tf: DataFrame, corpus_stats: DataFrame, cfg: EngineConfig = DEFA
     return with_stats.withColumn("impact", tf_d * F.lit(k1 + 1.0) / norm).drop("avgdl")
 
 
-def postings_long(
-    impacts: DataFrame,
-    dictionary: DataFrame,
-    broadcast_dictionary: bool = True,
-) -> DataFrame:
-    """(doc_id, term, impact) ⋈ dictionary → (term_id, doc_id, impact, tf).
+def postings_long(impacts: DataFrame, dictionary: DataFrame) -> DataFrame:
+    """(doc_id, term, impact) ⋈ broadcast(dictionary) → (term_id, doc_id, impact, tf).
 
-    The dictionary is broadcast when small (vocab ≪ corpus — the common case);
-    set ``broadcast_dictionary=False`` to fall back to a shuffle join for
-    very large vocabularies.
+    Broadcast like ``segments.segment_rows``: vocab ≪ corpus.
     """
-    dic = dictionary.select("term", "term_id")
-    if broadcast_dictionary:
-        dic = F.broadcast(dic)
+    dic = F.broadcast(dictionary.select("term", "term_id"))
     return impacts.join(dic, "term").select("term_id", "doc_id", "impact", "tf")

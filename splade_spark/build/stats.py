@@ -12,7 +12,9 @@ Semantics of ``BM25SparseEmbedding(corpus)`` fit (instantiated at
     term_id: dense ints ordered by (df desc, term asc) — deterministic,
              replacing the reference dictionary's insertion order (§1.4)
 
-Everything here is plain Catalyst column math — whole-stage codegen, no UDFs.
+Stats and the distributed dictionary are plain Catalyst column math —
+whole-stage codegen, no UDFs; small vocabularies finish on the driver in
+numpy (``build_dictionary``).
 
 Skew note (SURVEY.md §4): ``groupBy(term)`` on a Zipfian corpus has head-term
 skew. Spark's partial aggregation combines the df count map-side, so each
@@ -23,8 +25,9 @@ explicit salt column would only add a hash exchange to the plan.)
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
 
 from splade_spark.config import EngineConfig, DEFAULT
 
@@ -64,76 +67,53 @@ def corpus_stats_from_surface(docs: DataFrame, surface: DataFrame) -> DataFrame:
     )
 
 
-def build_dictionary(
-    tf: DataFrame,
-    corpus_stats: DataFrame | int,
-    cfg: EngineConfig = DEFAULT,
-) -> DataFrame:
+# Vocabularies up to this size are finished on the driver (see
+# build_dictionary). 100k rows ≈ a few MB collected — well under any broadcast
+# threshold a query would pay for the same relation anyway.
+_DRIVER_VOCAB_THRESHOLD = 100_000
+
+
+def build_dictionary(tf: DataFrame, n_docs: int, cfg: EngineConfig = DEFAULT) -> DataFrame:
     """tf(doc_id, term, tf) → dictionary(term, term_id int, df long, idf double).
 
-    ``tf`` already has one row per (doc, term), so df = row count per term.
-    ``corpus_stats`` may be the stats frame or a plain ``n_docs`` int when the
-    caller already knows it (e.g. from a write-time Observation) — then no
-    stats job runs here at all.
+    ``tf`` already has one row per (doc, term), so df = row count per term;
+    ``n_docs`` is the corpus doc count (``corpus_stats.n_docs``).
 
-    Three physical strategies, identical output, picked by vocabulary size:
+    Two strategies with identical term ids and df (idf may differ in the last
+    ulps: JVM vs numpy ``log``, summation order of avg(raw_idf)), picked by
+    vocabulary size:
 
     * driver (≤ ``_DRIVER_VOCAB_THRESHOLD``): one bounded ``limit().collect()``
       of the df relation, idf + dense term ids computed in numpy, result
       shipped back as a local relation. The dictionary at this size is
       driver-resident anyway (LocalSearcher collects it wholesale; every
-      query path broadcasts it), and this path replaces four vocab-sized
-      jobs (checkpoint, probe, avg-idf broadcast, id window) with one —
-      the per-job planning floor is the serial component that caps N→4N
-      scaling efficiency (BENCH/BASELINE.md decomposition).
-    * window (≤ ``_SCALABLE_VOCAB_THRESHOLD``): distributed, single
-      row_number window; the df relation is localCheckpoint-ed (not cached)
-      so the probe and the dictionary job share one tf pass AND the storage
-      is reclaimed by GC — a plain .cache() here leaked one relation per
-      build / streaming refit cycle (ADVICE r2).
-    * range-partitioned (above): no single task ever holds the vocabulary.
+      query path broadcasts it), and one job here replaces the distributed
+      path's checkpoint + rank + size jobs — the per-job planning floor is
+      the serial component that caps N→4N scaling efficiency
+      (BENCH/BASELINE.md decomposition).
+    * distributed (above): ``_dictionary_distributed`` — no task ever holds
+      the whole vocabulary.
+
+    Neither path is the build's vocabulary ceiling: phase 1
+    (``segments.segment_rows``) broadcasts the whole dictionary and the
+    stem map to every task.
     """
     df = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-
     head = df.limit(_DRIVER_VOCAB_THRESHOLD + 1).collect()
     if len(head) <= _DRIVER_VOCAB_THRESHOLD:
-        if isinstance(corpus_stats, int):
-            n_docs = corpus_stats
-        else:
-            n_docs = int(corpus_stats.select("n_docs").head()["n_docs"])
         return _dictionary_local(head, n_docs, cfg, tf.sparkSession)
-
-    df = df.localCheckpoint(eager=True)
-    scalable = df.limit(_SCALABLE_VOCAB_THRESHOLD + 1).count() > _SCALABLE_VOCAB_THRESHOLD
-
-    if isinstance(corpus_stats, int):
-        spark = tf.sparkSession
-        corpus_stats = spark.createDataFrame(
-            [(int(corpus_stats),)], "n_docs: long"
-        )
-    with_n = df.crossJoin(F.broadcast(corpus_stats.select("n_docs")))
-    raw = with_n.withColumn(
-        "raw_idf",
-        F.log((F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))),
-    )
-    avg_idf = raw.agg(F.avg("raw_idf").alias("avg_raw_idf"))
-    floored = raw.crossJoin(F.broadcast(avg_idf)).withColumn(
-        "idf",
-        F.when(F.col("raw_idf") < 0, F.lit(cfg.epsilon) * F.col("avg_raw_idf")).otherwise(
-            F.col("raw_idf")
-        ),
-    )
-    return assign_term_ids(floored, scalable=scalable)
+    return _dictionary_distributed(df.localCheckpoint(eager=True), n_docs, cfg)
 
 
 def _dictionary_local(rows, n_docs: int, cfg: EngineConfig, spark) -> DataFrame:
     """Driver-side dictionary for small vocabularies — identical values.
 
-    Float math mirrors the Catalyst path op-for-op in float64 (long
+    Float math mirrors the distributed path op-for-op in float64 (long
     subtraction exact in doubles below 2^53; same epsilon multiply). The
-    only tolerated divergence is the summation ORDER inside avg(raw_idf) —
-    the distributed path's partial-sum order is itself partitioning-
-    dependent, and every consumer compares at 1e-6 rounding.
+    only tolerated divergences are the last ulp of ``log`` (numpy vs JVM)
+    and the summation ORDER inside avg(raw_idf) — numpy's pairwise sum here,
+    per-range-partition sums there — and every consumer compares at 1e-6
+    rounding.
     """
     import numpy as np
     from pyspark.sql.types import (
@@ -161,79 +141,52 @@ def _dictionary_local(rows, n_docs: int, cfg: EngineConfig, spark) -> DataFrame:
     return spark.createDataFrame(data, schema)
 
 
-# Vocabularies up to this size are finished on the driver (see
-# build_dictionary). 100k rows ≈ a few MB collected — well under any broadcast
-# threshold a query would pay for the same relation anyway.
-_DRIVER_VOCAB_THRESHOLD = 100_000
+def _dictionary_distributed(df: DataFrame, n_docs: int, cfg: EngineConfig) -> DataFrame:
+    """df(term, df) → dictionary, ids by range partition + prefix sum.
 
-# Vocabularies above this row count take the range-partitioned id path
-# automatically: a single-task row_number window over ~1M+ rows is the first
-# stage to die at 100× scale (VERDICT.md round-1 Wrong #2). Below it, the
-# one-task window is cheaper (no sampling pass, no extra jobs).
-_SCALABLE_VOCAB_THRESHOLD = 1_000_000
-
-
-def assign_term_ids(
-    floored: DataFrame,
-    scalable: bool | None = None,
-    threshold: int = _SCALABLE_VOCAB_THRESHOLD,
-) -> DataFrame:
-    """Dense deterministic term ids ordered by (df desc, term asc).
-
-    Two physical strategies, identical output (tests/test_bm25_stats.py):
-
-    * window (below ``threshold``): one row_number window — fine while the
-      vocabulary fits one task.
-    * scalable: range-partitioned sort + per-partition local ranks + a tiny
-      driver-side prefix-sum of partition counts (the zipWithIndex pattern,
-      expressed in DataFrame ops). No single task ever sees the whole
-      vocabulary — the 100M+-term path.
-
-    ``scalable=None`` (the default, used by ``build_dictionary``) probes the
-    vocabulary size with a limit-bounded count — at most ``threshold + 1``
-    rows ever move — and picks the path automatically.
+    The zipWithIndex pattern in DataFrame ops: range-partition by
+    (df desc, term asc), sort within each partition, and take the local rank
+    from ``monotonically_increasing_id`` (documented layout: partition id in
+    the upper 31 bits, row number within the partition in the lower 33 —
+    no second exchange, unlike a window keyed by partition id). That ranked
+    frame, with raw idf, is checkpointed ONCE: the range bounds are sampled
+    per evaluation, so partition sizes and local ranks taken from two
+    evaluations can come from two different cuts (duplicate ids). One small
+    collect then reads every partition's row count and Σ raw idf from the
+    checkpoint; ``term_id = offset[pid] + local rank`` and the ε-floor (the
+    average as a literal, as in ``_dictionary_local``) are a projection of
+    that same checkpoint.
     """
-    if scalable is None:
-        scalable = floored.limit(threshold + 1).count() > threshold
-    if not scalable:
-        w = Window.orderBy(F.col("df").desc(), F.col("term").asc())
-        return floored.select(
-            "term",
-            (F.row_number().over(w) - 1).cast("int").alias("term_id"),
-            "df",
-            "idf",
-        )
-
-    ranked = floored.repartitionByRange(
-        max(floored.sparkSession.sparkContext.defaultParallelism, 8),
-        F.col("df").desc(), F.col("term").asc(),
-    ).select(
-        "term", "df", "idf", F.spark_partition_id().alias("_pid")
-    )
-    # local rank within each sorted range partition
-    w_local = Window.partitionBy("_pid").orderBy(F.col("df").desc(), F.col("term").asc())
-    local = ranked.withColumn("_lrank", F.row_number().over(w_local) - 1)
-    # partition sizes → driver-side prefix sums (one tiny collect)
-    sizes = {
-        r["_pid"]: r["cnt"]
-        for r in local.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
-    spark = floored.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()], ["_pid", "_off"]
-        )
-    )
-    return (
-        local.join(off_df, "_pid")
+    spark = df.sparkSession
+    order = (F.col("df").desc(), F.col("term").asc())
+    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    pid = F.spark_partition_id()
+    ranked = (
+        df.repartitionByRange(n_parts, *order)
+        .sortWithinPartitions(*order)
         .select(
             "term",
-            (F.col("_off") + F.col("_lrank")).cast("int").alias("term_id"),
             "df",
-            "idf",
+            pid.alias("_pid"),
+            (F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)).alias("_lrank"),
+            F.log((float(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)).alias("raw_idf"),
         )
+        .localCheckpoint(eager=True)
+    )
+    parts = ranked.groupBy("_pid").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("raw_idf").alias("s")
+    ).collect()
+    sizes = [0] * n_parts
+    total_raw = 0.0
+    for r in sorted(parts, key=lambda r: r["_pid"]):
+        sizes[r["_pid"]] = r["n"]
+        total_raw += r["s"]
+    offsets = [0, *accumulate(sizes)][:-1]
+    floor = float(cfg.epsilon) * (total_raw / sum(sizes))
+    return ranked.select(
+        "term",
+        (F.element_at(F.array(*map(F.lit, offsets)), F.col("_pid") + 1) + F.col("_lrank"))
+        .cast("int").alias("term_id"),
+        "df",
+        F.when(F.col("raw_idf") < 0, F.lit(floor)).otherwise(F.col("raw_idf")).alias("idf"),
     )

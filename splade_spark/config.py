@@ -27,9 +27,6 @@ class AnalyzerConfig:
                  sandboxed DuckDB — fts extension cannot be downloaded).
     """
 
-    lowercase: bool = True
-    token_pattern: str = "[a-z0-9]+"
-    remove_stopwords: bool = True
     stem: bool = True
 
 

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from splade_spark.text.stopwords_en import STOPWORDS_EN
 
-# token pattern shared with the analyzer (config.AnalyzerConfig.token_pattern)
+# token pattern shared with the analyzer (text/analyzer.py _TOKEN_RE, text/catalyst.py)
 _WORD_RE = "[a-z0-9]+"
 # BPE-ish: word pieces OR single non-space punctuation marks
 _BPE_RE = "[a-z0-9]+|[^a-z0-9\\s]"

@@ -65,11 +65,3 @@ FROZEN_QUERIES: list[tuple[int, str]] = [
 
 def queries_df(spark):
     return spark.createDataFrame(FROZEN_QUERIES, ["query_id", "text"])
-
-
-def queries_sql_values() -> str:
-    """VALUES clause for embedding the query set in oracle SQL."""
-    rows = ", ".join(
-        "({0}, '{1}')".format(q, t.replace("'", "''")) for q, t in FROZEN_QUERIES
-    )
-    return "(VALUES " + rows + ") AS q(query_id, text)"

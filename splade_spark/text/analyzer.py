@@ -39,12 +39,8 @@ def analyze_text(text: str | None, cfg: AnalyzerConfig = AnalyzerConfig()) -> li
     """Analyze one string → token list. Pure, deterministic."""
     if not text:
         return []
-    s = unicodedata.normalize("NFC", text)
-    if cfg.lowercase:
-        s = s.lower()
-    toks = _TOKEN_RE.findall(s)
-    if cfg.remove_stopwords:
-        toks = [t for t in toks if t not in STOPWORDS_EN]
+    s = unicodedata.normalize("NFC", text).lower()
+    toks = [t for t in _TOKEN_RE.findall(s) if t not in STOPWORDS_EN]
     if cfg.stem:
         toks = [_stem_cached(t) for t in toks]
     return toks
@@ -56,14 +52,9 @@ def analyze_series(texts: pd.Series, cfg: AnalyzerConfig = AnalyzerConfig()) -> 
     Uses pandas vectorized string ops for normalize/lower and a cached stemmer
     so repeated tokens (Zipfian corpora) stem once per batch.
     """
-    filled = texts.fillna("")
-    lowered = filled.str.normalize("NFC")
-    if cfg.lowercase:
-        lowered = lowered.str.lower()
-    token_lists = lowered.str.findall(_TOKEN_RE)
-    if cfg.remove_stopwords:
-        sw = STOPWORDS_EN
-        token_lists = token_lists.map(lambda ts: [t for t in ts if t not in sw])
+    lowered = texts.fillna("").str.normalize("NFC").str.lower()
+    sw = STOPWORDS_EN
+    token_lists = lowered.str.findall(_TOKEN_RE).map(lambda ts: [t for t in ts if t not in sw])
     if cfg.stem:
         token_lists = token_lists.map(lambda ts: [_stem_cached(t) for t in ts])
     return token_lists

@@ -20,7 +20,7 @@ Division of labor:
   higher-order ``filter`` with an ``IN <stopword set>`` predicate (the
   optimizer compiles the 170-literal IN to an O(1) InSet hash probe).
 * Porter2 stemming — NOT per token: applied once per DISTINCT term via a
-  broadcast join against ``stem_map_df`` (build/postings.py), since tf of
+  broadcast join against ``stem_map_from_terms`` (build/postings.py), since tf of
   stemmed terms is the same multiset whether stemming happens before or
   after counting.
 
@@ -50,10 +50,3 @@ def nostem_tokens(text_col: Column) -> Column:
         F.lower(F.coalesce(text_col, F.lit(""))), F.lit("[a-z0-9]+"), 0
     )
     return F.filter(toks, lambda t: ~t.isin(*_SW))
-
-
-def analyzed_text(text_col: Column, norm_col: Column | None = None) -> Column:
-    """Convenience: coalesce the python-normalized override onto raw text."""
-    if norm_col is None:
-        return text_col
-    return F.coalesce(norm_col, text_col)

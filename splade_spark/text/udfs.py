@@ -6,8 +6,8 @@ Column math (tf/idf/impact) deliberately does NOT live here — it is plain
 Catalyst Column expressions so whole-stage codegen keeps it JVM-side
 (SURVEY.md §4). Tokenization itself is Catalyst too (text/catalyst.py);
 the UDFs below cover only what Catalyst cannot express: HTML extraction,
-recursive splitting, NFC normalization of the non-ASCII tail, and Porter2
-over the distinct-term relation.
+NFC normalization of the non-ASCII tail, and Porter2 over the distinct-term
+relation (recursive splitting runs inside the chunker, build/chunker.py).
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from pyspark.sql.types import ArrayType, StringType
 from splade_spark.config import AnalyzerConfig
 from splade_spark.text.analyzer import analyze_series, _stem_cached
 from splade_spark.text.extractor import extract_text_bytes
-from splade_spark.text.splitter import split_text
 
 
 def extract_text_udf():
@@ -32,16 +31,6 @@ def extract_text_udf():
         return html.map(extract_text_bytes)
 
     return _extract
-
-
-def split_chunks_udf(chunk_size: int = 1000, chunk_overlap: int = 100):
-    """string text → array<string> chunks; use with posexplode for (chunk_idx, chunk)."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _split(text: pd.Series) -> pd.Series:
-        return text.map(lambda t: split_text(t, chunk_size, chunk_overlap))
-
-    return _split
 
 
 def analyze_udf(cfg: AnalyzerConfig = AnalyzerConfig()):
@@ -85,7 +74,7 @@ def normalized_or_null_udf():
 
 def stem_udf():
     """string term → Porter2-stemmed term. Apply to the DISTINCT-term relation
-    (build/postings.py stem_map_df), never per token occurrence."""
+    (build/postings.py stem_map_from_terms), never per token occurrence."""
 
     @F.pandas_udf(StringType())
     def _stem(terms: pd.Series) -> pd.Series:

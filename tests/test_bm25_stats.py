@@ -103,49 +103,42 @@ def test_oracle_agrees_on_micro(frames):
         assert d[term][2] == oracle.term_id[term]
 
 
-def test_scalable_term_ids_equal_window(spark):
-    """zipWithIndex-style range-partitioned assignment == single-window
-    assignment (the 100M-vocab path produces identical dictionaries)."""
-    import duckdb
-    from splade_spark.build.postings import term_freqs
-    from splade_spark.build.stats import assign_term_ids
+def test_scalable_term_ids_equal_window(spark, monkeypatch):
+    """The distributed id path (range partitions ranked once) on a 20k-term
+    synthetic vocabulary: ids are exactly 0..V-1 and equal the driver path's,
+    df is equal and idf agrees up to the avg(raw_idf) summation order."""
+    import splade_spark.build.stats as stats_mod
+    from splade_spark.build.stats import build_dictionary
 
-    rows = duckdb.sql(
-        "select doc_id, text from read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    ).fetchall()
-    frames = build_index_from_docs(spark.createDataFrame(rows, ["doc_id", "text"]), CFG)
-    # rebuild the pre-id frame: df+idf without term_id
-    base = frames.dictionary.select("term", "df", "idf")
-    a = {r.term: r.term_id for r in assign_term_ids(base, scalable=False).collect()}
-    b = {r.term: r.term_id for r in assign_term_ids(base, scalable=True).collect()}
-    assert a == b and len(a) >= 25
-
-
-def test_term_id_path_auto_selection(spark):
-    """scalable=None probes vocab size against the threshold: a vocabulary
-    larger than the threshold takes the range-partitioned branch (no global
-    window in the plan), a small one keeps the single window."""
-    from splade_spark.build.stats import assign_term_ids
-
-    base = spark.range(0, 500).select(
-        F.concat(F.lit("t"), F.col("id")).alias("term"),
-        (F.col("id") % 7).alias("df"),
-        F.lit(1.0).alias("idf"),
+    n_terms, n_docs = 20_000, 50
+    # term i occurs in docs 0..(i % 37); many df ties, so the term tie-break
+    # decides most ids, and head terms (df > n_docs/2) take the epsilon floor
+    tf = (
+        spark.range(n_terms)
+        .select(
+            F.format_string("t%05d", (F.col("id") * 7919) % n_terms).alias("term"),
+            F.explode(F.sequence(F.lit(0).cast("long"), F.col("id") % 37)).alias("doc_id"),
+        )
+        .withColumn("tf", F.lit(1))
     )
-    big = assign_term_ids(base, scalable=None, threshold=100)
-    small = assign_term_ids(base, scalable=None, threshold=10_000)
-    # the scalable branch carries the range-partition join; the window branch
-    # a single unpartitioned Window — visible in the logical plan
-    assert "_lrank" in big._jdf.queryExecution().analyzed().toString()
-    assert "_lrank" not in small._jdf.queryExecution().analyzed().toString()
-    got_big = {r.term: r.term_id for r in big.collect()}
-    got_small = {r.term: r.term_id for r in small.collect()}
-    assert got_big == got_small and len(got_big) == 500
+    d_driver = {r.term: r for r in build_dictionary(tf, n_docs, CFG).collect()}
+    monkeypatch.setattr(stats_mod, "_DRIVER_VOCAB_THRESHOLD", 0)
+    d_dist = {r.term: r for r in build_dictionary(tf, n_docs, CFG).collect()}
+
+    assert len(d_dist) == n_terms
+    assert sorted(r.term_id for r in d_dist.values()) == list(range(n_terms))
+    assert {t: r.term_id for t, r in d_dist.items()} == {
+        t: r.term_id for t, r in d_driver.items()
+    }
+    assert {t: r.df for t, r in d_dist.items()} == {t: r.df for t, r in d_driver.items()}
+    assert max(r.df for r in d_dist.values()) > n_docs // 2  # epsilon floor taken
+    for t, r in d_driver.items():
+        assert d_dist[t].idf == pytest.approx(r.idf, rel=1e-12)
 
 
 def test_driver_dictionary_equals_distributed(spark, monkeypatch):
     """The small-vocab driver fast path (VERDICT r3: job-count reduction)
-    and the distributed window path produce identical dictionaries —
+    and the distributed path produce identical dictionaries —
     including the epsilon-floored idf for head terms (negative raw idf),
     which exercises the avg(raw_idf) divergence tolerance."""
     import splade_spark.build.stats as stats_mod
@@ -159,11 +152,9 @@ def test_driver_dictionary_equals_distributed(spark, monkeypatch):
         (0, "alpha", 1), (1, "beta", 1), (2, "gamma", 2), (3, "delta", 1),
     ]
     tf = spark.createDataFrame(tf_rows, ["doc_id", "term", "tf"])
-    stats = spark.createDataFrame([(4, 2.0)], ["n_docs", "avgdl"])
-
-    d_driver = {r.term: r for r in build_dictionary(tf, stats, cfg).collect()}
+    d_driver = {r.term: r for r in build_dictionary(tf, 4, cfg).collect()}
     monkeypatch.setattr(stats_mod, "_DRIVER_VOCAB_THRESHOLD", 0)
-    d_dist = {r.term: r for r in build_dictionary(tf, stats, cfg).collect()}
+    d_dist = {r.term: r for r in build_dictionary(tf, 4, cfg).collect()}
 
     assert set(d_driver) == set(d_dist) and len(d_driver) == 5
     for t in d_driver:
@@ -173,24 +164,6 @@ def test_driver_dictionary_equals_distributed(spark, monkeypatch):
     assert d_driver["head"].idf == pytest.approx(
         0.25 * (sum(math.log((4 - df_ + 0.5) / (df_ + 0.5)) for df_ in (3, 1, 1, 1, 1)) / 5)
     )
-
-
-def test_build_dictionary_accepts_int_n_docs(spark):
-    """corpus_stats may be a plain int (write-time observation) — the
-    segmented fit passes n_docs directly so no stats job runs in the fit."""
-    from splade_spark.build.stats import build_dictionary
-    from splade_spark.config import EngineConfig
-
-    cfg = EngineConfig().with_analyzer(stem=False)
-    tf = spark.createDataFrame(
-        [(0, "a", 1), (1, "b", 1), (1, "a", 2)], ["doc_id", "term", "tf"]
-    )
-    stats = spark.createDataFrame([(2, 2.0)], ["n_docs", "avgdl"])
-    d1 = {r.term: r for r in build_dictionary(tf, stats, cfg).collect()}
-    d2 = {r.term: r for r in build_dictionary(tf, 2, cfg).collect()}
-    assert {t: (r.term_id, r.df, r.idf) for t, r in d1.items()} == {
-        t: (r.term_id, r.df, r.idf) for t, r in d2.items()
-    }
 
 
 def test_corpus_stats_from_surface_bit_identical(spark):

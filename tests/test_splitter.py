@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
-from splade_spark.text.splitter import split_text
+import random
+
+from splade_spark.text.splitter import _merge_splits, _merge_splits_ref, split_text
 
 
 def test_empty_and_none():
@@ -69,6 +71,24 @@ def test_long_word_among_short():
 def test_deterministic():
     text = ("para one with several words\n\n" * 30) + ("line two\n" * 50)
     assert split_text(text) == split_text(text)
+
+
+def test_merge_splits_equals_reference():
+    """The window-arithmetic merge equals the per-part reference on seeded
+    random parts (non-empty, as ``_split_recursive`` passes them, with
+    whitespace so the strip/drop-empty rules fire), separators, chunk sizes
+    and overlaps up to the chunk size."""
+    rng = random.Random(20240607)
+    for _ in range(3000):
+        chunk_size = rng.randint(1, 40)
+        chunk_overlap = rng.randint(0, chunk_size)
+        sep = rng.choice(["\n\n", "\n", " ", ""])
+        parts = [
+            "".join(rng.choice("ab \n") for _ in range(rng.randint(1, chunk_size + 3)))
+            for _ in range(rng.randint(0, 30))
+        ]
+        args = (parts, sep, chunk_size, chunk_overlap)
+        assert _merge_splits(*args) == _merge_splits_ref(*args), args
 
 
 def test_fixture_docs_single_chunk(spark):
