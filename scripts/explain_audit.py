@@ -10,6 +10,7 @@ Checks:
   * tf/df aggregations are partial (two HashAggregate levels)
   * column math stages run inside WholeStageCodegen
   * top-k compiles to TakeOrderedAndProject (no global sort)
+  * decontamination broadcasts the eval-side fingerprints into its fp join
   * sampling plans: uniform sample = TakeOrderedAndProject, mixture sample =
     WindowGroupLimit, token-budget scan = broadcast offsets join with NO
     spark_partition_id anywhere in the plan
@@ -226,7 +227,31 @@ def main() -> None:
             )
         prepped.unpersist()
 
-        # 9) sampling plans (curation/sampling.py): the shapes that make the
+        # 9) decontamination: the eval-side fingerprints are the broadcast
+        # side of the fp join. Planned with size-based broadcasts off, so
+        # only the hint in decontamination_pairs can satisfy the check (a
+        # filtered eval scan is estimated at the full scan's size).
+        from splade_spark.curation.fingerprint import decontamination_pairs
+
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            decon_plan = _plan(
+                decontamination_pairs(docs, docs.filter(F.col("doc_id") < 20))
+            )
+        finally:
+            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        check(
+            "decontamination fp join",
+            decon_plan,
+            {
+                "fp join is a broadcast hash join":
+                    r"BroadcastHashJoin\nLeft keys \[1\]: \[fp#\d+L?\]\nRight keys \[1\]: \[fp#",
+                "eval fingerprints are the broadcast side":
+                    r"BroadcastExchange\nInput \[2\]: \[eval_id#\d+L?, fp#\d+L?\]",
+            },
+        )
+
+        # 10) sampling plans (curation/sampling.py): the shapes that make the
         # family deterministic AND scale-safe — exact-n via per-partition
         # heaps, per-key quotas via WindowGroupLimit, and a prefix scan whose
         # bucket is a pure function of the data (NO spark_partition_id: that

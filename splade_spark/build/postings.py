@@ -11,7 +11,7 @@ BM25 score — matching the reference's inner-product metric
 
 All column math → whole-stage codegen. tf itself is SHUFFLE-FREE: per-doc
 term counts come from a Catalyst run-length encode over ``sort_array(
-tokens)`` (``term_count_pairs``), so the (doc, term, tf) relation is emitted
+tokens)`` (``surface_term_counts``), so the (doc, term, tf) relation is emitted
 by a narrow ``inline`` with no exchange — the 10^12-doc property the round-1
 count-map UDF had, now without Python. Stemming folds the term space via
 ``stem_map_from_terms``: Porter2 runs once per DISTINCT surface term (a tiny
@@ -121,7 +121,7 @@ def term_freqs(
     ``cfg.analyzer.stem`` is set, the counted rows are folded through the
     distinct-term stem map (``fold_stemmed``). Pass a cached ``surface``
     relation to share one tokenize+count pass between the stem map and the
-    fold (build/indexer.py does).
+    fold (``stats.fit_corpus`` and ``SegmentedIndex.stored_fit`` do).
     """
     stem = cfg is not None and cfg.analyzer.stem
     if surface is None:
@@ -131,19 +131,21 @@ def term_freqs(
     return fold_stemmed(surface, stem_map_from_terms(surface.select("term").distinct()))
 
 
-def doc_impacts(tf: DataFrame, corpus_stats: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
-    """Attach BM25 impact weight — pure column expression (float64)."""
-    k1, b = float(cfg.k1), float(cfg.b)
-    with_stats = tf.crossJoin(F.broadcast(corpus_stats.select("avgdl")))
-    tf_d = F.col("tf").cast("double")
-    norm = tf_d + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen") / F.col("avgdl"))
-    return with_stats.withColumn("impact", tf_d * F.lit(k1 + 1.0) / norm).drop("avgdl")
+def term_rows(tf: DataFrame, dictionary: DataFrame) -> DataFrame:
+    """tf(doc_id, term, tf, doclen) ⋈ broadcast(dictionary) → (term_id, doc_id,
+    tf, doclen) — the one posting-row derivation of every build.
 
-
-def postings_long(impacts: DataFrame, dictionary: DataFrame) -> DataFrame:
-    """(doc_id, term, impact) ⋈ broadcast(dictionary) → (term_id, doc_id, impact, tf).
-
-    Broadcast like ``segments.segment_rows``: vocab ≪ corpus.
+    Broadcast: vocab ≪ corpus, so no exchange. Terms outside the dictionary
+    drop out (a streamed batch encodes against the frozen fit).
     """
     dic = F.broadcast(dictionary.select("term", "term_id"))
-    return impacts.join(dic, "term").select("term_id", "doc_id", "impact", "tf")
+    return tf.join(dic, "term").select("term_id", "doc_id", "tf", "doclen")
+
+
+def doc_impacts(rows: DataFrame, avgdl: float, cfg: EngineConfig = DEFAULT) -> DataFrame:
+    """Attach BM25 impact weight — pure column expression (float64), the
+    fit's ``avgdl`` a literal."""
+    k1, b = float(cfg.k1), float(cfg.b)
+    tf_d = F.col("tf").cast("double")
+    norm = tf_d + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("doclen") / F.lit(float(avgdl)))
+    return rows.withColumn("impact", tf_d * F.lit(k1 + 1.0) / norm)

@@ -12,9 +12,11 @@ Semantics of ``BM25SparseEmbedding(corpus)`` fit (instantiated at
     term_id: dense ints ordered by (df desc, term asc) — deterministic,
              replacing the reference dictionary's insertion order (§1.4)
 
-Stats and the distributed dictionary are plain Catalyst column math —
-whole-stage codegen, no UDFs; small vocabularies finish on the driver in
-numpy (``build_dictionary``).
+``fit_corpus`` is the one fit every build runs (``indexer._assemble`` and
+``segments.build_segmented_index``): one pass over a cached surface yields
+N, avgdl and the dictionary as driver-held values. The distributed
+dictionary is plain Catalyst column math — whole-stage codegen, no UDFs;
+small vocabularies finish on the driver in numpy (``build_dictionary``).
 
 Skew note (SURVEY.md §4): ``groupBy(term)`` on a Zipfian corpus has head-term
 skew. Spark's partial aggregation combines the df count map-side, so each
@@ -25,46 +27,67 @@ explicit salt column would only add a hash exchange to the plan.)
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from itertools import accumulate
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
+from splade_spark.build.postings import surface_term_counts, term_freqs
 from splade_spark.config import EngineConfig, DEFAULT
 
 
-def compute_corpus_stats(docs: DataFrame) -> DataFrame:
-    """docs(doc_id, …, doclen) → single row (n_docs long, avgdl double).
+@dataclass
+class CorpusFit:
+    """One BM25 fit held on the driver.
 
-    avgdl is an exact integer sum divided once — order-independent, so two
-    builds over the same corpus in different partition layouts produce
-    bit-identical impacts (the streaming re-fit equivalence gate relies on
-    this; a float running avg would drift in the last ulp with task order).
+    ``n_docs`` and ``avgdl`` are driver values; ``dictionary`` is (term,
+    term_id, df, idf); ``tf`` (doc_id, term, tf, doclen) is the analyzed tf
+    of the docs to encode, read over the cached ``surface`` — from
+    ``fit_corpus``, the tf the dictionary was counted from.
     """
-    return docs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        (F.sum("doclen").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    )
+
+    n_docs: int
+    avgdl: float
+    dictionary: DataFrame
+    tf: DataFrame
+    surface: DataFrame
+
+    def corpus_stats(self) -> DataFrame:
+        """The one-row corpus_stats table (n_docs long, avgdl double)."""
+        return self.dictionary.sparkSession.createDataFrame(
+            [(self.n_docs, self.avgdl)], "n_docs long, avgdl double"
+        )
+
+    def unpersist(self) -> None:
+        self.tf.unpersist()
+        self.surface.unpersist()
 
 
-def corpus_stats_from_surface(docs: DataFrame, surface: DataFrame) -> DataFrame:
-    """Stats without touching token arrays: (count(docs), Σ surface.tf).
+def fit_corpus(docs: DataFrame, n_docs: int, cfg: EngineConfig = DEFAULT) -> CorpusFit:
+    """docs(doc_id, tokens) with ``n_docs`` rows → the BM25 fit — the only one.
 
-    ``Σ tf`` over the surface term counts equals ``Σ doclen`` exactly (the
-    run-length encode partitions each token array), and empty docs contribute
-    0 to the sum while still counting in N — so the resulting avgdl is
-    bit-identical to ``compute_corpus_stats`` (same integer sum, same single
-    division), but computable from a cached surface relation with NO extra
-    tokenize pass (VERDICT r2 Wrong #1). ``docs`` may be the slim (text,
-    norm) frame; only its row count is read.
+    ONE tokenize pass: the surface tf is cached and the dictionary's df job
+    is the action that fills it (tokenize + run-length encode on its map
+    side). Σtf rides that fill as an observed aggregate, and
+    ``avgdl = Σtf / n_docs`` is one division of an exact integer sum: Σtf
+    over the surface equals Σ doclen (the run-length encode partitions each
+    token array; a zero-token doc adds 0 but counts in N), and the result is
+    independent of task order, so two builds over the same corpus in
+    different partition layouts get bit-identical impacts. When stemming,
+    the folded tf is cached as well, so its fold exchange runs once for the
+    dictionary and every later consumer. The caller owns both caches
+    (``CorpusFit.unpersist``).
     """
-    n = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    s = surface.agg(
-        F.coalesce(F.sum(F.col("tf").cast("long")), F.lit(0).cast("long")).alias("_sum_tf")
-    )
-    return n.crossJoin(s).select(
-        "n_docs",
-        (F.col("_sum_tf").cast("double") / F.col("n_docs")).alias("avgdl"),
-    )
+    obs = Observation()
+    surface = surface_term_counts(docs).observe(
+        obs, F.coalesce(F.sum(F.col("tf").cast("long")), F.lit(0)).alias("sum_tf")
+    ).cache()
+    tf = term_freqs(docs, cfg, surface=surface)
+    if cfg.analyzer.stem:
+        tf = tf.cache()
+    dictionary = build_dictionary(tf, n_docs, cfg)
+    avgdl = int(obs.get["sum_tf"]) / n_docs if n_docs else 0.0
+    return CorpusFit(n_docs, avgdl, dictionary, tf, surface)
 
 
 # Vocabularies up to this size are finished on the driver (see
@@ -77,7 +100,8 @@ def build_dictionary(tf: DataFrame, n_docs: int, cfg: EngineConfig = DEFAULT) ->
     """tf(doc_id, term, tf) → dictionary(term, term_id int, df long, idf double).
 
     ``tf`` already has one row per (doc, term), so df = row count per term;
-    ``n_docs`` is the corpus doc count (``corpus_stats.n_docs``).
+    ``n_docs`` is the corpus doc count (``corpus_stats.n_docs``); callers
+    reach this through ``fit_corpus``.
 
     Two strategies with identical term ids and df (idf may differ in the last
     ulps: JVM vs numpy ``log``, summation order of avg(raw_idf)), picked by
@@ -94,9 +118,8 @@ def build_dictionary(tf: DataFrame, n_docs: int, cfg: EngineConfig = DEFAULT) ->
     * distributed (above): ``_dictionary_distributed`` — no task ever holds
       the whole vocabulary.
 
-    Neither path is the build's vocabulary ceiling: phase 1
-    (``segments.segment_rows``) broadcasts the whole dictionary and the
-    stem map to every task.
+    Neither path is the build's vocabulary ceiling: ``postings.term_rows``
+    broadcasts the whole dictionary to every task.
     """
     df = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
     head = df.limit(_DRIVER_VOCAB_THRESHOLD + 1).collect()
@@ -120,12 +143,13 @@ def _dictionary_local(rows, n_docs: int, cfg: EngineConfig, spark) -> DataFrame:
         DoubleType, IntegerType, LongType, StringType, StructField, StructType,
     )
 
-    terms = [r["term"] for r in rows]
+    # sorted first: the mean then sums in one order whatever order the df
+    # rows were collected in, so idf is the same from run to run
+    rows = sorted(rows, key=lambda r: (-r["df"], r["term"]))
     dfv = np.array([r["df"] for r in rows], dtype=np.float64)
     raw = np.log((float(n_docs) - dfv + 0.5) / (dfv + 0.5))
     avg_raw = float(raw.mean()) if len(raw) else 0.0
     idf = np.where(raw < 0.0, float(cfg.epsilon) * avg_raw, raw)
-    order = sorted(range(len(terms)), key=lambda i: (-int(rows[i]["df"]), terms[i]))
     schema = StructType(
         [
             StructField("term", StringType()),
@@ -134,10 +158,7 @@ def _dictionary_local(rows, n_docs: int, cfg: EngineConfig, spark) -> DataFrame:
             StructField("idf", DoubleType()),
         ]
     )
-    data = [
-        (terms[i], tid, int(rows[i]["df"]), float(idf[i]))
-        for tid, i in enumerate(order)
-    ]
+    data = [(r["term"], tid, int(r["df"]), float(idf[tid])) for tid, r in enumerate(rows)]
     return spark.createDataFrame(data, schema)
 
 

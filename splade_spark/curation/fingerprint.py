@@ -159,8 +159,10 @@ def decontamination_pairs(
         )
         fps_c = fps_c.join(ok, "fp")
     sizes_e = fps_e.groupBy("eval_id").agg(F.count(F.lit(1)).alias("n_fp"))
+    # The eval side is small by definition but a filtered scan is estimated
+    # at the full scan's size, so only the hint makes it the broadcast side.
     pairs = (
-        fps_c.join(fps_e, "fp")
+        fps_c.join(F.broadcast(fps_e), "fp")
         .groupBy("doc_id", "eval_id")
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= min_shared)

@@ -3,15 +3,33 @@
 Semantics of ``BM25SparseEmbedding.embed_query`` (call site
 /root/reference/retrievers.py:121): analyze the query text; each occurrence of
 a term contributes its idf (repeated terms sum ⇒ weight = qtf · idf); OOV
-terms drop out (inner join against the dictionary).
+terms drop out (inner join against the dictionary). ``encode_queries`` does
+this for a query table in Spark, ``encode_text`` for one query string on the
+driver (``LocalSearcher``, ``InteractiveSession``).
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, functions as F
 
-from splade_spark.config import EngineConfig, DEFAULT
+from splade_spark.config import AnalyzerConfig, EngineConfig, DEFAULT
+from splade_spark.text.analyzer import analyze_text
 from splade_spark.text.udfs import analyze_udf
+
+
+def encode_text(
+    text: str, vocab: dict[str, tuple[int, float]], analyzer: AnalyzerConfig
+) -> dict[int, float]:
+    """One query on the driver: term_id → qtf·idf per in-vocab term, with
+    ``vocab`` mapping term → (term_id, idf)."""
+    weights: dict[int, float] = {}
+    for term, qtf in Counter(analyze_text(text, analyzer)).items():
+        hit = vocab.get(term)
+        if hit is not None:
+            weights[hit[0]] = qtf * hit[1]
+    return weights
 
 
 def encode_queries(

@@ -22,15 +22,13 @@ stay on the distributed naive/WAND paths.
 
 from __future__ import annotations
 
-from collections import Counter
-
 import numpy as np
 
 from splade_spark.build.codec import decode_blocks
 from splade_spark.build.segments import group_bounds
 from splade_spark.config import EngineConfig, DEFAULT
+from splade_spark.query.encode import encode_text
 from splade_spark.query.kernel import TermList, score_term_lists
-from splade_spark.text.analyzer import analyze_text
 
 
 class LocalSearcher:
@@ -38,11 +36,7 @@ class LocalSearcher:
 
     def __init__(self, dictionary_rows, block_rows, cfg: EngineConfig = DEFAULT):
         self.cfg = cfg
-        self.term_id = {}
-        self.idf = {}
-        for r in dictionary_rows:
-            self.term_id[r["term"]] = r["term_id"]
-            self.idf[r["term_id"]] = r["idf"]
+        self.vocab = {r["term"]: (r["term_id"], r["idf"]) for r in dictionary_rows}
         # term_id -> TermList over all segments, doc-sorted once here
         rows = list(block_rows)
         n = np.array([r["n_docs"] for r in rows], dtype=np.int64)
@@ -83,12 +77,7 @@ class LocalSearcher:
 
     def encode(self, text: str) -> dict[int, float]:
         """B9: analyze → qtf·idf per known term (OOV drops out)."""
-        out: dict[int, float] = {}
-        for term, qtf in Counter(analyze_text(text, self.cfg.analyzer)).items():
-            tid = self.term_id.get(term)
-            if tid is not None:
-                out[tid] = qtf * self.idf[tid]
-        return out
+        return encode_text(text, self.vocab, self.cfg.analyzer)
 
     def search(self, text: str, k: int | None = None) -> list[tuple[int, float]]:
         """→ [(doc_id, score)] top-k, ties (round(score,6) desc, doc_id asc)."""

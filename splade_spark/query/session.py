@@ -35,13 +35,11 @@ reference's `collection.load()` + per-query search REPL trade
 
 from __future__ import annotations
 
-from collections import Counter
-
 from pyspark.sql import DataFrame, functions as F
 
 from splade_spark.config import EngineConfig, DEFAULT
+from splade_spark.query.encode import encode_text
 from splade_spark.query.topk import SCORE_DECIMALS
-from splade_spark.text.analyzer import analyze_text
 
 
 def prepare_postings(postings: DataFrame, n_partitions: int = 32) -> DataFrame:
@@ -125,12 +123,7 @@ class InteractiveSession:
 
     def encode(self, text: str) -> dict[int, float]:
         """Driver-side query encode: term_id → qtf·idf (OOV drops out)."""
-        weights: dict[int, float] = {}
-        for term, qtf in Counter(analyze_text(text, self.cfg.analyzer)).items():
-            hit = self.vocab.get(term)
-            if hit is not None:
-                weights[hit[0]] = weights.get(hit[0], 0.0) + qtf * hit[1]
-        return weights
+        return encode_text(text, self.vocab, self.cfg.analyzer)
 
     def plan(self, text: str, k: int | None = None) -> DataFrame | None:
         """Lazy top-k DataFrame for one query (None if fully OOV).

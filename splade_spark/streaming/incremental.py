@@ -8,10 +8,12 @@ merge stage (B8, build/segments.py merge_segments) compacts.
 
 Design decisions:
 
-* ``foreachBatch`` drives the SAME code path as build_segmented_index:
-  ``segment_rows`` → ``pack_segment_from_tf`` → ``write_segments`` — one
-  implementation of the physical format and of the segment commit, two
-  drivers (batch + streaming). Segment ids for streamed segments are
+* ``foreachBatch`` drives the SAME code path as a resumed
+  build_segmented_index: ``SegmentedIndex.stored_fit`` (the batch's tf over
+  one cached surface, against the stored fit) → ``postings.term_rows`` →
+  ``pack_segment_from_tf`` → ``write_segments`` — one implementation of the
+  posting rows, the physical format and the segment commit, two drivers
+  (batch + streaming). Segment ids for streamed segments are
   ``base + batch_id``; manifests carry the same fields (lineage records the
   stream batch instead of ``segment_of``), so merge/query treat streamed
   segments exactly like batch-built ones.
@@ -66,15 +68,14 @@ def stream_build_segments(
     from pyspark.sql import Observation
 
     from splade_spark.build.chunker import chunk_pages, docs_from_chunks
-    from splade_spark.build.postings import surface_term_counts
+    from splade_spark.build.postings import term_rows
     from splade_spark.build.segments import (
-        SegmentedIndex, pack_segment_from_tf, segment_rows, write_segments,
+        SegmentedIndex, pack_segment_from_tf, write_segments,
     )
 
     index = SegmentedIndex(index_dir)
 
     def _process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         seg_id = base_segment_id + int(batch_id)
         docs = docs_from_chunks(chunk_pages(batch_df, cfg, use_html=use_html), cfg)
         # Persist this batch's chunk docs so a later refit_compact can re-fit
@@ -93,18 +94,20 @@ def stream_build_segments(
         ).option("partitionOverwriteMode", "dynamic").partitionBy("batch").parquet(
             os.path.join(index_dir, "docs_stream")
         )
-        rows = segment_rows(surface_term_counts(docs), index.dictionary(spark), cfg)
-        write_segments(
-            index,
-            pack_segment_from_tf(
-                rows.withColumn("segment_id", F.lit(seg_id).cast("int")),
-                float(index.corpus_stats(spark).head().avgdl),
+        fit = index.stored_fit(docs, cfg)
+        try:
+            rows = term_rows(fit.tf, fit.dictionary)
+            write_segments(
+                index,
+                pack_segment_from_tf(
+                    rows.withColumn("segment_id", F.lit(seg_id).cast("int")), fit.avgdl, cfg
+                ),
+                {seg_id: int(obs.get["n_docs"])},
+                {"stream_batch_id": int(batch_id), "mode": "streaming-foreachBatch"},
                 cfg,
-            ),
-            {seg_id: int(obs.get["n_docs"])},
-            {"stream_batch_id": int(batch_id), "mode": "streaming-foreachBatch"},
-            cfg,
-        )
+            )
+        finally:
+            fit.unpersist()
 
     writer = pages_stream.writeStream.foreachBatch(_process_batch).outputMode("append")
     if checkpoint_dir:

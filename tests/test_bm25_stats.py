@@ -166,15 +166,15 @@ def test_driver_dictionary_equals_distributed(spark, monkeypatch):
     )
 
 
-def test_corpus_stats_from_surface_bit_identical(spark):
-    """corpus_stats_from_surface (count(docs) + Σ surface.tf, the fit-pass
-    formulation) must be BIT-identical to the reference compute_corpus_stats
-    (Σ doclen) — including zero-token docs, which contribute 0 to the sum
-    but still count in N (surface_term_counts filters them out, so only the
-    doc-count side may see them)."""
+def test_fit_corpus_avgdl_exact(spark):
+    """fit_corpus's avgdl is the exact integer Σtf of its one surface pass
+    divided once by N — including zero-token docs, which add 0 to the sum
+    but still count in N (surface_term_counts filters them out, so only
+    ``n_docs`` sees them)."""
     from splade_spark.build.chunker import attach_tokens
-    from splade_spark.build.postings import surface_term_counts
-    from splade_spark.build.stats import compute_corpus_stats, corpus_stats_from_surface
+    from splade_spark.build.stats import fit_corpus
+    from splade_spark.config import NOSTEM
+    from splade_spark.text.analyzer import analyze_text
 
     rows = [
         (0, "spark joins tables fast"),
@@ -185,9 +185,11 @@ def test_corpus_stats_from_surface_bit_identical(spark):
     docs = attach_tokens(
         spark.createDataFrame(rows, ["doc_id", "text"]), allow_missing_norm=True
     )
-    ref = compute_corpus_stats(docs).collect()[0]
-    got = corpus_stats_from_surface(
-        docs.select("doc_id", "text"), surface_term_counts(docs)
-    ).collect()[0]
-    assert got["n_docs"] == ref["n_docs"] == 4
-    assert got["avgdl"] == ref["avgdl"]  # exact float equality, not approx
+    fit = fit_corpus(docs, 4, NOSTEM)
+    try:
+        assert fit.n_docs == 4
+        # exact float equality, not approx
+        assert fit.avgdl == sum(len(analyze_text(t, NOSTEM.analyzer)) for _, t in rows) / 4
+        assert [tuple(r) for r in fit.corpus_stats().collect()] == [(4, fit.avgdl)]
+    finally:
+        fit.unpersist()

@@ -133,10 +133,7 @@ def test_pack_from_tf_byte_identical(spark):
     import duckdb
 
     from splade_spark.build.indexer import build_index_from_docs
-    from splade_spark.build.postings import (
-        doc_impacts, postings_long, stem_map_from_terms, surface_term_counts,
-        term_freqs,
-    )
+    from splade_spark.build.postings import stem_map_from_terms, surface_term_counts
     from splade_spark.build.segments import pack_segment, pack_segment_from_tf
     from splade_spark.config import DEFAULT
 
@@ -147,7 +144,7 @@ def test_pack_from_tf_byte_identical(spark):
     frames = build_index_from_docs(spark.createDataFrame(rows, ["doc_id", "text"]), DEFAULT)
     avgdl = float(frames.corpus_stats.head().avgdl)
 
-    # reference route: folded tf → impacts → postings_long → pack
+    # reference route: folded tf → term_rows → impacts → pack
     ref_blocks = pack_segment(
         with_segment_id(frames.postings, 3), DEFAULT
     ).collect()
@@ -213,3 +210,15 @@ def test_fit_is_one_checkpoint(spark, tmp_path):
     assert (rebuilt["n_docs"], rebuilt["n_postings"]) == (
         manifest_1["n_docs"], manifest_1["n_postings"]
     )
+
+
+def test_frames_and_segmented_fit_agree(spark, frames, tmp_path):
+    """build_index_frames and build_segmented_index run the one fit: their
+    corpus_stats and (term, term_id, df, idf) dictionary rows are identical."""
+    pages = web_pages_from_documents(read_documents(spark, SF_SMALL))
+    idx = build_segmented_index(pages, str(tmp_path / "idx"), DEFAULT, n_segments=2)
+    assert idx.corpus_stats(spark).collect() == frames.corpus_stats.collect()
+    cols = ("term", "term_id", "df", "idf")
+    got = sorted(map(tuple, idx.dictionary(spark).select(*cols).collect()))
+    assert got == sorted(map(tuple, frames.dictionary.select(*cols).collect()))
+    assert len(got) > 20
