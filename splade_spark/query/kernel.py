@@ -28,10 +28,30 @@ never pruned. Pruning needs θ > ε: docs with no positive term have true
 score ≤ 0 and were never accumulated. Otherwise (e.g. fewer than k
 positive-term candidates, or an all-negative query) the kernel falls back to
 exact full accumulation over all terms: always correct, never fast-but-wrong.
+
+**Accumulator.** With a ``DocSpace`` (``LocalSearcher``), every list holds
+dense docnos in ``[0, n)`` whose order is the doc_id order, so the frozen
+``doc_id asc`` tie-break is the ``docno asc`` tie-break. Partial sums go
+into the space's reused float64 ``acc`` by ``np.add.at``, which adds in
+index order: per doc, the same left-to-right part order as the sort path's
+``bincount``, so the sums are bit-identical (``np.add.reduceat`` sums
+pairwise and would not be). The touched docnos are found
+without a sort (``owner[docs] = arange(m)``, keep the positions that still
+own their slot), read, then zeroed in a ``finally``, so a query costs
+O(postings touched), never O(n). A lock serialises the buffers between
+threads. Without a space (the WAND paths: raw xxh64 doc ids, lazily decoded
+blocks) the accumulator is ``np.unique`` + ``bincount``.
+
+**Cut.** Above ``_CUT_MIN`` candidates the final order is a partial cut:
+the k-th best rounded score by ``np.partition``, every candidate at or above
+it (all ties kept), and a ``lexsort`` of those only. Below it, one
+``lexsort`` of every candidate is cheaper (BENCH/BASELINE.md, "Linear-time
+top-k kernel").
 """
 
 from __future__ import annotations
 
+import threading
 from typing import NamedTuple
 
 import numpy as np
@@ -39,6 +59,7 @@ import numpy as np
 from splade_spark.query.topk import SCORE_DECIMALS
 
 _EPS = 1e-6
+_CUT_MIN = 128  # candidates; below it one full lexsort beats the partial cut
 
 
 class TermList(NamedTuple):
@@ -56,17 +77,51 @@ class TermList(NamedTuple):
         return self.docs, self.impacts
 
 
-def _sum_by_doc(parts: list[tuple[np.ndarray, np.ndarray]]):
+class DocSpace:
+    """Reused accumulator scratch over dense docnos ``[0, n)``, one per searcher."""
+
+    def __init__(self, n: int):
+        self.acc = np.zeros(n, dtype=np.float64)
+        self.owner = np.zeros(n, dtype=np.int64)
+        self.lock = threading.Lock()
+
+
+def _sum_by_doc(parts: list[tuple[np.ndarray, np.ndarray]], space: DocSpace | None):
     """Σ of (doc, score) parts per doc, summed left to right in part order."""
     docs = np.concatenate([p[0] for p in parts])
-    uniq, inv = np.unique(docs, return_inverse=True)
-    scores = np.bincount(
-        inv, weights=np.concatenate([p[1] for p in parts]), minlength=uniq.size
-    )
-    return uniq, scores
+    if space is None:
+        uniq, inv = np.unique(docs, return_inverse=True)
+        scores = np.bincount(
+            inv, weights=np.concatenate([p[1] for p in parts]), minlength=uniq.size
+        )
+        return uniq, scores
+    pos = np.arange(docs.size)
+    with space.lock:
+        acc, owner = space.acc, space.owner
+        owner[docs] = pos
+        touched = docs[owner[docs] == pos]  # one position per distinct doc
+        try:
+            # unbuffered and in index order, so bit-identical to bincount
+            np.add.at(acc, docs, np.concatenate([p[1] for p in parts]))
+            return touched, acc[touched]
+        finally:
+            acc[touched] = 0.0
 
 
-def score_term_lists(lists, weights: dict, k: int) -> tuple[np.ndarray, np.ndarray]:
+def _cut(docs: np.ndarray, scores: np.ndarray, k: int):
+    """Top k by ``(round(score, 6) desc, doc asc)``."""
+    key = -np.round(scores, SCORE_DECIMALS)
+    if docs.size < _CUT_MIN or not 0 < k < docs.size:
+        order = np.lexsort((docs, key))[:k]
+    else:
+        keep = np.flatnonzero(key <= np.partition(key, k - 1)[k - 1])
+        order = keep[np.lexsort((docs[keep], key[keep]))[:k]]
+    return docs[order], scores[order]
+
+
+def score_term_lists(
+    lists, weights: dict, k: int, space: DocSpace | None = None
+) -> tuple[np.ndarray, np.ndarray]:
     """Exact top-k of ``Σ_t weights[t]·impact(t, d)`` → (doc_ids, scores).
 
     ``lists`` maps term_id to a term list: a ``TermList`` or any object with
@@ -74,6 +129,9 @@ def score_term_lists(lists, weights: dict, k: int) -> tuple[np.ndarray, np.ndarr
     (docs ascending, impacts) that cover at least the ``within`` docs.
     Terms of ``weights`` absent from ``lists`` contribute nothing. The result
     is ordered by the frozen tie-break ``(round(score, 6) desc, doc_id asc)``.
+    With ``space``, docs are docnos below ``space.acc.size`` and are returned
+    as docnos; ``within`` is then unsorted, so the lists must be ``TermList``s
+    (which ignore it).
     """
     terms = sorted(t for t in weights if t in lists)
     neg = [t for t in terms if weights[t] <= 0]
@@ -86,7 +144,9 @@ def score_term_lists(lists, weights: dict, k: int) -> tuple[np.ndarray, np.ndarr
             parts.append((d, weights[t] * w))
         return parts
 
-    docs, scores = _sum_by_doc([empty] + scored(t for t in terms if weights[t] > 0))
+    docs, scores = _sum_by_doc(
+        [empty] + scored(t for t in terms if weights[t] > 0), space
+    )
     if neg:
         theta = -np.inf
         if docs.size >= k:
@@ -104,6 +164,5 @@ def score_term_lists(lists, weights: dict, k: int) -> tuple[np.ndarray, np.ndarr
                 hit = d[idx] == docs
                 scores[hit] += weights[t] * w[idx[hit]]
         else:
-            docs, scores = _sum_by_doc([(docs, scores)] + scored(neg))
-    order = np.lexsort((docs, -np.round(scores, SCORE_DECIMALS)))[:k]
-    return docs[order], scores[order]
+            docs, scores = _sum_by_doc([(docs, scores)] + scored(neg), space)
+    return _cut(docs, scores, k)

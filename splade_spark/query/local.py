@@ -11,8 +11,11 @@ driver memory, and each query is then scored in pure numpy by the same
 kernel the WAND paths run (``query/kernel.py score_term_lists``) — identical
 formulas, identical tie-break, rank-identical to the cluster paths
 (tests/test_local_search.py), at sub-10 ms per query. Each term's blocks
-from every segment are decoded once at load into one doc-sorted list
-(segments are hash partitions of the doc space, so their lists interleave).
+from every segment are decoded once at load into one list over dense
+``docno``s (segments are hash partitions of the doc space, so their lists
+interleave). ``doc_ids`` maps docno → doc_id and is ascending, so docno
+order is doc_id order and the kernel's tie-break holds unchanged; the
+searcher's ``DocSpace`` is the kernel's reused per-query accumulator.
 
 Scale position: this is explicitly the SMALL-index / interactive tool — the
 collected index must fit the driver (fine for per-tenant or per-shard
@@ -28,7 +31,7 @@ from splade_spark.build.codec import decode_blocks
 from splade_spark.build.segments import group_bounds
 from splade_spark.config import EngineConfig, DEFAULT
 from splade_spark.query.encode import encode_text
-from splade_spark.query.kernel import TermList, score_term_lists
+from splade_spark.query.kernel import DocSpace, TermList, score_term_lists
 
 
 class LocalSearcher:
@@ -37,12 +40,14 @@ class LocalSearcher:
     def __init__(self, dictionary_rows, block_rows, cfg: EngineConfig = DEFAULT):
         self.cfg = cfg
         self.vocab = {r["term"]: (r["term_id"], r["idf"]) for r in dictionary_rows}
-        # term_id -> TermList over all segments, doc-sorted once here
+        # term_id -> TermList of docnos over all segments, docno-sorted once here
         rows = list(block_rows)
         n = np.array([r["n_docs"] for r in rows], dtype=np.int64)
-        docs, impacts = decode_blocks(
+        doc_ids, impacts = decode_blocks(
             [r["docs_bin"] for r in rows], [r["impacts_bin"] for r in rows], n
         )
+        self.doc_ids, docs = np.unique(doc_ids, return_inverse=True)
+        self.space = DocSpace(self.doc_ids.size)
         terms = np.repeat(np.array([r["term_id"] for r in rows], dtype=np.int64), n)
         order = np.lexsort((docs, terms))
         docs, impacts, terms = docs[order], impacts[order], terms[order]
@@ -82,8 +87,8 @@ class LocalSearcher:
     def search(self, text: str, k: int | None = None) -> list[tuple[int, float]]:
         """→ [(doc_id, score)] top-k, ties (round(score,6) desc, doc_id asc)."""
         k = k if k is not None else self.cfg.top_k
-        docs, scores = score_term_lists(self.postings, self.encode(text), k)
-        return [(int(d), float(sc)) for d, sc in zip(docs, scores)]
+        docs, scores = score_term_lists(self.postings, self.encode(text), k, self.space)
+        return list(zip(self.doc_ids[docs].tolist(), scores.tolist()))
 
     def search_batch(self, queries: list[tuple[int, str]], k: int | None = None):
         """[(query_id, text)] → {query_id: [(doc_id, score)]}."""
