@@ -16,12 +16,11 @@ Phases
   query_wand_topk5  same query set over compressed blocks via block-max WAND
   query_p95         per-query p95 latency over 10 single-query naive jobs
 
-`topk_wand_auto` (the supported batch entry point) has its own headline row;
-standalone batch WAND is not run here, because its parallelism is capped at
-the segment count and this single-segment index is its degenerate geometry
-(the geometry where it wins is recorded in BENCH/BASELINE.md, "Why both WAND
-shapes stay"). One-time costs (session_prepare_sec, cold_build_sec) live in
-meta, never in the headline sum.
+`query_wand_auto_topk5` times the same ``topk_wand`` given the index's
+segment count (as a caller holding the manifests passes it); on this
+single-segment index both rows split the queries into buckets so every core
+scores. One-time costs (session_prepare_sec, cold_build_sec) live in meta,
+never in the headline sum.
 
 Extra meta (docs/sec, postings/sec, qps, scaling inputs) goes to stderr; the
 stdout line stays the single driver-parsed JSON object.
@@ -167,27 +166,20 @@ def run_bench(cpus: int, sf_dir: str, replicate: int, workdir: str, expand: int 
 
         # -- query batch (WAND over blocks) --------------------------------
         if blocks is not None:
-            try:
-                from splade_spark.query.wand import topk_wand, topk_wand_auto
+            from splade_spark.query.wand import topk_wand
 
-                topk_wand(queries, blocks, frames.dictionary, k=5, cfg=DEFAULT).count()
-                t0 = time.monotonic()
-                topk_wand(queries, blocks, frames.dictionary, k=5, cfg=DEFAULT).count()
-                timings["query_wand_topk5"] = time.monotonic() - t0
-                meta["qps_wand"] = 50 / timings["query_wand_topk5"]
+            topk_wand(queries, blocks, frames.dictionary, k=5, cfg=DEFAULT).count()
+            t0 = time.monotonic()
+            topk_wand(queries, blocks, frames.dictionary, k=5, cfg=DEFAULT).count()
+            timings["query_wand_topk5"] = time.monotonic() - t0
+            meta["qps_wand"] = 50 / timings["query_wand_topk5"]
 
-                # auto path selection: the supported batch entry point.
-                # Batch geometry is passed like a real caller (index
-                # manifests carry n_segments; the query set size is known):
-                # the auto path's job is the CHOICE, not rediscovering
-                # metadata
-                auto_kw = dict(n_queries=50, n_segments=1)
-                topk_wand_auto(queries, blocks, frames.dictionary, k=5, cfg=DEFAULT, **auto_kw).count()
-                t0 = time.monotonic()
-                topk_wand_auto(queries, blocks, frames.dictionary, k=5, cfg=DEFAULT, **auto_kw).count()
-                timings["query_wand_auto_topk5"] = time.monotonic() - t0
-            except ImportError:
-                pass
+            # the same path given the segment count, as a caller holding the
+            # index manifests passes it (no distinct-count job)
+            topk_wand(queries, blocks, frames.dictionary, k=5, cfg=DEFAULT, n_segments=1).count()
+            t0 = time.monotonic()
+            topk_wand(queries, blocks, frames.dictionary, k=5, cfg=DEFAULT, n_segments=1).count()
+            timings["query_wand_auto_topk5"] = time.monotonic() - t0
 
         # -- per-query p95 (LocalSearcher: collected index, driver-side) ---
         if blocks is not None:

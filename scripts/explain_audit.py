@@ -11,6 +11,9 @@ Checks:
   * column math stages run inside WholeStageCodegen
   * top-k compiles to TakeOrderedAndProject (no global sort)
   * decontamination broadcasts the eval-side fingerprints into its fp join
+  * WAND is one segment-keyed mapInPandas stream over a term_id-pushed block
+    scan — no grouped pandas UDF, and no bucket explode (Generate) once the
+    segments alone fill the cores
   * sampling plans: uniform sample = TakeOrderedAndProject, mixture sample =
     WindowGroupLimit, token-budget scan = broadcast offsets join with NO
     spark_partition_id anywhere in the plan
@@ -218,7 +221,7 @@ def main() -> None:
         # win; regressing it silently would bring the joins back.
         from splade_spark.query.session import InteractiveSession, prepare_postings
 
-        prepped = prepare_postings(frames.postings, 4)
+        prepped = prepare_postings(frames.postings)
         prepped.count()
         with InteractiveSession(prepped, frames.dictionary, NOSTEM) as sess:
             qtext = " ".join(
@@ -276,7 +279,32 @@ def main() -> None:
             },
         )
 
-        # 10) sampling plans (curation/sampling.py): the shapes that make the
+        # 10) WAND: one execution shape. With n_segments ≥ parallelism every
+        # (segment, bucket) group is a whole segment (B = 1), so the plan is
+        # scan(term_id pushed) → exchange → sort → MapInPandas → top-k, with
+        # no Generate and no join
+        from splade_spark.build.segments import pack_segment, with_segment_id
+        from splade_spark.query.wand import topk_wand
+
+        par = spark.sparkContext.defaultParallelism
+        bpath = os.path.join(d, "blocks")
+        pack_segment(with_segment_id(frames.postings, par)).write.parquet(bpath)
+        check(
+            "WAND one shape",
+            _plan(topk_wand(queries_df(spark), spark.read.parquet(bpath),
+                            frames.dictionary, k=5, cfg=NOSTEM, n_segments=par)),
+            {
+                "term_id pushed to parquet": r"PushedFilters: \[[^\]]*In\(term_id",
+                "one mapInPandas stream": r"MapInPandas",
+            },
+            forbidden={
+                "no grouped pandas UDF": r"FlatMapGroupsInPandas",
+                "no bucket explode": r"Generate",
+                "no join": r"Join",
+            },
+        )
+
+        # 11) sampling plans (curation/sampling.py): the shapes that make the
         # family deterministic AND scale-safe — exact-n via per-partition
         # heaps, per-key quotas via WindowGroupLimit, and a prefix scan whose
         # bucket is a pure function of the data (NO spark_partition_id: that

@@ -6,8 +6,8 @@ Replaces the Milvus-internal SPARSE_INVERTED_INDEX segment format
 * docIDs: signed int64, ascending within a block. Encoded as an unsigned
   LEB128 varint stream: first value zigzag-encoded, then gaps
   ``doc[i] - doc[i-1]`` (≥ 1, already non-negative) as plain varints.
-* impacts: ``[version, width]`` header, then a little-endian float array
-  (width 8 = float64, the default; width 4 = float32), same order as docIDs.
+* impacts: ``[version, width]`` header, then a little-endian float64 array
+  (width 8, the only width), same order as docIDs.
 * every blob starts with a version byte (``VERSION = 1``) so future formats
   can coexist and segment merge can read v1 forever (SURVEY.md §7 risk
   register: "binary format evolution").
@@ -133,27 +133,22 @@ def decode_doc_ids(blob: bytes, n_docs: int) -> np.ndarray:
     return out
 
 
-def encode_impacts(impacts: np.ndarray, width: int = 8) -> bytes:
-    """Impact array → [version, width] + LE float bytes.
+def encode_impacts(impacts: np.ndarray) -> bytes:
+    """Impact array → [version, 8] + LE float64 bytes.
 
-    width=8 (float64) is the default: block-decoded scores must agree with the
-    naive double-precision DataFrame path to 1e-6 for rank-identity
-    (SURVEY.md §4); float32 storage (width=4) is available where 4 bytes/
-    posting matter more than sub-1e-6 score agreement.
+    float64 because block-decoded scores must agree with the naive
+    double-precision DataFrame path to 1e-6 for rank-identity (SURVEY.md §4).
     """
-    if width not in (4, 8):
-        raise ValueError("impact width must be 4 or 8")
-    dtype = "<f4" if width == 4 else "<f8"
-    return bytes([VERSION, width]) + np.asarray(impacts, dtype=dtype).tobytes()
+    return bytes([VERSION, 8]) + np.asarray(impacts, dtype="<f8").tobytes()
 
 
 def decode_impacts(blob: bytes, n_docs: int) -> np.ndarray:
     mv = memoryview(blob)
     if mv[0] != VERSION:
         raise ValueError(f"unknown posting-block version {mv[0]}")
-    width = mv[1]
-    dtype = "<f4" if width == 4 else "<f8"
-    return np.frombuffer(mv, dtype=dtype, count=n_docs, offset=2)
+    if mv[1] != 8:
+        raise ValueError(f"unknown impact width {mv[1]}")
+    return np.frombuffer(mv, dtype="<f8", count=n_docs, offset=2)
 
 
 def decode_blocks(docs_bins, impacts_bins, n_docs) -> tuple[np.ndarray, np.ndarray]:

@@ -47,7 +47,7 @@ def _assemble(docs: DataFrame, cfg: EngineConfig) -> IndexFrames:
     fit = fit_corpus(docs, slim.count(), cfg)
     postings = doc_impacts(term_rows(fit.tf, fit.dictionary), fit.avgdl, cfg)
     return IndexFrames(
-        docs, fit.corpus_stats(), fit.dictionary.cache(),
+        docs, fit.corpus_stats(), fit.dictionary,
         postings.select("term_id", "doc_id", "impact", "tf"),
     )
 

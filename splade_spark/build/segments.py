@@ -7,7 +7,7 @@ Spark-native layout designed for 10^12-doc scale:
 * **Segment = hash partition of docs.** ``segment_id = pmod(xxhash64(doc_id),
   n_segments)`` with ``n_segments = ceil(n_docs / cfg.segment_max_docs)``.
   Hash assignment is deterministic, needs no global sort, and bounds every
-  per-(segment, term) applyInPandas group to ≤ segment_max_docs postings —
+  per-(segment, term) group of the pack stream to ≤ segment_max_docs postings —
   the head-term-skew cap from SURVEY.md §7 ("no single Python worker
   materializes a full head-term posting list"). Each segment holds COMPLETE
   posting lists for its own docs, so queries run per-segment in parallel and
@@ -22,8 +22,10 @@ Spark-native layout designed for 10^12-doc scale:
 
       index_dir/corpus_stats/          singleton row
       index_dir/dictionary/            (term, term_id, df, idf)
-      index_dir/docs/seg=K/            chunk store per segment
-      index_dir/blocks/seg=K/          posting blocks per segment
+      index_dir/docs/                  chunk store of the batch build
+                                       (unpartitioned)
+      index_dir/docs_stream/batch=K/   chunk store of streamed batch K
+      index_dir/blocks/segment_id=K/   posting blocks per segment
       index_dir/_manifest/K.json       per-segment commit record (lineage +
                                        metrics) — written ATOMICALLY after the
                                        segment's data lands; its presence IS

@@ -59,6 +59,7 @@ class CorpusFit:
         )
 
     def unpersist(self) -> None:
+        self.dictionary.unpersist()
         self.tf.unpersist()
         self.surface.unpersist()
 
@@ -75,8 +76,10 @@ def fit_corpus(docs: DataFrame, n_docs: int, cfg: EngineConfig = DEFAULT) -> Cor
     independent of task order, so two builds over the same corpus in
     different partition layouts get bit-identical impacts. When stemming,
     the folded tf is cached as well, so its fold exchange runs once for the
-    dictionary and every later consumer. The caller owns both caches
-    (``CorpusFit.unpersist``).
+    dictionary and every later consumer. The dictionary is cached too: the
+    driver path's is a scan of driver-shipped rows, which a build reads
+    twice (its table write, the ``term_rows`` broadcast). The caller owns
+    the caches (``CorpusFit.unpersist``).
     """
     obs = Observation()
     surface = surface_term_counts(docs).observe(
@@ -85,7 +88,7 @@ def fit_corpus(docs: DataFrame, n_docs: int, cfg: EngineConfig = DEFAULT) -> Cor
     tf = term_freqs(docs, cfg, surface=surface)
     if cfg.analyzer.stem:
         tf = tf.cache()
-    dictionary = build_dictionary(tf, n_docs, cfg)
+    dictionary = build_dictionary(tf, n_docs, cfg).cache()
     avgdl = int(obs.get["sum_tf"]) / n_docs if n_docs else 0.0
     return CorpusFit(n_docs, avgdl, dictionary, tf, surface)
 

@@ -1,8 +1,9 @@
 """The one numpy top-k kernel behind every in-Python scoring path.
 
-``topk_wand``, ``topk_wand_batch`` and ``LocalSearcher.search`` all score a
-query against a set of per-term posting lists with ``score_term_lists``, so
-their rank identity (docIDs and scores) holds by construction.
+``topk_wand`` (one per-segment stream group at a time) and
+``LocalSearcher.search`` both score a query against a set of per-term
+posting lists with ``score_term_lists``, so their rank identity (docIDs and
+scores) holds by construction.
 
 The kernel is an **exact two-phase MaxScore scheme**. BM25 idf can be
 NEGATIVE after the epsilon floor (rank-bm25 semantics, build/stats.py), so
@@ -39,7 +40,7 @@ pairwise and would not be). The touched docnos are found
 without a sort (``owner[docs] = arange(m)``, keep the positions that still
 own their slot), read, then zeroed in a ``finally``, so a query costs
 O(postings touched), never O(n). A lock serialises the buffers between
-threads. Without a space (the WAND paths: raw xxh64 doc ids, lazily decoded
+threads. Without a space (``topk_wand``: raw xxh64 doc ids, lazily decoded
 blocks) the accumulator is ``np.unique`` + ``bincount``.
 
 **Cut.** Above ``_CUT_MIN`` candidates the final order is a partial cut:

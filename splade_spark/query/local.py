@@ -8,7 +8,7 @@ collection (`collection.load()`, ingest.py:172); ``LocalSearcher`` is the
 same trade expressed Spark-natively: the (compact, compressed) posting
 blocks and dictionary are **collected once** from the segmented index into
 driver memory, and each query is then scored in pure numpy by the same
-kernel the WAND paths run (``query/kernel.py score_term_lists``) — identical
+kernel ``topk_wand`` runs per segment (``query/kernel.py score_term_lists``) — identical
 formulas, identical tie-break, rank-identical to the cluster paths
 (tests/test_local_search.py), at sub-10 ms per query. Each term's blocks
 from every segment are decoded once at load into one list over dense
@@ -20,7 +20,7 @@ searcher's ``DocSpace`` is the kernel's reused per-query accumulator.
 Scale position: this is explicitly the SMALL-index / interactive tool — the
 collected index must fit the driver (fine for per-tenant or per-shard
 indexes; the sf0.1 bench index is ~100 MB). Batch and large-scale retrieval
-stay on the distributed naive/WAND paths.
+stay on the distributed ``topk_naive`` / ``topk_wand`` paths.
 """
 
 from __future__ import annotations

@@ -25,7 +25,7 @@ naive-job path; sf0.1 (7.4M postings) p95 0.33 s with ``prepare=True``
 output (pinned by tests/test_session.py against ``topk_naive``).
 
 Scale position: the driver holds ONE (term_id, idf) pair per vocabulary term
-(~50 B each; a 5M-term web shard ≈ 250 MB) — ``max_terms`` refuses larger
+(~50 B each; a 5M-term web shard ≈ 250 MB) — ``_MAX_TERMS`` refuses larger
 vocabularies at construction; batch retrieval over a 100M-term corpus stays
 on ``topk_naive``/WAND, whose query side broadcasts instead. Postings stay a
 DataFrame: this session scales to indexes far beyond driver memory, the
@@ -41,8 +41,11 @@ from splade_spark.config import EngineConfig, DEFAULT
 from splade_spark.query.encode import encode_text
 from splade_spark.query.topk import SCORE_DECIMALS
 
+_MAX_TERMS = 5_000_000  # vocabulary the driver may collect
+_MAX_LITERAL_TERMS = 96  # widest query whose weights go in as a literal CASE
 
-def prepare_postings(postings: DataFrame, n_partitions: int = 32) -> DataFrame:
+
+def prepare_postings(postings: DataFrame) -> DataFrame:
     """Range-partition + sort postings by term_id and cache — the seekable
     in-memory layout.
 
@@ -55,6 +58,7 @@ def prepare_postings(postings: DataFrame, n_partitions: int = 32) -> DataFrame:
     session lifetime — the in-memory analog of the parquet min/max pruning
     the segmented store gets from its term_id-sorted blocks.
     """
+    n_partitions = postings.sparkSession.sparkContext.defaultParallelism * 2
     return (
         postings.repartitionByRange(n_partitions, "term_id")
         .sortWithinPartitions("term_id")
@@ -75,26 +79,22 @@ class InteractiveSession:
         postings: DataFrame,
         dictionary: DataFrame,
         cfg: EngineConfig = DEFAULT,
-        max_terms: int = 5_000_000,
         prepare: bool = False,
-        n_partitions: int = 32,
-        max_literal_terms: int = 96,
     ):
         self.cfg = cfg
-        self.max_literal_terms = max_literal_terms
         self._prepared = None
         self._spark = postings.sparkSession
         # guard BEFORE any persistent side effect (prepared cache, conf
         # tuning): a refused vocabulary must leave the session untouched
         n_terms = dictionary.count()
-        if n_terms > max_terms:
+        if n_terms > _MAX_TERMS:
             raise ValueError(
-                f"dictionary has {n_terms} terms > max_terms={max_terms}: "
+                f"dictionary has {n_terms} terms > max_terms={_MAX_TERMS}: "
                 "collecting it would strain the driver — use topk_naive/WAND "
-                "(broadcast query side) or raise max_terms deliberately"
+                "(broadcast query side)"
             )
         if prepare:
-            prepared = prepare_postings(postings, n_partitions)
+            prepared = prepare_postings(postings)
             try:
                 prepared.count()  # materialize the seekable cache up front
             except Exception:
@@ -129,7 +129,7 @@ class InteractiveSession:
         """Lazy top-k DataFrame for one query (None if fully OOV).
 
         Two weight-injection shapes by query width: up to
-        ``max_literal_terms`` distinct in-vocab terms, weights become a
+        ``_MAX_LITERAL_TERMS`` distinct in-vocab terms, weights become a
         literal CASE chain (zero extra exchange — the usual interactive
         query). Wider queries (SPLADE expansions, pasted paragraphs) would
         build a pathologically deep nested-CASE/isin expression, so they
@@ -139,7 +139,7 @@ class InteractiveSession:
         weights = self.encode(text)
         if not weights:
             return None
-        if len(weights) > self.max_literal_terms:
+        if len(weights) > _MAX_LITERAL_TERMS:
             qdf = self._spark.createDataFrame(
                 [(int(t), float(w)) for t, w in weights.items()],
                 "term_id long, _qw double",

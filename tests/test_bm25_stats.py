@@ -191,5 +191,9 @@ def test_fit_corpus_avgdl_exact(spark):
         # exact float equality, not approx
         assert fit.avgdl == sum(len(analyze_text(t, NOSTEM.analyzer)) for _, t in rows) / 4
         assert [tuple(r) for r in fit.corpus_stats().collect()] == [(4, fit.avgdl)]
+        # a build reads the dictionary twice (table write, term_rows
+        # broadcast): one cache, owned by the fit
+        assert fit.dictionary.is_cached
     finally:
         fit.unpersist()
+    assert not fit.dictionary.is_cached

@@ -92,10 +92,11 @@ def test_impacts_roundtrip_f64_exact():
     assert out.dtype == np.float64 and (out == w).all()  # bit-exact
 
 
-def test_impacts_roundtrip_f32():
-    w = np.random.default_rng(7).random(100)
-    out = decode_impacts(encode_impacts(w, width=4), 100)
-    assert out.dtype == np.float32 and np.allclose(out, w, rtol=1e-6)
+def test_impacts_width_other_than_8_rejected():
+    # a float32 blob as the removed width-4 option wrote it: [1, 4, f32 ...]
+    blob = bytes.fromhex("01040000003f0000a03f00000040")
+    with pytest.raises(ValueError, match="width 4"):
+        decode_impacts(blob, 3)
 
 
 def test_version_byte_rejected():
@@ -119,4 +120,3 @@ def test_frozen_hex_goldens():
         "0108000000000000e03f000000000000f43f0000000000000040000000000000c03f"
         "0000000000000c40000000000000e83f000000000000f03f"
     )
-    assert encode_impacts(w[:3], width=4).hex() == "01040000003f0000a03f00000040"

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from splade_spark.build.indexer import build_index_from_docs
 from splade_spark.config import NOSTEM
 from splade_spark.fixtures import FROZEN_QUERIES
+from splade_spark.query import session
 from splade_spark.query.naive import topk_naive
 from splade_spark.query.session import InteractiveSession
 
@@ -44,7 +45,7 @@ def test_rank_identical_to_naive(spark, frames):
 def test_prepared_rank_identical(spark, frames):
     """prepare=True (term_id-sorted cache) returns the same top-k."""
     with InteractiveSession(
-        frames.postings, frames.dictionary, NOSTEM, prepare=True, n_partitions=4
+        frames.postings, frames.dictionary, NOSTEM, prepare=True
     ) as prep, InteractiveSession(frames.postings, frames.dictionary, NOSTEM) as plain:
         for _, text in FROZEN_QUERIES[:5]:
             a = [(d, round(s, 6), r) for d, s, r in prep.search(text, k=5)]
@@ -52,9 +53,9 @@ def test_prepared_rank_identical(spark, frames):
             assert a == b, text
 
 
-def test_wide_query_broadcast_fallback(spark):
+def test_wide_query_broadcast_fallback(spark, monkeypatch):
     """A 500-distinct-term query (SPLADE expansion / pasted paragraph) must
-    not build a 500-deep nested CASE: above ``max_literal_terms`` the plan
+    not build a 500-deep nested CASE: above ``_MAX_LITERAL_TERMS`` the plan
     switches to a broadcast-joined weights frame — rank- AND score-identical
     to the literal path (VERDICT r4 #8)."""
     vocab = [f"w{i:03d}" for i in range(500)]
@@ -68,29 +69,29 @@ def test_wide_query_broadcast_fallback(spark):
     fr = build_index_from_docs(docs, NOSTEM)
     fr.postings.cache().count()
     wide_query = " ".join(vocab)  # 500 distinct in-vocab terms
-    with InteractiveSession(
-        fr.postings, fr.dictionary, NOSTEM, max_literal_terms=96
-    ) as fallback, InteractiveSession(
-        fr.postings, fr.dictionary, NOSTEM, max_literal_terms=10_000
-    ) as literal:
-        assert len(fallback.encode(wide_query)) == 500
-        a = [(d, round(s, 6), r) for d, s, r in fallback.search(wide_query, k=10)]
-        b = [(d, round(s, 6), r) for d, s, r in literal.search(wide_query, k=10)]
-        assert a == b and len(a) == 10
-        # narrow queries still take the literal path in both sessions
-        narrow = " ".join(vocab[:5])
-        assert fallback.search(narrow, k=5) == literal.search(narrow, k=5)
+    narrow = " ".join(vocab[:5])
+
+    def _results(max_literal_terms):
+        monkeypatch.setattr(session, "_MAX_LITERAL_TERMS", max_literal_terms)
+        with InteractiveSession(fr.postings, fr.dictionary, NOSTEM) as sess:
+            assert len(sess.encode(wide_query)) == 500
+            wide = [(d, round(s, 6), r) for d, s, r in sess.search(wide_query, k=10)]
+            return wide, sess.search(narrow, k=5)
+
+    fallback, literal = _results(96), _results(10_000)
+    assert fallback[0] == literal[0] and len(fallback[0]) == 10
+    # narrow queries still take the literal path in both sessions
+    assert fallback[1] == literal[1]
     fr.postings.unpersist()
 
 
-def test_guard_raises_before_side_effects(spark, frames):
+def test_guard_raises_before_side_effects(spark, frames, monkeypatch):
     """max_terms refusal must leave no prepared cache and no tuned confs."""
     before = spark.conf.get("spark.sql.shuffle.partitions")
     n_cached = len([r for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()])
+    monkeypatch.setattr(session, "_MAX_TERMS", 1)
     with pytest.raises(ValueError, match="max_terms"):
-        InteractiveSession(
-            frames.postings, frames.dictionary, NOSTEM, max_terms=1, prepare=True
-        )
+        InteractiveSession(frames.postings, frames.dictionary, NOSTEM, prepare=True)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert len([r for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()]) == n_cached
 
@@ -112,9 +113,10 @@ def test_conf_restored(spark, frames):
     assert after == before
 
 
-def test_max_terms_guard(frames):
+def test_max_terms_guard(frames, monkeypatch):
+    monkeypatch.setattr(session, "_MAX_TERMS", 1)
     with pytest.raises(ValueError, match="max_terms"):
-        InteractiveSession(frames.postings, frames.dictionary, NOSTEM, max_terms=1)
+        InteractiveSession(frames.postings, frames.dictionary, NOSTEM)
 
 
 def test_repeated_terms_sum(spark, frames):

@@ -1,18 +1,21 @@
 """Three-way rank-identity: naive DataFrame path == block-max WAND path ==
-pandas oracle (SURVEY.md §5 test 2), over 1-segment and multi-segment indexes."""
+pandas oracle (SURVEY.md §5 test 2), over a 1-segment index (several query
+buckets per segment) and a 4-segment one (one bucket on local[4])."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from splade_spark.build.indexer import build_index_from_docs
 from splade_spark.build.segments import pack_segment, with_segment_id
 from splade_spark.config import DEFAULT, EngineConfig
 from splade_spark.fixtures import FROZEN_QUERIES, queries_df
 from splade_spark.oracle import PandasOracle
+from splade_spark.query.encode import encode_text
 from splade_spark.query.naive import topk_naive
-from splade_spark.query.wand import topk_wand, topk_wand_batch
+from splade_spark.query.wand import topk_wand
 
 SF = "/root/testdata/sf0.001"
 
@@ -53,9 +56,6 @@ def test_three_way_rank_identity(spark, setup, n_segments, block_size):
     for k in (5, 3):
         naive = _collect(topk_naive(queries_df(spark), frames.postings, frames.dictionary, k=k))
         wand = _collect(topk_wand(queries_df(spark), blocks, frames.dictionary, k=k, cfg=cfg))
-        batch = _collect(
-            topk_wand_batch(queries_df(spark), blocks, frames.dictionary, k=k, cfg=cfg)
-        )
         for qid, text in FROZEN_QUERIES:
             want = [(d, round(s, 6)) for d, s in oracle.topk(text, k)]
             assert naive.get(qid, []) == want, f"naive q{qid}"
@@ -63,7 +63,6 @@ def test_three_way_rank_identity(spark, setup, n_segments, block_size):
                 f"wand q{qid} segs={n_segments} bs={block_size}: "
                 f"{wand.get(qid, [])} != {want}"
             )
-            assert batch.get(qid, []) == want, f"wand_batch q{qid}"
     blocks.unpersist()
 
 
@@ -71,12 +70,9 @@ def test_wand_negative_weight_terms_exact(spark, setup, monkeypatch):
     """Queries made of head terms must be exact on every numpy path. On a
     corpus whose head terms (df > N/2) have NEGATIVE weight, a query mixing
     in rare terms drives θ > ε: the kernel prunes and looks the negative
-    terms up at the survivors only, on topk_wand (block-range skip),
-    topk_wand_batch and LocalSearcher alike."""
-    from pyspark.sql import functions as F
-
+    terms up at the survivors only, on topk_wand (block-range skip) and
+    LocalSearcher alike."""
     from splade_spark.query import kernel, wand
-    from splade_spark.query.encode import encode_queries
     from splade_spark.query.local import LocalSearcher
 
     def _all_paths(frames, oracle, qid, qtext, k=5):
@@ -85,10 +81,9 @@ def test_wand_negative_weight_terms_exact(spark, setup, monkeypatch):
         want = [(d, round(s, 6)) for d, s in oracle.topk(qtext, k)]
         assert _collect(topk_naive(q, frames.postings, frames.dictionary, k=k)).get(qid, []) == want
         assert _collect(topk_wand(q, blocks, frames.dictionary, k=k)).get(qid, []) == want
-        assert _collect(topk_wand_batch(q, blocks, frames.dictionary, k=k)).get(qid, []) == want
         local = LocalSearcher.from_frames(frames, DEFAULT).search(qtext, k)
         assert [(d, round(s, 6)) for d, s in local] == want
-        return q, blocks, want
+        return blocks, want
 
     frames, oracle = setup
     head_terms = [
@@ -113,11 +108,11 @@ def test_wand_negative_weight_terms_exact(spark, setup, monkeypatch):
     idf = {r.term: r.idf for r in neg_frames.dictionary.collect()}
     assert all(idf[t] < 0 for t in head) and idf["r0"] > 0
     qtext = "r0 r1 r2 r3 r4 h0 h1 h1"
-    q, blocks, want = _all_paths(neg_frames, neg_oracle, 101, qtext)
+    blocks, want = _all_paths(neg_frames, neg_oracle, 101, qtext)
 
     # the prune branch ran: negative terms were decoded at survivors only.
-    # Observed in-process; topk_wand_batch scores the same one-segment
-    # TermLists as LocalSearcher.
+    # Observed in-process, through the WAND stream's per-group scorer over
+    # the one segment's block rows.
     pruned = []
     for cls in (kernel.TermList, wand._TermBlocks):
         def _spy(self, within=None, _orig=cls.decode, _name=cls.__name__):
@@ -127,40 +122,49 @@ def test_wand_negative_weight_terms_exact(spark, setup, monkeypatch):
 
         monkeypatch.setattr(cls, "decode", _spy)
     LocalSearcher.from_frames(neg_frames, DEFAULT).search(qtext, 5)
-    joined = blocks.join(
-        F.broadcast(encode_queries(q, neg_frames.dictionary)), "term_id"
-    ).toPandas()
-    got = wand._wand_group(joined, 5)
-    assert [(int(d), round(float(s), 6)) for d, s in zip(got["doc_id"], got["score"])] == want
+    vocab = {r.term: (r.term_id, r.idf) for r in neg_frames.dictionary.collect()}
+    weights = encode_text(qtext, vocab, DEFAULT.analyzer)
+    rows = blocks.filter(F.col("term_id").isin(list(weights))).toPandas()
+    rows = rows.sort_values(["term_id", "block_id"], ignore_index=True)
+    cols = {c: rows[c].to_numpy() for c in rows.columns}
+    qids, got_docs, got_scores = wand._score_group(cols, 0, len(rows), {101: weights}, 5)
+    assert set(qids.tolist()) == {101}
+    assert [(int(d), round(float(s), 6)) for d, s in zip(got_docs, got_scores)] == want
     assert set(pruned) == {"TermList", "_TermBlocks"}
     neg_frames.postings.unpersist()
 
 
-def test_wand_auto_rank_identity_and_selection(spark, setup):
-    """topk_wand_auto matches the manual paths exactly, and its path choice
-    follows the documented geometry rule (VERDICT.md round-1 Wrong #3)."""
-    from splade_spark.query.wand import topk_wand_auto
+def test_wand_bucket_rule(spark, setup, tmp_path):
+    """The query-bucket count fills the cores a few-segment index leaves
+    idle and is 1 once segments alone fill them; the plan follows it: one
+    mapInPandas stream, term_id pushed into the scan, and the bucket
+    explode (Generate) only when B > 1. The benchmark-only forwards return
+    the same rows."""
+    from splade_spark.query.wand import _bucket_count, topk_wand_auto, topk_wand_batch
 
-    frames, oracle = setup
-    blocks = pack_segment(with_segment_id(frames.postings, 4), DEFAULT).cache()
-    blocks.count()
-    auto = _collect(topk_wand_auto(queries_df(spark), blocks, frames.dictionary, k=5))
-    for qid, text in FROZEN_QUERIES:
-        want = [(d, round(s, 6)) for d, s in oracle.topk(text, 5)]
-        assert auto.get(qid, []) == want, f"auto q{qid}"
-    # selection rule: few segments (< parallelism) → per-query path; many
-    # segments + big batch → batch path. Verified via the physical plan:
-    # the batch path is a mapInPandas over segment-partitioned blocks (one
-    # FlatMapGroupsInPandas for per-query, MapInPandas for batch).
+    assert _bucket_count(16, 8, 4) == 1  # frozen_long geometry
+    assert _bucket_count(16, 4, 4) == 1  # web_zipf geometry
+    assert _bucket_count(16, 3, 4) == 2
+    assert _bucket_count(16, 1, 4) == 4
+    assert _bucket_count(2, 1, 4) == 2  # never more buckets than queries
+    assert _bucket_count(1, 1, 32) == 1
+    assert _bucket_count(16, 0, 4) == 4  # an empty index
+
+    frames, _ = setup
+    path = str(tmp_path / "blocks")
+    pack_segment(with_segment_id(frames.postings, 4), DEFAULT).write.parquet(path)
+    blocks = spark.read.parquet(path)  # the plan's only leaf is the scan
     par = spark.sparkContext.defaultParallelism
-    few = topk_wand_auto(
-        queries_df(spark), blocks, frames.dictionary, k=5,
-        n_queries=50, n_segments=1,
-    )
-    many = topk_wand_auto(
-        queries_df(spark), blocks, frames.dictionary, k=5,
-        n_queries=50, n_segments=max(par, 1),
-    )
-    assert "FlatMapGroupsInPandas" in few._jdf.queryExecution().analyzed().toString()
-    assert "MapInPandas" in many._jdf.queryExecution().analyzed().toString()
-    blocks.unpersist()
+
+    def _own(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    few = topk_wand(queries_df(spark), blocks, frames.dictionary, k=5, n_segments=1)
+    many = topk_wand(queries_df(spark), blocks, frames.dictionary, k=5, n_segments=par)
+    for plan in (_own(few), _own(many)):
+        assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan
+        assert "In(term_id" in plan
+    assert "Generate" in _own(few) and "Generate" not in _own(many)
+    assert _collect(few) == _collect(many)
+    for forward in (topk_wand_batch, topk_wand_auto):
+        assert _collect(forward(queries_df(spark), blocks, frames.dictionary, k=5)) == _collect(many)
