@@ -247,8 +247,7 @@ def _q_wand_topk_k5(spark, sf_dir):
     from splade_spark.query.wand import topk_wand
 
     frames = _frames(spark, sf_dir)
-    out = topk_wand(queries_df(spark), _blocks(spark, sf_dir), frames.dictionary, k=5,
-                    cfg=NOSTEM, n_segments=1)  # pack_segment: one segment
+    out = topk_wand(queries_df(spark), _blocks(spark, sf_dir), frames.dictionary, k=5, cfg=NOSTEM)
     return out.select(
         F.col("query_id").cast("long"), "doc_id", F.col("rank").cast("long").alias("rank"), _e6("score")
     )

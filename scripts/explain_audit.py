@@ -12,8 +12,7 @@ Checks:
   * top-k compiles to TakeOrderedAndProject (no global sort)
   * decontamination broadcasts the eval-side fingerprints into its fp join
   * WAND is one segment-keyed mapInPandas stream over a term_id-pushed block
-    scan — no grouped pandas UDF, and no bucket explode (Generate) once the
-    segments alone fill the cores
+    scan — no grouped pandas UDF, no explode (Generate) and no join
   * sampling plans: uniform sample = TakeOrderedAndProject, mixture sample =
     WindowGroupLimit, token-budget scan = broadcast offsets join with NO
     spark_partition_id anywhere in the plan
@@ -279,10 +278,8 @@ def main() -> None:
             },
         )
 
-        # 10) WAND: one execution shape. With n_segments ≥ parallelism every
-        # (segment, bucket) group is a whole segment (B = 1), so the plan is
-        # scan(term_id pushed) → exchange → sort → MapInPandas → top-k, with
-        # no Generate and no join
+        # 10) WAND: one execution shape, scan(term_id pushed) → exchange →
+        # sort → MapInPandas → top-k, with no explode and no join
         from splade_spark.build.segments import pack_segment, with_segment_id
         from splade_spark.query.wand import topk_wand
 
@@ -292,14 +289,14 @@ def main() -> None:
         check(
             "WAND one shape",
             _plan(topk_wand(queries_df(spark), spark.read.parquet(bpath),
-                            frames.dictionary, k=5, cfg=NOSTEM, n_segments=par)),
+                            frames.dictionary, k=5, cfg=NOSTEM)),
             {
                 "term_id pushed to parquet": r"PushedFilters: \[[^\]]*In\(term_id",
                 "one mapInPandas stream": r"MapInPandas",
             },
             forbidden={
                 "no grouped pandas UDF": r"FlatMapGroupsInPandas",
-                "no bucket explode": r"Generate",
+                "no explode": r"Generate",
                 "no join": r"Join",
             },
         )

@@ -100,8 +100,7 @@ def main(argv: list[str] | None = None) -> None:
 
     t0 = time.monotonic()
     if args.mode == "wand":
-        hits = topk_wand(queries, blocks, dictionary, k=args.k, cfg=DEFAULT,
-                         n_segments=len(idx.committed_segments()))
+        hits = topk_wand(queries, blocks, dictionary, k=args.k, cfg=DEFAULT)
     else:
         hits = topk_naive(queries, unpack_blocks(blocks), dictionary, k=args.k, cfg=DEFAULT)
     if args.output:

@@ -6,33 +6,29 @@ compressed segment blocks (build/segments.py) and scores each segment with
 the shared numpy kernel ``query/kernel.py score_term_lists`` (exact
 two-phase MaxScore; ``LocalSearcher`` runs the same kernel).
 
-One execution shape, a segment × query-bucket stream (SURVEY.md §3.2 Spark
+One execution shape, a segment-keyed stream (SURVEY.md §3.2 Spark
 replacement; the per-partition scoring + global merge of REPOSE):
 
     encode       the query set is encoded on the driver (``encode_query_set``:
-                 the texts and only their terms' dictionary rows collected);
-                 queries are dealt round-robin, by sorted query id, into
-                 B = min(n_queries, ceil(defaultParallelism / n_segments))
-                 buckets, so a few-segment index still fills every core
+                 the texts and only their terms' dictionary rows collected)
     seek         blocks filtered on term_id ∈ query terms -- parquet
-                 pushdown, min/max on term_id prunes row groups; with B > 1
-                 a block row goes only to the buckets whose queries use its
-                 term (a literal term_id → buckets map, exploded); with B = 1
-                 no Generate and no join
-    score        repartition + sort by (segment_id, bucket, term_id,
-                 block_id), one mapInPandas stream cut into (segment,
-                 bucket) groups; each group scores its bucket's queries over
-                 lazily decoded term lists (``_TermBlocks``): a term is
-                 decoded at most once per group, and a negative-weight term
-                 looked up at the survivors decodes only the blocks whose
+                 pushdown, min/max on term_id prunes row groups; no join
+    score        repartition + sort by (segment_id, term_id, block_id), one
+                 mapInPandas stream cut into segment groups; each group
+                 scores every query over lazily decoded term lists
+                 (``_TermBlocks``): a term is decoded at most once per
+                 group, and a negative-weight term looked up at the
+                 survivors decodes only the blocks whose
                  [first_doc_id, last_doc_id] range holds one (the block-max
                  skip)
     merge        per_query_topk over the per-segment candidates
+
+The stream's parallelism is the segment count: on an index with fewer
+segments than cores the other cores idle (BENCH/BASELINE.md "Query
+buckets: built, measured, removed").
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 import pandas as pd
@@ -77,8 +73,8 @@ class _TermBlocks:
 
 
 def _score_group(cols: dict, s: int, e: int, queries: dict, k: int):
-    """Rows [s, e) of one (segment, bucket) group, sorted by (term_id,
-    block_id) → (query_ids, doc_ids, scores) of each query's segment top-k."""
+    """Rows [s, e) of one segment, sorted by (term_id, block_id) →
+    (query_ids, doc_ids, scores) of each query's segment top-k."""
     tids = cols["term_id"]
     bounds = s + group_bounds(tids[s:e])
     lists = {
@@ -94,61 +90,31 @@ def _score_group(cols: dict, s: int, e: int, queries: dict, k: int):
     return np.concatenate(qids), np.concatenate(docs), np.concatenate(scores)
 
 
-def _bucket_count(n_queries: int, n_segments: int, parallelism: int) -> int:
-    """Query buckets per segment: enough (segment, bucket) groups to fill
-    ``parallelism`` slots, never more buckets than queries."""
-    return min(n_queries, max(1, math.ceil(parallelism / max(n_segments, 1))))
-
-
 def topk_wand(
     queries: DataFrame,
     blocks: DataFrame,
     dictionary: DataFrame,
     k: int | None = None,
     cfg: EngineConfig = DEFAULT,
-    n_segments: int | None = None,
 ) -> DataFrame:
-    """queries(query_id, text) → (query_id, doc_id, score, rank) via blocks.
-
-    ``n_segments`` is the index's segment count (its manifests hold it);
-    left ``None``, one distinct-count job over ``blocks`` finds it. It sets
-    the query-bucket count only, never the result.
-    """
+    """queries(query_id, text) → (query_id, doc_id, score, rank) via blocks."""
     k = k if k is not None else cfg.top_k
     spark = blocks.sparkSession
     weights_by_query = encode_query_set(queries, dictionary, cfg)
     if not weights_by_query:
         return per_query_topk(spark.createDataFrame([], _HIT_SCHEMA), k)
-    if n_segments is None:
-        n_segments = blocks.select("segment_id").distinct().count()
-    qids = sorted(weights_by_query)
-    n_buckets = _bucket_count(len(qids), n_segments, spark.sparkContext.defaultParallelism)
-    buckets = [{q: weights_by_query[q] for q in qids[b::n_buckets]} for b in range(n_buckets)]
-
     wanted = sorted({t for w in weights_by_query.values() for t in w})
-    rows = blocks.filter(F.col("term_id").isin(wanted))  # seek
-    keys = ["segment_id"]
-    if n_buckets > 1:
-        term_buckets: dict[int, list[int]] = {}
-        for b, bucket in enumerate(buckets):
-            for t in {t for w in bucket.values() for t in w}:
-                term_buckets.setdefault(t, []).append(b)
-        # one SQL literal, not a Column per entry: each Column is a py4j call
-        to_buckets = ", ".join(
-            f"{t}, array({', '.join(map(str, bs))})" for t, bs in sorted(term_buckets.items())
-        )
-        rows = rows.withColumn("bucket", F.explode(F.expr(f"map({to_buckets})[term_id]")))
-        keys.append("bucket")
     arranged = (
-        rows.repartition(spark.sparkContext.defaultParallelism * 2, *keys)
-        .sortWithinPartitions(*keys, "term_id", "block_id")
+        blocks.filter(F.col("term_id").isin(wanted))  # seek
+        .repartition(spark.sparkContext.defaultParallelism * 2, "segment_id")
+        .sortWithinPartitions("segment_id", "term_id", "block_id")
     )
 
     def _stream(batches):
-        for pdf, bounds in iter_sorted_groups(batches, tuple(keys)):
+        for pdf, bounds in iter_sorted_groups(batches, ("segment_id",)):
             cols = {c: pdf[c].to_numpy() for c in pdf.columns}
             parts = [
-                _score_group(cols, s, e, buckets[cols["bucket"][s] if n_buckets > 1 else 0], k)
+                _score_group(cols, s, e, weights_by_query, k)
                 for s, e in zip(bounds[:-1], bounds[1:])
             ]
             qids, docs, scores = (np.concatenate(p) for p in zip(*parts))
@@ -159,9 +125,9 @@ def topk_wand(
 
 # perfbench/run.py imports the two names below; they go when the benchmark
 # itself next changes.
-def topk_wand_batch(queries, blocks, dictionary, k=None, cfg=DEFAULT, n_segments=None):
-    return topk_wand(queries, blocks, dictionary, k, cfg, n_segments)
+def topk_wand_batch(queries, blocks, dictionary, k=None, cfg=DEFAULT):
+    return topk_wand(queries, blocks, dictionary, k, cfg)
 
 
 def topk_wand_auto(queries, blocks, dictionary, k=None, cfg=DEFAULT, n_queries=None, n_segments=None):
-    return topk_wand(queries, blocks, dictionary, k, cfg, n_segments)
+    return topk_wand(queries, blocks, dictionary, k, cfg)

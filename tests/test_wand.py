@@ -1,6 +1,6 @@
 """Three-way rank-identity: naive DataFrame path == block-max WAND path ==
-pandas oracle (SURVEY.md §5 test 2), over a 1-segment index (several query
-buckets per segment) and a 4-segment one (one bucket on local[4])."""
+pandas oracle (SURVEY.md §5 test 2), over a 1-segment index (one stream
+group holds every block) and a 4-segment one."""
 
 from __future__ import annotations
 
@@ -134,37 +134,20 @@ def test_wand_negative_weight_terms_exact(spark, setup, monkeypatch):
     neg_frames.postings.unpersist()
 
 
-def test_wand_bucket_rule(spark, setup, tmp_path):
-    """The query-bucket count fills the cores a few-segment index leaves
-    idle and is 1 once segments alone fill them; the plan follows it: one
-    mapInPandas stream, term_id pushed into the scan, and the bucket
-    explode (Generate) only when B > 1. The benchmark-only forwards return
-    the same rows."""
-    from splade_spark.query.wand import _bucket_count, topk_wand_auto, topk_wand_batch
-
-    assert _bucket_count(16, 8, 4) == 1  # frozen_long geometry
-    assert _bucket_count(16, 4, 4) == 1  # web_zipf geometry
-    assert _bucket_count(16, 3, 4) == 2
-    assert _bucket_count(16, 1, 4) == 4
-    assert _bucket_count(2, 1, 4) == 2  # never more buckets than queries
-    assert _bucket_count(1, 1, 32) == 1
-    assert _bucket_count(16, 0, 4) == 4  # an empty index
+def test_wand_one_shape_plan(spark, setup, tmp_path):
+    """topk_wand is one segment-keyed mapInPandas stream over a term_id-pushed
+    block scan: no grouped pandas UDF, no explode (Generate) and no join. The
+    benchmark-only forwards return the same rows."""
+    from splade_spark.query.wand import topk_wand_auto, topk_wand_batch
 
     frames, _ = setup
     path = str(tmp_path / "blocks")
     pack_segment(with_segment_id(frames.postings, 4), DEFAULT).write.parquet(path)
     blocks = spark.read.parquet(path)  # the plan's only leaf is the scan
-    par = spark.sparkContext.defaultParallelism
-
-    def _own(df) -> str:
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    few = topk_wand(queries_df(spark), blocks, frames.dictionary, k=5, n_segments=1)
-    many = topk_wand(queries_df(spark), blocks, frames.dictionary, k=5, n_segments=par)
-    for plan in (_own(few), _own(many)):
-        assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan
-        assert "In(term_id" in plan
-    assert "Generate" in _own(few) and "Generate" not in _own(many)
-    assert _collect(few) == _collect(many)
+    got = topk_wand(queries_df(spark), blocks, frames.dictionary, k=5)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "In(term_id" in plan
+    for absent in ("FlatMapGroupsInPandas", "Generate", "Join"):
+        assert absent not in plan, absent
     for forward in (topk_wand_batch, topk_wand_auto):
-        assert _collect(forward(queries_df(spark), blocks, frames.dictionary, k=5)) == _collect(many)
+        assert _collect(forward(queries_df(spark), blocks, frames.dictionary, k=5)) == _collect(got)
