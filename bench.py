@@ -1,28 +1,34 @@
 #!/usr/bin/env python
 """Headline benchmark for splade_spark (driver contract).
 
-Runs the full index-build pipeline + BM25 top-k query phases at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+Builds the engine's segmented index (``build_segmented_index`` at the
+default ``n_segments_for`` count: 4 segments for sf0.1 with the default
+replicate/expand) from ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1
+fixture, see ``main``) on ``local[$SPARK_GRAFT_CPUS]``, runs every BM25
+top-k path over that one index, and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"index_build": s, ...}, "sf": ...}
 
 Phases
-  index_build       web_pages → extract(HTML) → chunk → analyze → tf → impacts
-                    → postings, materialized to parquet (docs/sec in meta)
-  pack_blocks       postings → delta+varint block packing (segment format)
-  query_topk5_batch frozen 50-query set, naive DataFrame path, k=5 (warm)
-  query_wand_topk5  same query set over compressed blocks via block-max WAND
+  index_build       web_pages → extract(HTML) → chunk → analyze → fit →
+                    packed posting blocks per segment, committed to disk
+  pack_blocks       ``compact_index`` at the same segment count — the
+                    engine's one standalone re-pack (decode → re-hash →
+                    re-block → staged swap)
+  query_topk5_batch frozen 50-query set, naive DataFrame path over the
+                    decoded blocks (``unpack_blocks``, cached), k=5 (warm)
+  query_wand_topk5  same query set, block-max WAND over the blocks on disk
+  query_local_p95   per-query p95 of ``LocalSearcher`` (``LocalSearcher.load``)
   query_p95         per-query p95 latency over 10 single-query naive jobs
+  query_session_p95 per-query p95 of ``InteractiveSession`` (decoded blocks)
 
 `query_wand_auto_topk5` repeats `query_wand_topk5` (the auto selection it
 once timed is gone; the key stays so the headline schema stays
-comparable). On this single-segment index the WAND stream runs as one
-task. One-time costs (session_prepare_sec, cold_build_sec) live in meta,
-never in the headline sum.
+comparable). One-time costs (session_prepare_sec, cold_build_sec,
+local_load_sec) live in meta, never in the headline sum.
 
-Extra meta (docs/sec, postings/sec, qps, scaling inputs) goes to stderr; the
+Extra meta (docs/sec, postings/sec, qps, segment count) goes to stderr; the
 stdout line stays the single driver-parsed JSON object.
 """
 
@@ -63,10 +69,14 @@ def run_bench(cpus: int, sf_dir: str, replicate: int, workdir: str, expand: int 
     """Run all phases on a fresh local[cpus] session; return timings + meta."""
     from pyspark.sql import functions as F
 
-    from splade_spark.build.indexer import build_index_frames
+    from compact_index import compact_index
+    from splade_spark.build.segments import build_segmented_index, unpack_blocks
     from splade_spark.config import DEFAULT
     from splade_spark.fixtures import FROZEN_QUERIES
+    from splade_spark.query.local import LocalSearcher
     from splade_spark.query.naive import topk_naive
+    from splade_spark.query.session import InteractiveSession
+    from splade_spark.query.wand import topk_wand
     from splade_spark.sources.web_pages import (
         expand_query_text, read_documents, web_pages_from_documents,
     )
@@ -75,6 +85,11 @@ def run_bench(cpus: int, sf_dir: str, replicate: int, workdir: str, expand: int 
     spark.sparkContext.setLogLevel("ERROR")
     timings: dict[str, float] = {}
     meta: dict[str, float] = {}
+
+    def p95(lat: list[float]) -> float:
+        lat = sorted(lat)
+        return lat[max(0, int(len(lat) * 0.95) - 1)]
+
     try:
         # Stage the input table to parquet OUTSIDE the timed region: deriving
         # web_pages from the driver fixture (html wrap) is fixture generation,
@@ -91,7 +106,6 @@ def run_bench(cpus: int, sf_dir: str, replicate: int, workdir: str, expand: int 
         # Warm the Python UDF workers (steady-state measurement): one dummy
         # Arrow-UDF pass over every core so worker fork+import cost is not
         # billed to the first timed phase.
-        import pandas as pd  # noqa: F401
         from pyspark.sql.functions import pandas_udf
         from pyspark.sql.types import IntegerType
 
@@ -107,47 +121,46 @@ def run_bench(cpus: int, sf_dir: str, replicate: int, workdir: str, expand: int 
         # JIT + codegen compile — measured 13.4s cold vs 6.2s warm for the
         # full build at sf0.1 local[32]). A long-lived executor fleet pays
         # that per PROCESS, not per job, so the headline times the warm
-        # plan; the cold first run ships in meta for comparison. Disable
-        # with SPARK_GRAFT_WARM_BUILD=0 to reproduce the r1/r2 protocol.
-        postings_path = os.path.join(workdir, f"postings_{cpus}")
+        # plans: a full build + compaction into a discarded index first; the
+        # cold build ships in meta for comparison. Disable with
+        # SPARK_GRAFT_WARM_BUILD=0 to reproduce the r1/r2 protocol.
         if os.environ.get("SPARK_GRAFT_WARM_BUILD", "1") != "0":
+            warm_dir = os.path.join(workdir, f"warm_index_{cpus}")
             t0 = time.monotonic()
-            wframes = build_index_frames(pages, DEFAULT, use_html=True)
-            wframes.postings.write.mode("overwrite").parquet(postings_path)
-            wframes.dictionary.count()
+            warm = build_segmented_index(pages, warm_dir, DEFAULT, use_html=True)
             meta["cold_build_sec"] = round(time.monotonic() - t0, 3)
+            compact_index(spark, warm_dir, len(warm.committed_segments()))
             spark.catalog.clearCache()
+            shutil.rmtree(warm_dir, ignore_errors=True)
 
         # -- index_build ----------------------------------------------------
+        index_dir = os.path.join(workdir, f"index_{cpus}")
         t0 = time.monotonic()
-        frames = build_index_frames(pages, DEFAULT, use_html=True)
-        frames.postings.write.mode("overwrite").parquet(postings_path)
-        frames.dictionary.cache().count()
+        idx = build_segmented_index(pages, index_dir, DEFAULT, use_html=True)
         timings["index_build"] = time.monotonic() - t0
 
-        postings = spark.read.parquet(postings_path).cache()
-        n_postings = postings.count()
-        n_docs = frames.docs.count()
+        manifests = idx.committed_segments()
+        n_postings = sum(m["n_postings"] for m in manifests.values())
         meta["n_pages"] = n_pages
-        meta["n_chunk_docs"] = n_docs
+        meta["n_segments"] = len(manifests)
+        meta["n_chunk_docs"] = sum(m["n_docs"] for m in manifests.values())
         meta["n_postings"] = n_postings
         meta["build_docs_per_sec"] = n_pages / timings["index_build"]
         meta["build_postings_per_sec"] = n_postings / timings["index_build"]
 
         # -- pack_blocks ----------------------------------------------------
-        try:
-            from splade_spark.build.segments import pack_segment
+        t0 = time.monotonic()
+        compact_index(spark, index_dir, len(manifests))
+        timings["pack_blocks"] = time.monotonic() - t0
 
-            blocks_path = os.path.join(workdir, f"blocks_{cpus}")
-            if "cold_build_sec" in meta:  # same steady-state protocol
-                pack_segment(postings, DEFAULT).write.mode("overwrite").parquet(blocks_path)
-            t0 = time.monotonic()
-            pack_segment(postings, DEFAULT).write.mode("overwrite").parquet(blocks_path)
-            timings["pack_blocks"] = time.monotonic() - t0
-            blocks = spark.read.parquet(blocks_path).repartition(cpus * 2).cache()
-            meta["n_blocks"] = blocks.count()
-        except ImportError:
-            blocks = None
+        # Every query row reads this one index: WAND the blocks on disk, the
+        # DataFrame paths their decoded long form (cached), LocalSearcher
+        # its own load.
+        dictionary = idx.dictionary(spark).cache()
+        dictionary.count()
+        blocks = idx.blocks(spark)
+        postings = unpack_blocks(blocks).cache()
+        postings.count()
 
         # -- query batch (naive) -------------------------------------------
         # query texts suffixed to the expanded vocabulary (paragraph qid % k)
@@ -155,50 +168,37 @@ def run_bench(cpus: int, sf_dir: str, replicate: int, workdir: str, expand: int 
             (qid, expand_query_text(text, qid % expand) if expand > 1 else text)
             for qid, text in FROZEN_QUERIES
         ]
+        qtexts = [t for _, t in qrows]
         queries = spark.createDataFrame(qrows, ["query_id", "text"])
         # warm-up once (JIT/codegen/broadcast), then timed run
-        topk_naive(queries, postings, frames.dictionary, k=5, cfg=DEFAULT).count()
+        topk_naive(queries, postings, dictionary, k=5, cfg=DEFAULT).count()
         t0 = time.monotonic()
-        n_hits = topk_naive(queries, postings, frames.dictionary, k=5, cfg=DEFAULT).count()
+        n_hits = topk_naive(queries, postings, dictionary, k=5, cfg=DEFAULT).count()
         timings["query_topk5_batch"] = time.monotonic() - t0
         meta["n_hits"] = n_hits
         meta["qps_batch"] = 50 / timings["query_topk5_batch"]
 
         # -- query batch (WAND over blocks) --------------------------------
-        if blocks is not None:
-            from splade_spark.query.wand import topk_wand
-
-            topk_wand(queries, blocks, frames.dictionary, k=5, cfg=DEFAULT).count()
+        # the second timed run keeps the retired auto row's key
+        for key in ("query_wand_topk5", "query_wand_auto_topk5"):
+            topk_wand(queries, blocks, dictionary, k=5, cfg=DEFAULT).count()
             t0 = time.monotonic()
-            topk_wand(queries, blocks, frames.dictionary, k=5, cfg=DEFAULT).count()
-            timings["query_wand_topk5"] = time.monotonic() - t0
-            meta["qps_wand"] = 50 / timings["query_wand_topk5"]
-
-            # a second timed run under the retired auto row's key
-            topk_wand(queries, blocks, frames.dictionary, k=5, cfg=DEFAULT).count()
-            t0 = time.monotonic()
-            topk_wand(queries, blocks, frames.dictionary, k=5, cfg=DEFAULT).count()
-            timings["query_wand_auto_topk5"] = time.monotonic() - t0
+            topk_wand(queries, blocks, dictionary, k=5, cfg=DEFAULT).count()
+            timings[key] = time.monotonic() - t0
+        meta["qps_wand"] = 50 / timings["query_wand_topk5"]
 
         # -- per-query p95 (LocalSearcher: collected index, driver-side) ---
-        if blocks is not None:
-            from splade_spark.query.local import LocalSearcher
-
-            searcher = LocalSearcher(
-                [r.asDict() for r in frames.dictionary.collect()],
-                [r.asDict() for r in blocks.collect()],
-                DEFAULT,
-            )
-            qtexts = [t for _, t in qrows]
-            searcher.search(qtexts[0])  # warm
-            lat_local = []
-            for t in qtexts:
-                t0 = time.monotonic()
-                searcher.search(t, 5)
-                lat_local.append(time.monotonic() - t0)
-            lat_local.sort()
-            timings["query_local_p95"] = lat_local[max(0, int(len(lat_local) * 0.95) - 1)]
-            meta["local_qps"] = len(qtexts) / max(sum(lat_local), 1e-9)
+        t0 = time.monotonic()
+        searcher = LocalSearcher.load(spark, index_dir, DEFAULT)
+        meta["local_load_sec"] = round(time.monotonic() - t0, 3)
+        searcher.search(qtexts[0])  # warm
+        lat_local = []
+        for t in qtexts:
+            t0 = time.monotonic()
+            searcher.search(t, 5)
+            lat_local.append(time.monotonic() - t0)
+        timings["query_local_p95"] = p95(lat_local)
+        meta["local_qps"] = len(qtexts) / max(sum(lat_local), 1e-9)
 
         # -- Zipf/Heaps vocabulary build (meta only) ------------------------
         # High-cardinality fixture (VERDICT r2 #4): per-(word,url) hash tails
@@ -216,50 +216,42 @@ def run_bench(cpus: int, sf_dir: str, replicate: int, workdir: str, expand: int 
             ).repartition(cpus * 2).write.mode("overwrite").parquet(zipf_path)
             zpages = spark.read.parquet(zipf_path)
             t0 = time.monotonic()
-            zframes = build_index_frames(zpages, DEFAULT, use_html=True)
-            zframes.postings.write.mode("overwrite").parquet(
-                os.path.join(workdir, f"zipf_postings_{cpus}")
+            zidx = build_segmented_index(
+                zpages, os.path.join(workdir, f"zipf_index_{cpus}"), DEFAULT, use_html=True
             )
             zsec = time.monotonic() - t0
             meta["zipf_build_sec"] = round(zsec, 3)
-            meta["zipf_vocab"] = zframes.dictionary.count()
+            meta["zipf_vocab"] = zidx.dictionary(spark).count()
             meta["zipf_docs_per_sec"] = round(n_pages / zsec, 1)
             spark.catalog.clearCache()
-            postings.cache().count()  # restore for the p95 phase below
+            dictionary.cache().count()  # restore both caches for the phases below
+            postings.cache().count()
 
         # -- per-query p95 (naive, 10 singleton jobs) ----------------------
         lat = []
-        single = queries.limit(10).collect()
-        for row in single:
-            q = spark.createDataFrame([(row.query_id, row.text)], ["query_id", "text"])
+        for qid, text in qrows[:10]:
+            q = spark.createDataFrame([(qid, text)], ["query_id", "text"])
             t0 = time.monotonic()
-            topk_naive(q, postings, frames.dictionary, k=5, cfg=DEFAULT).count()
+            topk_naive(q, postings, dictionary, k=5, cfg=DEFAULT).count()
             lat.append(time.monotonic() - t0)
-        lat.sort()
-        timings["query_p95"] = lat[max(0, int(len(lat) * 0.95) - 1)]
-        meta["query_p50"] = lat[len(lat) // 2]
+        timings["query_p95"] = p95(lat)
+        meta["query_p50"] = sorted(lat)[len(lat) // 2]
 
         # -- per-query p95 (InteractiveSession: persistent distributed
         # session, driver-collected dictionary, literal-injected weights;
         # postings stay a cached DataFrame) --------------------------------
-        from splade_spark.query.session import InteractiveSession
-
         t0 = time.monotonic()
-        with InteractiveSession(
-            postings, frames.dictionary, DEFAULT, prepare=True
-        ) as sess:
+        with InteractiveSession(postings, dictionary, DEFAULT, prepare=True) as sess:
             meta["session_prepare_sec"] = round(time.monotonic() - t0, 3)
-            qtexts50 = [t for _, t in qrows]
-            sess.search(qtexts50[0], 5)  # warm
+            sess.search(qtexts[0], 5)  # warm
             lat_s = []
-            for t in qtexts50:
+            for t in qtexts:
                 t0 = time.monotonic()
                 sess.search(t, 5)
                 lat_s.append(time.monotonic() - t0)
-            lat_s.sort()
-            timings["query_session_p95"] = lat_s[max(0, int(len(lat_s) * 0.95) - 1)]
+            timings["query_session_p95"] = p95(lat_s)
             meta["session_qps"] = len(lat_s) / max(sum(lat_s), 1e-9)
-            meta["session_p50"] = lat_s[len(lat_s) // 2]
+            meta["session_p50"] = sorted(lat_s)[len(lat_s) // 2]
     finally:
         spark.stop()
     return {"timings": timings, "meta": meta}
@@ -291,5 +283,6 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    _root = os.path.dirname(os.path.abspath(__file__))
+    sys.path[:0] = [_root, os.path.join(_root, "scripts")]  # splade_spark, compact_index
     main()

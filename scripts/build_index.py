@@ -24,10 +24,12 @@ import time
 
 
 def main(argv: list[str] | None = None) -> None:
+    from splade_spark.build.segments import segment_count
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="dir containing documents.parquet")
     ap.add_argument("--output", required=True, help="index directory (resume target)")
-    ap.add_argument("--segments", type=int, default=None)
+    ap.add_argument("--segments", type=segment_count, default=None)
     ap.add_argument("--replicate", type=int, default=1)
     ap.add_argument("--expand-text", type=int, default=1,
                     help="repeat each text k times (realistic KB-scale pages)")

@@ -28,28 +28,32 @@ import time
 
 
 def main(argv: list[str] | None = None) -> None:
+    from splade_spark.build.segments import segment_count
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--index", required=True)
-    ap.add_argument("--target-segments", type=int, default=1)
+    ap.add_argument("--target-segments", type=segment_count, default=1)
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("splade-compact-index").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    compact_index(spark, args.index, args.target_segments)
+    print(json.dumps(compact_index(spark, args.index, args.target_segments)), flush=True)
     spark.stop()
 
 
 def compact_index(spark, index_dir: str, target_segments: int = 1,
                   cfg=None) -> dict:
-    """Merge all committed segments into ``target_segments`` new ones."""
+    """Merge all committed segments into ``target_segments`` new ones →
+    a summary dict (segment counts, postings, seconds)."""
     from splade_spark.build.segments import (
         _HASH_ASSIGN, SegmentedIndex, docs_per_segment, merge_segments,
-        recover_compaction, write_segments,
+        recover_compaction, segment_count, write_segments,
     )
     from splade_spark.config import DEFAULT
 
+    target_segments = segment_count(target_segments)
     cfg = cfg or DEFAULT
     recover_compaction(index_dir)  # finish/undo any interrupted prior swap
     idx = SegmentedIndex(index_dir)
@@ -68,14 +72,12 @@ def compact_index(spark, index_dir: str, target_segments: int = 1,
         cfg,
         staged=True,
     )
-    out = {
+    return {
         "old_segments": len(old),
         "new_segments": len(new),
         "n_postings": sum(m["n_postings"] for m in new.values()),
         "compact_sec": round(time.monotonic() - t0, 3),
     }
-    print(json.dumps(out), flush=True)
-    return out
 
 
 if __name__ == "__main__":

@@ -91,6 +91,15 @@ def n_segments_for(n_docs: int, cfg: EngineConfig = DEFAULT) -> int:
     return max(1, math.ceil(n_docs / cfg.segment_max_docs))
 
 
+def segment_count(n) -> int:
+    """``n`` as a segment count: an int of at least 1, else ValueError.
+    Builds, compaction and their CLI flags check it before writing anything."""
+    n = int(n)
+    if n < 1:
+        raise ValueError(f"segment count must be at least 1, got {n}")
+    return n
+
+
 def with_segment_id(postings: DataFrame, n_segments: int) -> DataFrame:
     """Attach deterministic hash-based segment_id to long-form postings."""
     return postings.withColumn(
@@ -530,6 +539,10 @@ def build_segmented_index(
 
     from splade_spark.build.chunker import attach_tokens, chunk_pages, docs_from_chunks
 
+    if n_segments is not None:
+        n_segments = segment_count(n_segments)
+    if dedup not in (None, "exact"):
+        raise ValueError(f"unsupported dedup mode {dedup!r} (None or 'exact')")
     spark = pages.sparkSession if pages is not None else SparkSession.getActiveSession()
     recover_compaction(index_dir)  # finish/undo any interrupted compaction swap
     index = SegmentedIndex(index_dir)
@@ -550,9 +563,6 @@ def build_segmented_index(
 
     docs_path = os.path.join(index_dir, "docs")
 
-    if dedup not in (None, "exact"):
-        raise ValueError(f"unsupported dedup mode {dedup!r} (None or 'exact')")
-
     committed = index.committed_segments()
     # Resume safety (ADVICE r1): the hash layout pmod(xxhash64(doc_id), N)
     # is baked into every committed segment. Adopt the recorded N on resume;
@@ -565,7 +575,7 @@ def build_segmented_index(
         raise ValueError(f"corrupt index: mixed segment_of values {sorted(recorded)}")
     if recorded:
         rec_n = int(recorded.pop())
-        if n_segments is not None and int(n_segments) != rec_n:
+        if n_segments is not None and n_segments != rec_n:
             raise ValueError(
                 f"resume with n_segments={n_segments} conflicts with committed "
                 f"layout segment_of={rec_n}; pass n_segments={rec_n} or rebuild"

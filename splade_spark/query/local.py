@@ -5,17 +5,20 @@ A Spark job costs ~0.5 s of scheduling/planning regardless of input size, so
 per-query p95 latency of the distributed paths is floored there. The
 reference answers single queries in-process against a loaded Milvus
 collection (`collection.load()`, ingest.py:172); ``LocalSearcher`` is the
-same trade expressed Spark-natively: the (compact, compressed) posting
-blocks and dictionary are **collected once** from the segmented index into
-driver memory, and each query is then scored in pure numpy by the same
-kernel ``topk_wand`` runs per segment (``query/kernel.py score_term_lists``) — identical
-formulas, identical tie-break, rank-identical to the cluster paths
-(tests/test_local_search.py), at sub-10 ms per query. Each term's blocks
-from every segment are decoded once at load into one list over dense
-``docno``s (segments are hash partitions of the doc space, so their lists
-interleave). ``doc_ids`` maps docno → doc_id and is ascending, so docno
-order is doc_id order and the kernel's tie-break holds unchanged; the
-searcher's ``DocSpace`` is the kernel's reused per-query accumulator.
+same trade expressed Spark-natively: the dictionary and the long-form
+postings are **collected once** into driver memory, one ``toArrow()`` per
+frame (no Row objects), and each query is then scored in pure numpy by the
+same kernel ``topk_wand`` runs per segment (``query/kernel.py
+score_term_lists``) — identical formulas, identical tie-break,
+rank-identical to the cluster paths (tests/test_local_search.py), at
+sub-10 ms per query. ``load`` reads a segmented index through
+``unpack_blocks``, so its blocks are decoded in parallel in the Spark
+stream. Each term's postings from every segment are sorted once at load
+into one list over dense ``docno``s (segments are hash partitions of the
+doc space, so their lists interleave). ``doc_ids`` maps docno → doc_id and
+is ascending, so docno order is doc_id order and the kernel's tie-break
+holds unchanged; the searcher's ``DocSpace`` is the kernel's reused
+per-query accumulator.
 
 Scale position: this is explicitly the SMALL-index / interactive tool — the
 collected index must fit the driver (fine for per-tenant or per-shard
@@ -27,28 +30,28 @@ from __future__ import annotations
 
 import numpy as np
 
-from splade_spark.build.codec import decode_blocks
-from splade_spark.build.segments import group_bounds
+from splade_spark.build.segments import SegmentedIndex, group_bounds, unpack_blocks
 from splade_spark.config import EngineConfig, DEFAULT
 from splade_spark.query.encode import encode_text
 from splade_spark.query.kernel import DocSpace, TermList, score_term_lists
 
 
 class LocalSearcher:
-    """In-memory BM25 top-k over a collected segmented index."""
+    """In-memory BM25 top-k over a collected index."""
 
-    def __init__(self, dictionary_rows, block_rows, cfg: EngineConfig = DEFAULT):
+    def __init__(self, dictionary, postings, cfg: EngineConfig = DEFAULT):
+        """``dictionary(term, term_id, idf)`` and long-form
+        ``postings(term_id, doc_id, impact)`` frames, one ``toArrow()`` each."""
         self.cfg = cfg
-        self.vocab = {r["term"]: (r["term_id"], r["idf"]) for r in dictionary_rows}
+        d = dictionary.select("term", "term_id", "idf").toArrow()
+        self.vocab = dict(zip(
+            d["term"].to_pylist(), zip(d["term_id"].to_pylist(), d["idf"].to_pylist())
+        ))
         # term_id -> TermList of docnos over all segments, docno-sorted once here
-        rows = list(block_rows)
-        n = np.array([r["n_docs"] for r in rows], dtype=np.int64)
-        doc_ids, impacts = decode_blocks(
-            [r["docs_bin"] for r in rows], [r["impacts_bin"] for r in rows], n
-        )
+        p = postings.select("term_id", "doc_id", "impact").toArrow()
+        terms, doc_ids, impacts = (p[c].to_numpy() for c in ("term_id", "doc_id", "impact"))
         self.doc_ids, docs = np.unique(doc_ids, return_inverse=True)
         self.space = DocSpace(self.doc_ids.size)
-        terms = np.repeat(np.array([r["term_id"] for r in rows], dtype=np.int64), n)
         order = np.lexsort((docs, terms))
         docs, impacts, terms = docs[order], impacts[order], terms[order]
         bounds = group_bounds(terms)
@@ -59,26 +62,10 @@ class LocalSearcher:
 
     @classmethod
     def load(cls, spark, index_dir: str, cfg: EngineConfig = DEFAULT) -> "LocalSearcher":
-        """Collect dictionary + blocks from a SegmentedIndex (one Spark job each)."""
-        from splade_spark.build.segments import SegmentedIndex
-
+        """Collect a SegmentedIndex: its blocks are decoded in the Spark
+        stream (``unpack_blocks``), not on the driver."""
         idx = SegmentedIndex(index_dir)
-        return cls(
-            [r.asDict() for r in idx.dictionary(spark).collect()],
-            [r.asDict() for r in idx.blocks(spark).collect()],
-            cfg,
-        )
-
-    @classmethod
-    def from_frames(cls, frames, cfg: EngineConfig = DEFAULT) -> "LocalSearcher":
-        """Collect from in-memory IndexFrames via the block packer."""
-        from splade_spark.build.segments import pack_segment
-
-        return cls(
-            [r.asDict() for r in frames.dictionary.collect()],
-            [r.asDict() for r in pack_segment(frames.postings, cfg).collect()],
-            cfg,
-        )
+        return cls(idx.dictionary(spark), unpack_blocks(idx.blocks(spark)), cfg)
 
     def encode(self, text: str) -> dict[int, float]:
         """B9: analyze → qtf·idf per known term (OOV drops out)."""

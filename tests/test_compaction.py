@@ -173,3 +173,54 @@ def test_compaction_keeps_n_docs(spark, tmp_path):
     compact_index(spark, idx_dir, target_segments=2)
     assert sorted(SegmentedIndex(idx_dir).committed_segments()) == [0, 1]
     assert total() == n_docs
+
+
+def _tree(path):
+    """relpath → (size, mtime_ns) of every file under ``path``."""
+    import os
+
+    return {
+        os.path.relpath(os.path.join(root, f), path): (st.st_size, st.st_mtime_ns)
+        for root, _, files in os.walk(path)
+        for f in files
+        for st in [os.stat(os.path.join(root, f))]
+    }
+
+
+def test_segment_counts_below_one_rejected_before_writing(spark, tmp_path):
+    """A segment count below 1 is refused before anything is written: by
+    ``build_segmented_index`` (fresh and existing index), ``compact_index``
+    and the ``--segments`` / ``--target-segments`` flags."""
+    import os
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    import build_index
+    import compact_index as compact_cli
+
+    pages = web_pages_from_documents(
+        read_documents(spark, SF_SMALL).filter(F.col("doc_id") < 29)
+    )
+    fresh = str(tmp_path / "fresh")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="at least 1"):
+            build_segmented_index(pages, fresh, DEFAULT, n_segments=bad)
+        assert not os.path.exists(fresh)
+
+    idx_dir = str(tmp_path / "idx")
+    build_segmented_index(pages, idx_dir, DEFAULT, n_segments=2)
+    before = _tree(idx_dir)
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="at least 1"):
+            build_segmented_index(pages, idx_dir, DEFAULT, n_segments=bad)
+    for bad in (0, -2):
+        with pytest.raises(ValueError, match="at least 1"):
+            compact_cli.compact_index(spark, idx_dir, target_segments=bad)
+    for bad in ("0", "-2"):
+        with pytest.raises(SystemExit):
+            compact_cli.main(["--index", idx_dir, "--target-segments", bad])
+        with pytest.raises(SystemExit):
+            build_index.main(["--input", SF_SMALL, "--output", fresh, "--segments", bad])
+    assert _tree(idx_dir) == before
+    assert not os.path.exists(fresh)

@@ -85,7 +85,7 @@ def test_wand_on_empty_and_missing_terms(spark):
     wand = topk_wand(q, blocks, frames.dictionary, k=5).collect()
     qids = {r.query_id for r in wand}
     assert 0 not in qids and 1 in qids
-    searcher = LocalSearcher.from_frames(frames, DEFAULT)
+    searcher = LocalSearcher(frames.dictionary, frames.postings, DEFAULT)
     assert searcher.search("zzznope") == []
     assert searcher.search("") == []
 

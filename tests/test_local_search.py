@@ -28,7 +28,7 @@ def setup(spark):
 
 def test_local_rank_identical_to_naive(spark, setup):
     frames = setup
-    searcher = LocalSearcher.from_frames(frames, DEFAULT)
+    searcher = LocalSearcher(frames.dictionary, frames.postings, DEFAULT)
     for k in (5, 3):
         dist = {}
         for r in topk_naive(queries_df(spark), frames.postings, frames.dictionary, k=k).collect():
@@ -41,7 +41,7 @@ def test_local_rank_identical_to_naive(spark, setup):
 
 
 def test_local_latency_sub_50ms(spark, setup):
-    searcher = LocalSearcher.from_frames(setup, DEFAULT)
+    searcher = LocalSearcher(setup.dictionary, setup.postings, DEFAULT)
     searcher.search("sort merge join")  # warm
     lat = []
     for qid, text in FROZEN_QUERIES:
@@ -54,11 +54,22 @@ def test_local_latency_sub_50ms(spark, setup):
 
 
 def test_local_load_from_disk(spark, setup, tmp_path):
+    """``load`` over a 2-segment store == ``topk_wand`` over the same
+    blocks: docIDs, scores and result types, every frozen query."""
     from splade_spark.build.segments import build_segmented_index
+    from splade_spark.query.wand import topk_wand
     from splade_spark.sources.web_pages import read_documents, web_pages_from_documents
 
     pages = web_pages_from_documents(read_documents(spark, SF))
     idx = build_segmented_index(pages, str(tmp_path / "idx"), DEFAULT, n_segments=2)
     searcher = LocalSearcher.load(spark, str(tmp_path / "idx"), DEFAULT)
-    hits = searcher.search("sort merge join", 5)
-    assert len(hits) == 5 and all(isinstance(d, int) for d, _ in hits)
+    wand = {}
+    for r in topk_wand(
+        queries_df(spark), idx.blocks(spark), idx.dictionary(spark), k=5, cfg=DEFAULT
+    ).orderBy("query_id", "rank").collect():
+        wand.setdefault(r.query_id, []).append((r.doc_id, round(r.score, 6)))
+    assert wand
+    for qid, text in FROZEN_QUERIES:
+        hits = searcher.search(text, 5)
+        assert all(type(d) is int and type(s) is float for d, s in hits), f"q{qid}"
+        assert [(d, round(s, 6)) for d, s in hits] == wand.get(qid, []), f"q{qid}"

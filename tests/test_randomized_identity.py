@@ -12,7 +12,7 @@ import random
 import pytest
 
 from splade_spark.build.indexer import build_index_from_docs
-from splade_spark.build.segments import pack_segment, with_segment_id
+from splade_spark.build.segments import pack_segment, unpack_blocks, with_segment_id
 from splade_spark.config import DEFAULT, EngineConfig
 from splade_spark.oracle import PandasOracle
 from splade_spark.query.local import LocalSearcher
@@ -64,11 +64,7 @@ def test_randomized_three_way(spark, seed, vocab, block_size, n_segments):
     wand = {}
     for r in topk_wand(qdf, blocks, frames.dictionary, k=5, cfg=cfg).collect():
         wand.setdefault(r.query_id, []).append((r.rank, r.doc_id, round(r.score, 6)))
-    searcher = LocalSearcher(
-        [r.asDict() for r in frames.dictionary.collect()],
-        [r.asDict() for r in blocks.collect()],
-        cfg,
-    )
+    searcher = LocalSearcher(frames.dictionary, unpack_blocks(blocks), cfg)
 
     for qid, text in queries:
         want = [

@@ -81,7 +81,7 @@ def test_wand_negative_weight_terms_exact(spark, setup, monkeypatch):
         want = [(d, round(s, 6)) for d, s in oracle.topk(qtext, k)]
         assert _collect(topk_naive(q, frames.postings, frames.dictionary, k=k)).get(qid, []) == want
         assert _collect(topk_wand(q, blocks, frames.dictionary, k=k)).get(qid, []) == want
-        local = LocalSearcher.from_frames(frames, DEFAULT).search(qtext, k)
+        local = LocalSearcher(frames.dictionary, frames.postings, DEFAULT).search(qtext, k)
         assert [(d, round(s, 6)) for d, s in local] == want
         return blocks, want
 
@@ -121,7 +121,7 @@ def test_wand_negative_weight_terms_exact(spark, setup, monkeypatch):
             return _orig(self, within)
 
         monkeypatch.setattr(cls, "decode", _spy)
-    LocalSearcher.from_frames(neg_frames, DEFAULT).search(qtext, 5)
+    LocalSearcher(neg_frames.dictionary, neg_frames.postings, DEFAULT).search(qtext, 5)
     vocab = {r.term: (r.term_id, r.idf) for r in neg_frames.dictionary.collect()}
     weights = encode_text(qtext, vocab, DEFAULT.analyzer)
     rows = blocks.filter(F.col("term_id").isin(list(weights))).toPandas()
