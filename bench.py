@@ -4,7 +4,8 @@
 Builds the engine's segmented index (``build_segmented_index`` at the
 default ``n_segments_for`` count: 4 segments for sf0.1 with the default
 replicate/expand) from ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1
-fixture, see ``main``) on ``local[$SPARK_GRAFT_CPUS]``, runs every BM25
+fixture, see ``main``) on ``local[$SPARK_GRAFT_CPUS]`` (default: the cores
+this process may run on, ``os.sched_getaffinity``), runs every BM25
 top-k path over that one index, and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -259,7 +260,7 @@ def run_bench(cpus: int, sf_dir: str, replicate: int, workdir: str, expand: int 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     replicate = int(os.environ.get("SPARK_GRAFT_REPLICATE", "8"))
     expand = int(os.environ.get("SPARK_GRAFT_EXPAND", "8"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0

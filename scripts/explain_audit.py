@@ -13,6 +13,7 @@ Checks:
   * decontamination broadcasts the eval-side fingerprints into its fp join
   * WAND is one segment-keyed mapInPandas stream over a term_id-pushed block
     scan — no grouped pandas UDF, no explode (Generate) and no join
+  * the fit's corpus_stats and dictionary are local relations (no RDD scan)
   * sampling plans: uniform sample = TakeOrderedAndProject, mixture sample =
     WindowGroupLimit, token-budget scan = broadcast offsets join with NO
     spark_partition_id anywhere in the plan
@@ -51,9 +52,9 @@ def main() -> None:
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
     frames = build_index_from_docs(docs, NOSTEM)
 
-    def _plan(df) -> str:
+    def _plan(df, mode: str = "formatted") -> str:
         return spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+            df._jdf.queryExecution(), mode
         )
 
     def _own_operators(df) -> str:
@@ -301,7 +302,20 @@ def main() -> None:
             },
         )
 
-        # 11) sampling plans (curation/sampling.py): the shapes that make the
+        # 11) the fit's driver-made tables are local relations: built from
+        # Arrow, not from a list of rows, which would plan as an RDD scan
+        # and run a Python-worker job on every read (the corpus_stats write
+        # paid 0.7-2.3 s for one row)
+        for name, table in (("corpus_stats", frames.corpus_stats),
+                            ("dictionary", frames.dictionary)):
+            check(
+                f"fit {name} is a local relation",
+                _plan(table, "extended"),
+                {"local relation": r"LocalRelation|LocalTableScan"},
+                forbidden={"no RDD scan": r"LogicalRDD|Scan ExistingRDD"},
+            )
+
+        # 12) sampling plans (curation/sampling.py): the shapes that make the
         # family deterministic AND scale-safe — exact-n via per-partition
         # heaps, per-key quotas via WindowGroupLimit, and a prefix scan whose
         # bucket is a pure function of the data (NO spark_partition_id: that

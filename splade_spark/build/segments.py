@@ -61,13 +61,15 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType, DoubleType, FloatType, IntegerType, LongType, StringType,
     StructField, StructType,
 )
 
-from splade_spark.build.codec import decode_blocks, encode_doc_ids, encode_impacts
+from splade_spark.build.codec import decode_blocks, encode_blocks
 from splade_spark.build.postings import surface_term_counts, term_freqs, term_rows
 from splade_spark.build.stats import CorpusFit, fit_corpus
 from splade_spark.config import EngineConfig, DEFAULT
@@ -136,31 +138,52 @@ def iter_sorted_groups(batches, keys: tuple[str, ...]):
         yield carry, group_bounds(*(carry[k].to_numpy() for k in keys))
 
 
+def block_rows(keys: dict[str, np.ndarray], docs: np.ndarray, impacts: np.ndarray,
+               bounds: np.ndarray, block_size: int) -> pd.DataFrame:
+    """Complete (segment, term) groups → their block rows (``BLOCK_SCHEMA``).
+
+    Group g holds the postings ``bounds[g]:bounds[g + 1]`` of ``docs``
+    (ascending) and ``impacts``, and the values ``keys[c][g]`` of the key
+    columns (segment_id, term_id). Each group is cut into runs of
+    ``block_size`` postings; block ids, counts, max impacts and first/last
+    doc ids are array ops over all blocks, and the blobs come from one
+    ``encode_blocks`` call.
+    """
+    sizes = np.diff(bounds)
+    per_group = -(-sizes // block_size)
+    group = np.repeat(np.arange(sizes.size), per_group)
+    block_id = np.arange(group.size) - np.repeat(np.cumsum(per_group) - per_group, per_group)
+    starts = bounds[group] + block_id * block_size
+    ends = np.minimum(starts + block_size, bounds[group + 1])
+    docs_bin, impacts_bin = encode_blocks(docs, impacts, starts)
+    return pd.DataFrame(
+        {
+            **{c: v[group].astype(np.int32) for c, v in keys.items()},
+            "block_id": block_id.astype(np.int32),
+            "n_docs": (ends - starts).astype(np.int32),
+            "max_impact": np.maximum.reduceat(impacts, starts),
+            "first_doc_id": docs[starts],
+            "last_doc_id": docs[ends - 1],
+            "docs_bin": docs_bin,
+            "impacts_bin": impacts_bin,
+        }
+    )
+
+
 def _pack_blocks(arranged: DataFrame, cfg: EngineConfig, postings_of) -> DataFrame:
     """Sorted (segment_id, term_id, doc_id, ...) rows → block rows.
 
     ``postings_of(frame, bounds)`` turns a frame of complete groups into
     (doc_ids, impacts, bounds) — one posting per doc, groups at ``bounds``.
-    Every packer emits its blocks here, so their bytes agree by construction.
+    Every packer emits its blocks through ``block_rows``, once per batch of
+    complete groups, so their bytes agree by construction.
     """
-    block_size = cfg.block_size
-    columns = [f.name for f in BLOCK_SCHEMA.fields]
 
     def _stream(batches):
         for pdf, bounds in iter_sorted_groups(batches, ("segment_id", "term_id")):
-            seg = pdf["segment_id"].to_numpy()
-            tid = pdf["term_id"].to_numpy()
             docs, impacts, post_bounds = postings_of(pdf, bounds)
-            rows = []
-            for g, (s, e) in enumerate(zip(post_bounds[:-1], post_bounds[1:])):
-                for b, start in enumerate(range(s, e, block_size)):
-                    d = docs[start : min(start + block_size, e)]
-                    w = impacts[start : min(start + block_size, e)]
-                    rows.append(
-                        (int(seg[bounds[g]]), int(tid[bounds[g]]), b, len(d), float(w.max()),
-                         int(d[0]), int(d[-1]), encode_doc_ids(d), encode_impacts(w))
-                    )
-            yield pd.DataFrame(rows, columns=columns)
+            keys = {c: pdf[c].to_numpy()[bounds[:-1]] for c in ("segment_id", "term_id")}
+            yield block_rows(keys, docs, impacts, post_bounds, cfg.block_size)
 
     return arranged.mapInPandas(_stream, BLOCK_SCHEMA)
 
@@ -344,8 +367,8 @@ class SegmentedIndex:
         return reduce(DataFrame.unionByName, parts)
 
     def segments_table(self, spark: SparkSession) -> DataFrame:
-        """The `segments` lineage/metrics table (SURVEY.md §1.3), from manifests."""
-        rows = list(self.committed_segments().values())
+        """The `segments` lineage/metrics table (SURVEY.md §1.3), from
+        manifests — a local relation, no job to build it."""
         schema = StructType(
             [
                 StructField("segment_id", IntegerType()),
@@ -357,14 +380,10 @@ class SegmentedIndex:
                 StructField("lineage", StringType()),
             ]
         )
-        data = [
-            (
-                int(r["segment_id"]), r["status"], int(r["n_docs"]),
-                int(r["n_postings"]), int(r["bytes"]), r["built_ts"], r["lineage"],
-            )
-            for r in rows
-        ]
-        return SparkSession.getActiveSession().createDataFrame(data, schema)
+        rows = [{f.name: r[f.name] for f in schema} for r in self.committed_segments().values()]
+        return spark.createDataFrame(
+            pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+        )
 
 
 def _commit_manifest(index: SegmentedIndex, rec: dict, manifest_dir: str | None = None) -> None:

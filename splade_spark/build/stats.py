@@ -30,6 +30,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from itertools import accumulate
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from splade_spark.build.postings import surface_term_counts, term_freqs
@@ -53,9 +54,11 @@ class CorpusFit:
     surface: DataFrame
 
     def corpus_stats(self) -> DataFrame:
-        """The one-row corpus_stats table (n_docs long, avgdl double)."""
+        """The one-row corpus_stats table (n_docs long, avgdl double), a
+        local relation (an Arrow table; no job to build it)."""
         return self.dictionary.sparkSession.createDataFrame(
-            [(self.n_docs, self.avgdl)], "n_docs long, avgdl double"
+            pa.table({"n_docs": pa.array([self.n_docs], pa.int64()),
+                      "avgdl": pa.array([self.avgdl], pa.float64())})
         )
 
     def unpersist(self) -> None:
@@ -142,9 +145,6 @@ def _dictionary_local(rows, n_docs: int, cfg: EngineConfig, spark) -> DataFrame:
     rounding.
     """
     import numpy as np
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, LongType, StringType, StructField, StructType,
-    )
 
     # sorted first: the mean then sums in one order whatever order the df
     # rows were collected in, so idf is the same from run to run
@@ -153,16 +153,18 @@ def _dictionary_local(rows, n_docs: int, cfg: EngineConfig, spark) -> DataFrame:
     raw = np.log((float(n_docs) - dfv + 0.5) / (dfv + 0.5))
     avg_raw = float(raw.mean()) if len(raw) else 0.0
     idf = np.where(raw < 0.0, float(cfg.epsilon) * avg_raw, raw)
-    schema = StructType(
-        [
-            StructField("term", StringType()),
-            StructField("term_id", IntegerType()),
-            StructField("df", LongType()),
-            StructField("idf", DoubleType()),
-        ]
+    # an Arrow table plans as a local relation; a list of rows would plan
+    # as an RDD scan and run a Python-worker job on every read
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "term": pa.array([r["term"] for r in rows], pa.string()),
+                "term_id": pa.array(np.arange(len(rows), dtype=np.int32)),
+                "df": pa.array(dfv.astype(np.int64)),
+                "idf": pa.array(idf),
+            }
+        )
     )
-    data = [(r["term"], tid, int(r["df"]), float(idf[tid])) for tid, r in enumerate(rows)]
-    return spark.createDataFrame(data, schema)
 
 
 def _dictionary_distributed(df: DataFrame, n_docs: int, cfg: EngineConfig) -> DataFrame:

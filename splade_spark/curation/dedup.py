@@ -21,6 +21,7 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from splade_spark.dense.hash_embed import portable_hash
@@ -115,7 +116,7 @@ def _minhash_seed_df(spark, n_hashes: int) -> DataFrame:
     a = rng.integers(1, MINHASH_PRIME, size=n_hashes, dtype=np.int64) | 1
     b = rng.integers(0, MINHASH_PRIME, size=n_hashes, dtype=np.int64)
     return spark.createDataFrame(
-        [(int(i), int(a[i]), int(b[i])) for i in range(n_hashes)], ["i", "a", "b"]
+        pa.table({"i": np.arange(n_hashes, dtype=np.int64), "a": a, "b": b})
     )
 
 

@@ -9,6 +9,8 @@ FROZEN: regenerating requires a documented spec change; the same literal list
 is embedded in the DuckDB oracle SQL (__spark_entry__.py).
 """
 
+import pyarrow as pa
+
 FROZEN_QUERIES: list[tuple[int, str]] = [
     (0, 'a sort'),
     (1, 'dup dup column sort'),
@@ -64,4 +66,7 @@ FROZEN_QUERIES: list[tuple[int, str]] = [
 
 
 def queries_df(spark):
-    return spark.createDataFrame(FROZEN_QUERIES, ["query_id", "text"])
+    ids, texts = zip(*FROZEN_QUERIES)
+    return spark.createDataFrame(
+        pa.table({"query_id": pa.array(ids, pa.int64()), "text": pa.array(texts, pa.string())})
+    )

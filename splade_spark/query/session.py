@@ -35,6 +35,7 @@ reference's `collection.load()` + per-query search REPL trade
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from splade_spark.config import EngineConfig, DEFAULT
@@ -141,8 +142,8 @@ class InteractiveSession:
             return None
         if len(weights) > _MAX_LITERAL_TERMS:
             qdf = self._spark.createDataFrame(
-                [(int(t), float(w)) for t, w in weights.items()],
-                "term_id long, _qw double",
+                pa.table({"term_id": pa.array(list(weights), pa.int64()),
+                          "_qw": pa.array(list(weights.values()), pa.float64())})
             )
             scored = (
                 self.postings.join(F.broadcast(qdf), "term_id")

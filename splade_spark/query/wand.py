@@ -15,12 +15,12 @@ replacement; the per-partition scoring + global merge of REPOSE):
                  pushdown, min/max on term_id prunes row groups; no join
     score        repartition + sort by (segment_id, term_id, block_id), one
                  mapInPandas stream cut into segment groups; each group
-                 scores every query over lazily decoded term lists
-                 (``_TermBlocks``): a term is decoded at most once per
-                 group, and a negative-weight term looked up at the
-                 survivors decodes only the blocks whose
-                 [first_doc_id, last_doc_id] range holds one (the block-max
-                 skip)
+                 scores every query over its term lists (``_TermBlocks``):
+                 every term some query weights positively is decoded in one
+                 ``decode_blocks`` call per group; a term only ever weighted
+                 negatively stays lazy, so looking it up at the survivors
+                 decodes only the blocks whose [first_doc_id, last_doc_id]
+                 range holds one (the block-max skip)
     merge        per_query_topk over the per-segment candidates
 
 The stream's parallelism is the segment count: on an index with fewer
@@ -33,6 +33,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from splade_spark.build.codec import decode_blocks
@@ -52,12 +53,13 @@ _HIT_SCHEMA = StructType(
 
 
 class _TermBlocks:
-    """One term's blocks in one group (block order), decoded on demand."""
+    """One term's blocks in one group (block order), decoded on demand
+    unless the group hands over its full ``decoded`` (docs, impacts)."""
 
-    def __init__(self, cols: dict):
+    def __init__(self, cols: dict, decoded: tuple | None = None):
         self.cols = cols
         self.bound = float(cols["max_impact"].max())
-        self._all = None
+        self._all = decoded
 
     def decode(self, within: np.ndarray | None = None):
         c = self.cols
@@ -74,12 +76,27 @@ class _TermBlocks:
 
 def _score_group(cols: dict, s: int, e: int, queries: dict, k: int):
     """Rows [s, e) of one segment, sorted by (term_id, block_id) →
-    (query_ids, doc_ids, scores) of each query's segment top-k."""
-    tids = cols["term_id"]
-    bounds = s + group_bounds(tids[s:e])
+    (query_ids, doc_ids, scores) of each query's segment top-k.
+
+    A term with a positive weight in some query is always decoded whole, so
+    all such terms decode in one ``decode_blocks`` call; the others (only
+    ever negative) stay lazy for the kernel's block-range skip.
+    """
+    group = {c: v[s:e] for c, v in cols.items()}
+    bounds = group_bounds(group["term_id"])
+    tids = group["term_id"][bounds[:-1]]
+    positive = [t for w in queries.values() for t, x in w.items() if x > 0]
+    eager = np.isin(tids, positive)
+    rows = np.repeat(eager, np.diff(bounds))
+    docs, impacts = decode_blocks(
+        group["docs_bin"][rows], group["impacts_bin"][rows], group["n_docs"][rows]
+    )
+    cuts = np.cumsum(np.add.reduceat(group["n_docs"], bounds[:-1])[eager])[:-1]
+    decoded = iter(zip(np.split(docs, cuts), np.split(impacts, cuts)))
     lists = {
-        int(tids[a]): _TermBlocks({c: v[a:b] for c, v in cols.items()})
-        for a, b in zip(bounds[:-1], bounds[1:])
+        int(t): _TermBlocks({c: v[a:b] for c, v in group.items()},
+                            next(decoded) if hot else None)
+        for t, hot, a, b in zip(tids, eager, bounds[:-1], bounds[1:])
     }
     qids, docs, scores = [], [], []
     for qid, weights in queries.items():
@@ -102,7 +119,7 @@ def topk_wand(
     spark = blocks.sparkSession
     weights_by_query = encode_query_set(queries, dictionary, cfg)
     if not weights_by_query:
-        return per_query_topk(spark.createDataFrame([], _HIT_SCHEMA), k)
+        return per_query_topk(spark.createDataFrame(to_arrow_schema(_HIT_SCHEMA).empty_table()), k)
     wanted = sorted({t for w in weights_by_query.values() for t in w})
     arranged = (
         blocks.filter(F.col("term_id").isin(wanted))  # seek
