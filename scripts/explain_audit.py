@@ -14,6 +14,9 @@ Checks:
   * WAND is one segment-keyed mapInPandas stream over a term_id-pushed block
     scan — no grouped pandas UDF, no explode (Generate) and no join
   * the fit's corpus_stats and dictionary are local relations (no RDD scan)
+  * one packer: pack_segment over the fit's postings hands Python exactly
+    (segment_id, term_id, doc_id, impact) — the impact math stays in the
+    projection — through exactly one shuffle from the postings source
   * sampling plans: uniform sample = TakeOrderedAndProject, mixture sample =
     WindowGroupLimit, token-budget scan = broadcast offsets join with NO
     spark_partition_id anywhere in the plan
@@ -362,6 +365,31 @@ def main() -> None:
             forbidden={
                 "no physical-partition-id dependence": r"(?i)spark_partition_id",
             },
+        )
+
+        # 13) one packer over the one posting derivation (CorpusFit.postings,
+        # which IndexFrames.postings is): the BM25 impact is computed in the
+        # projection ahead of the exchange, so the pack stream's input is
+        # exactly the four packed columns (no tf or doclen crosses into
+        # Python), and the only shuffle between MapInPandas and the fit's
+        # cached tf scan is the (segment, term) exchange
+        packed = _plan(pack_segment(with_segment_id(frames.postings, par)))
+        tree = packed.split("\n\n")[0]
+        to_source = tree[tree.find("MapInPandas"):tree.find("InMemoryTableScan")]
+        check(
+            "one packer",
+            packed,
+            {
+                "pack stream input is the four packed columns":
+                    r"MapInPandas\nInput \[4\]: \[segment_id#\d+, term_id#\d+, "
+                    r"doc_id#\d+L, impact#\d+\]\n",
+            },
+        )
+        check(
+            "one packer (MapInPandas down to the postings source)",
+            to_source,
+            {"one shuffle": r"\bExchange \(\d+\)"},
+            forbidden={"no second shuffle": r"(?s)\bExchange \(\d+\).*\bExchange \(\d+\)"},
         )
 
     print("\n" + ("ALL CHECKS PASSED" if not failures else f"FAILURES: {failures}"))

@@ -7,12 +7,14 @@ Composes the build stages (SURVEY.md §3.1 Spark lifecycle):
              → stats.fit_corpus: surface tf (shuffle-free run-length encode,
                cached), stemmed via the broadcast distinct-term stem map,
                → N, avgdl + dictionary (A2/B3)
-             → postings.term_rows (broadcast dictionary: term → term_id)
-             → doc_impacts (B4, codegen column math, avgdl a literal)
+             → CorpusFit.postings: postings.term_rows (broadcast dictionary:
+               term → term_id) → doc_impacts (B4, codegen column math,
+               avgdl a literal)
 
 Physical segment packing / persistence lives in build/segments.py, which
-runs the same fit and the same ``term_rows``; this module produces the
-logical frames the naive query path and the oracle entries read.
+runs the same fit and packs the same ``CorpusFit.postings`` rows; this
+module produces the logical frames the naive query path and the oracle
+entries read.
 """
 
 from __future__ import annotations
@@ -22,7 +24,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from splade_spark.build.chunker import attach_tokens, chunk_pages, docs_from_chunks
-from splade_spark.build.postings import doc_impacts, term_rows
 from splade_spark.build.stats import fit_corpus
 from splade_spark.config import EngineConfig, DEFAULT
 
@@ -45,10 +46,9 @@ def _assemble(docs: DataFrame, cfg: EngineConfig) -> IndexFrames:
     slim = docs.drop("tokens", "doclen").cache()
     docs = attach_tokens(slim)
     fit = fit_corpus(docs, slim.count(), cfg)
-    postings = doc_impacts(term_rows(fit.tf, fit.dictionary), fit.avgdl, cfg)
     return IndexFrames(
         docs, fit.corpus_stats(), fit.dictionary,
-        postings.select("term_id", "doc_id", "impact", "tf"),
+        fit.postings(cfg).select("term_id", "doc_id", "impact", "tf"),
     )
 
 

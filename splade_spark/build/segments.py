@@ -31,14 +31,15 @@ Spark-native layout designed for 10^12-doc scale:
                                        segment's data lands; its presence IS
                                        the checkpoint.
 
-* **One fit, one posting-row derivation, one segment writer.** A fresh
-  build packs ``postings.term_rows`` straight from the in-memory
-  ``stats.fit_corpus``; a resumed build and a streamed micro-batch
-  (streaming/incremental.py) derive the same rows against the stored fit
-  (``SegmentedIndex.stored_fit``); compaction (scripts/compact_index.py)
-  re-blocks with ``merge_segments``. All commit with ``write_segments`` and
-  differ only in their rows, their lineage keys and where ``n_docs`` comes
-  from.
+* **One fit, one posting derivation, one packer, one segment writer.** A
+  fresh build packs ``CorpusFit.postings`` (``term_rows`` → ``doc_impacts``)
+  straight from the in-memory ``stats.fit_corpus``; a resumed build and a
+  streamed micro-batch (streaming/incremental.py) derive the same rows
+  against the stored fit (``SegmentedIndex.stored_fit``); compaction
+  (scripts/compact_index.py) re-blocks decoded postings with
+  ``merge_segments``. All pack with ``pack_segment``, commit with
+  ``write_segments``, and differ only in their rows, their lineage keys
+  and where ``n_docs`` comes from.
 
 * **Resume.** ``build_segmented_index`` recomputes nothing for segments whose
   manifest exists (kill the build after segment 1, rerun → segments 2..N only;
@@ -70,7 +71,7 @@ from pyspark.sql.types import (
 )
 
 from splade_spark.build.codec import decode_blocks, encode_blocks
-from splade_spark.build.postings import surface_term_counts, term_freqs, term_rows
+from splade_spark.build.postings import doc_impacts, surface_term_counts, term_freqs
 from splade_spark.build.stats import CorpusFit, fit_corpus
 from splade_spark.config import EngineConfig, DEFAULT
 
@@ -170,89 +171,59 @@ def block_rows(keys: dict[str, np.ndarray], docs: np.ndarray, impacts: np.ndarra
     )
 
 
-def _pack_blocks(arranged: DataFrame, cfg: EngineConfig, postings_of) -> DataFrame:
-    """Sorted (segment_id, term_id, doc_id, ...) rows → block rows.
-
-    ``postings_of(frame, bounds)`` turns a frame of complete groups into
-    (doc_ids, impacts, bounds) — one posting per doc, groups at ``bounds``.
-    Every packer emits its blocks through ``block_rows``, once per batch of
-    complete groups, so their bytes agree by construction.
-    """
-
-    def _stream(batches):
-        for pdf, bounds in iter_sorted_groups(batches, ("segment_id", "term_id")):
-            docs, impacts, post_bounds = postings_of(pdf, bounds)
-            keys = {c: pdf[c].to_numpy()[bounds[:-1]] for c in ("segment_id", "term_id")}
-            yield block_rows(keys, docs, impacts, post_bounds, cfg.block_size)
-
-    return arranged.mapInPandas(_stream, BLOCK_SCHEMA)
-
-
-def _arrange(rows: DataFrame, cols: list[str]) -> DataFrame:
-    """Shuffle rows to their (segment, term) group, sorted by doc within it."""
-    if "segment_id" not in rows.columns:
-        rows = rows.withColumn("segment_id", F.lit(0))
-    return (
-        rows.select("segment_id", "term_id", "doc_id", *cols)
-        .repartition(rows.sparkSession.sparkContext.defaultParallelism * 2,
-                     "segment_id", "term_id")
-        .sortWithinPartitions("segment_id", "term_id", "doc_id")
-    )
-
-
 def pack_segment(postings: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
-    """postings(term_id, doc_id, impact[, segment_id]) → block rows.
+    """postings(term_id, doc_id, impact[, segment_id]) → block rows — the one
+    packer (``CorpusFit.postings`` rows in every build, decoded postings in
+    ``merge_segments``).
 
     If ``segment_id`` is absent everything is packed as segment 0.
 
     Physical shape (SURVEY.md §2.3 B5): repartition on (segment_id, term_id)
     → sortWithinPartitions(segment_id, term_id, doc_id) → ONE streaming
-    ``mapInPandas`` pass that detects group boundaries in the already-sorted
-    Arrow batches and emits packed blocks. Compared with per-group
-    applyInPandas this removes the per-group pandas materialization AND the
-    python-side sort — the sort happens in Spark's shuffle machinery
-    (tungsten, spillable). Group size stays capped by segment_max_docs.
+    ``mapInPandas`` pass that re-cuts the already-sorted Arrow batches at
+    group boundaries (``iter_sorted_groups``) and emits each batch's blocks
+    with one ``block_rows`` call. Only the four packed columns cross into
+    Python: the impact math is a Catalyst projection ahead of the exchange.
+    The sort happens in Spark's shuffle machinery (tungsten, spillable), and
+    group size stays capped by segment_max_docs.
     """
+    if "segment_id" not in postings.columns:
+        postings = postings.withColumn("segment_id", F.lit(0))
+    keys = ("segment_id", "term_id")
+    arranged = (
+        postings.select(*keys, "doc_id", "impact")
+        .repartition(postings.sparkSession.sparkContext.defaultParallelism * 2, *keys)
+        .sortWithinPartitions(*keys, "doc_id")
+    )
 
-    def postings_of(pdf, bounds):
-        return pdf["doc_id"].to_numpy(), pdf["impact"].to_numpy(dtype=np.float64), bounds
+    def _stream(batches):
+        for pdf, bounds in iter_sorted_groups(batches, keys):
+            yield block_rows(
+                {c: pdf[c].to_numpy()[bounds[:-1]] for c in keys},
+                pdf["doc_id"].to_numpy(), pdf["impact"].to_numpy(dtype=np.float64),
+                bounds, cfg.block_size,
+            )
 
-    return _pack_blocks(_arrange(postings, ["impact"]), cfg, postings_of)
+    return arranged.mapInPandas(_stream, BLOCK_SCHEMA)
 
 
-def pack_segment_from_tf(
-    rows: DataFrame, avgdl: float, cfg: EngineConfig = DEFAULT
-) -> DataFrame:
-    """rows(term_id, doc_id, tf, doclen[, segment_id]) → packed block rows —
-    phase 1 of every build (``postings.term_rows`` rows, the fit's avgdl).
-
-    Impacts are computed inside the pack stream: the impact math replicates
-    ``postings.doc_impacts`` op-for-op in float64 (same associativity), and
-    blocks come out of the same emitter as ``pack_segment``'s, so they are
-    byte-identical to the doc_impacts → pack_segment route
-    (tests/test_segments.py::test_pack_from_tf_byte_identical). Duplicate
-    (term_id, doc_id) rows — pre-fold stemmed partials, two surface forms of
-    one stemmed term in one doc — land adjacent under the (segment, term,
-    doc) sort and are summed with a vectorized ``reduceat`` first, so
-    unfolded rows pack to the same bytes as folded ones.
-    """
-    k1, b = float(cfg.k1), float(cfg.b)
-    avgdl = float(avgdl)
-
-    def postings_of(pdf, bounds):
-        seg, tid, doc = (pdf[c].to_numpy() for c in ("segment_id", "term_id", "doc_id"))
-        first = group_bounds(seg, tid, doc)[:-1]  # one run per (group, doc)
-        tf = np.add.reduceat(pdf["tf"].to_numpy(), first).astype(np.float64)
-        dl = pdf["doclen"].to_numpy()[first].astype(np.float64)
-        norm = tf + k1 * ((1.0 - b) + (b * dl) / avgdl)
-        impacts = (tf * (k1 + 1.0)) / norm
-        return doc[first], impacts, np.searchsorted(first, bounds)
-
-    return _pack_blocks(_arrange(rows, ["tf", "doclen"]), cfg, postings_of)
+# perfbench/run.py's traced build imports the name below and feeds it
+# unfolded stem partials; it goes when the benchmark itself next changes.
+def pack_segment_from_tf(rows: DataFrame, avgdl: float, cfg: EngineConfig = DEFAULT) -> DataFrame:
+    """rows(segment_id, term_id, doc_id, tf, doclen) → block rows: duplicate
+    (segment, term, doc) partials summed in Catalyst, then ``doc_impacts`` →
+    ``pack_segment``."""
+    merged = rows.groupBy("segment_id", "term_id", "doc_id").agg(
+        F.sum("tf").alias("tf"), F.first("doclen").alias("doclen")
+    )
+    return pack_segment(doc_impacts(merged, avgdl, cfg), cfg)
 
 
 def unpack_blocks(blocks: DataFrame) -> DataFrame:
-    """Inverse of pack_segment — block rows → long-form postings (for tests/merge)."""
+    """Inverse of pack_segment — block rows → long-form (segment_id, term_id,
+    doc_id, impact) postings: the library's one block reader
+    (``merge_segments``, ``LocalSearcher.load``, scripts/query_index.py,
+    bench.py and perfbench's naive and session paths)."""
     out_schema = StructType(
         [
             StructField("segment_id", IntegerType()),
@@ -542,7 +513,8 @@ def build_segmented_index(
     Phase 0 (global fit, ONE checkpoint): chunk+analyze → ``fit_corpus`` →
     corpus_stats + dictionary, persisted together; a rerun skips it only
     when both exist and otherwise refits both. Phase 1 (per segment,
-    checkpointed): ``term_rows`` → pack → ``write_segments``. A run that
+    checkpointed): ``CorpusFit.postings`` → ``pack_segment`` →
+    ``write_segments``. A run that
     just fitted packs the fit it holds in memory (nothing is read back); a
     run that skipped the fit derives the rows against the stored fit
     (``SegmentedIndex.stored_fit``). Rerunning skips any segment with a
@@ -656,12 +628,10 @@ def build_segmented_index(
             # a serial floor that dominated build time at bench scale. Crash
             # mid-write leaves no new manifests → the whole pending set
             # rebuilds; committed segments stay untouched.
-            rows = with_segment_id(term_rows(fit.tf, fit.dictionary), n_segments)
+            rows = with_segment_id(fit.postings(cfg), n_segments)
             write_segments(
                 index,
-                pack_segment_from_tf(
-                    rows.filter(F.col("segment_id").isin(pending)), fit.avgdl, cfg
-                ),
+                pack_segment(rows.filter(F.col("segment_id").isin(pending)), cfg),
                 docs_per_segment(docs, n_segments, pending),
                 {"segment_of": n_segments, "assign": _HASH_ASSIGN},
                 cfg,

@@ -33,7 +33,7 @@ from itertools import accumulate
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, functions as F
 
-from splade_spark.build.postings import surface_term_counts, term_freqs
+from splade_spark.build.postings import doc_impacts, surface_term_counts, term_freqs, term_rows
 from splade_spark.config import EngineConfig, DEFAULT
 
 
@@ -60,6 +60,12 @@ class CorpusFit:
             pa.table({"n_docs": pa.array([self.n_docs], pa.int64()),
                       "avgdl": pa.array([self.avgdl], pa.float64())})
         )
+
+    def postings(self, cfg: EngineConfig = DEFAULT) -> DataFrame:
+        """(term_id, doc_id, tf, doclen, impact) rows of ``tf`` — the one
+        posting derivation every build packs: ``term_rows`` against the
+        dictionary, then ``doc_impacts`` with this fit's avgdl."""
+        return doc_impacts(term_rows(self.tf, self.dictionary), self.avgdl, cfg)
 
     def unpersist(self) -> None:
         self.dictionary.unpersist()

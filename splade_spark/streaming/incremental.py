@@ -10,13 +10,14 @@ Design decisions:
 
 * ``foreachBatch`` drives the SAME code path as a resumed
   build_segmented_index: ``SegmentedIndex.stored_fit`` (the batch's tf over
-  one cached surface, against the stored fit) → ``postings.term_rows`` →
-  ``pack_segment_from_tf`` → ``write_segments`` — one implementation of the
-  posting rows, the physical format and the segment commit, two drivers
-  (batch + streaming). Segment ids for streamed segments are
-  ``base + batch_id``; manifests carry the same fields (lineage records the
-  stream batch instead of ``segment_of``), so merge/query treat streamed
-  segments exactly like batch-built ones.
+  one cached surface, against the stored fit) → ``CorpusFit.postings``
+  (``term_rows`` → ``doc_impacts``) → ``pack_segment`` → ``write_segments``
+  — one implementation of the posting rows, the packer, the physical
+  format and the segment commit, two drivers (batch + streaming). Streamed
+  segment ids are ``STREAM_SEGMENT_BASE + batch_id``; manifests carry the
+  same fields (lineage records the stream batch instead of
+  ``segment_of``), so merge/query treat streamed segments exactly like
+  batch-built ones.
 * Global BM25 stats (dictionary/corpus_stats) come from a FIT PREFIX: the
   dictionary is fit once on the initial corpus (or a prior batch build) and
   streamed segments encode against that frozen fit. That matches the
@@ -48,35 +49,35 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from splade_spark.config import EngineConfig, DEFAULT
 
+# Streamed micro-batch K commits segment STREAM_SEGMENT_BASE + K — clear of
+# the hash segments 0..n-1 of any batch build below 1000 segments.
+STREAM_SEGMENT_BASE = 1000
+
 
 def stream_build_segments(
     pages_stream: DataFrame,
     index_dir: str,
     cfg: EngineConfig = DEFAULT,
     use_html: bool = True,
-    base_segment_id: int = 1000,
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
 ):
     """readStream(web_pages) → one committed segment per micro-batch.
 
     Requires a fitted index at ``index_dir`` (dictionary + corpus_stats from
-    a prior batch build). Returns the StreamingQuery; with
-    ``trigger_once=True`` (default) processes all available input then stops
-    — the batch-incremental mode that needs no long-running driver.
+    a prior batch build). Micro-batch K commits segment
+    ``STREAM_SEGMENT_BASE + K``. The trigger is ``availableNow``: the query
+    processes all available input then stops — the batch-incremental mode
+    that needs no long-running driver. Returns the StreamingQuery.
     """
     from pyspark.sql import Observation
 
     from splade_spark.build.chunker import chunk_pages, docs_from_chunks
-    from splade_spark.build.postings import term_rows
-    from splade_spark.build.segments import (
-        SegmentedIndex, pack_segment_from_tf, write_segments,
-    )
+    from splade_spark.build.segments import SegmentedIndex, pack_segment, write_segments
 
     index = SegmentedIndex(index_dir)
 
     def _process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        seg_id = base_segment_id + int(batch_id)
+        seg_id = STREAM_SEGMENT_BASE + int(batch_id)
         docs = docs_from_chunks(chunk_pages(batch_df, cfg, use_html=use_html), cfg)
         # Persist this batch's chunk docs so a later refit_compact can re-fit
         # over the FULL corpus. Tokens and doclen are dropped (derived
@@ -96,12 +97,9 @@ def stream_build_segments(
         )
         fit = index.stored_fit(docs, cfg)
         try:
-            rows = term_rows(fit.tf, fit.dictionary)
             write_segments(
                 index,
-                pack_segment_from_tf(
-                    rows.withColumn("segment_id", F.lit(seg_id).cast("int")), fit.avgdl, cfg
-                ),
+                pack_segment(fit.postings(cfg).withColumn("segment_id", F.lit(seg_id)), cfg),
                 {seg_id: int(obs.get["n_docs"])},
                 {"stream_batch_id": int(batch_id), "mode": "streaming-foreachBatch"},
                 cfg,
@@ -112,9 +110,7 @@ def stream_build_segments(
     writer = pages_stream.writeStream.foreachBatch(_process_batch).outputMode("append")
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def refit_compact(

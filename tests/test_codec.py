@@ -256,8 +256,8 @@ def test_decode_blocks_empty_run():
 
 
 def _tuple_loop(seg, tid, docs, impacts, bounds, block_size):
-    """The per-block tuple loop ``segments._pack_blocks`` ran before
-    ``block_rows``: one tuple and one encode per block."""
+    """The per-block tuple loop the packer ran before ``block_rows``: one
+    tuple and one encode per block."""
     rows = []
     for g, (s, e) in enumerate(zip(bounds[:-1], bounds[1:])):
         for b, start in enumerate(range(s, e, block_size)):

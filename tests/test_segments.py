@@ -127,9 +127,10 @@ def test_segmented_build_and_resume(spark, frames, tmp_path):
 
 
 def test_pack_from_tf_byte_identical(spark):
-    """The one-exchange phase-1 path (pack_segment_from_tf: merge stemmed
-    partials + compute impacts inside the pack stream) must produce blocks
-    byte-identical to the generic fold→impacts→pack route."""
+    """pack_segment_from_tf (the forward perfbench's traced build calls:
+    unfolded stem partials merged by a Catalyst aggregate, then
+    doc_impacts → pack_segment) must produce blocks byte-identical to the
+    engine's fold→impacts→pack route."""
     import duckdb
 
     from splade_spark.build.indexer import build_index_from_docs
@@ -170,11 +171,11 @@ def test_pack_from_tf_byte_identical(spark):
     assert ref == got and len(ref) > 50
 
 
-def _blocks_digest(spark, idx_dir):
-    """sha256 over the committed block rows in (segment, term, block) order."""
+def _blocks_digest(blocks):
+    """sha256 over block rows in (segment, term, block) order."""
     import hashlib
 
-    rows = SegmentedIndex(idx_dir).blocks(spark).select(
+    rows = blocks.select(
         "segment_id", "term_id", "block_id", "n_docs", "max_impact",
         "first_doc_id", "last_doc_id", "docs_bin", "impacts_bin",
     ).collect()
@@ -193,7 +194,7 @@ def test_fit_is_one_checkpoint(spark, tmp_path):
     pages = web_pages_from_documents(read_documents(spark, SF_SMALL))
     idx_dir = str(tmp_path / "idx")
     idx = build_segmented_index(pages, idx_dir, DEFAULT, n_segments=3)
-    digest = _blocks_digest(spark, idx_dir)
+    digest = _blocks_digest(idx.blocks(spark))
     stats = idx.corpus_stats(spark).collect()
     dic = {r.term: (r.term_id, r.df) for r in idx.dictionary(spark).collect()}
     manifest_1 = idx.committed_segments()[1]
@@ -205,7 +206,7 @@ def test_fit_is_one_checkpoint(spark, tmp_path):
 
     assert idx.corpus_stats(spark).collect() == stats
     assert {r.term: (r.term_id, r.df) for r in idx.dictionary(spark).collect()} == dic
-    assert _blocks_digest(spark, idx_dir) == digest
+    assert _blocks_digest(idx.blocks(spark)) == digest
     rebuilt = idx.committed_segments()[1]
     assert (rebuilt["n_docs"], rebuilt["n_postings"]) == (
         manifest_1["n_docs"], manifest_1["n_postings"]
@@ -213,8 +214,10 @@ def test_fit_is_one_checkpoint(spark, tmp_path):
 
 
 def test_frames_and_segmented_fit_agree(spark, frames, tmp_path):
-    """build_index_frames and build_segmented_index run the one fit: their
-    corpus_stats and (term, term_id, df, idf) dictionary rows are identical."""
+    """build_index_frames and build_segmented_index run the one fit and the
+    one posting derivation: their corpus_stats and (term, term_id, df, idf)
+    dictionary rows are identical, and the segmented index's blocks are the
+    bytes pack_segment makes of the frames' postings."""
     pages = web_pages_from_documents(read_documents(spark, SF_SMALL))
     idx = build_segmented_index(pages, str(tmp_path / "idx"), DEFAULT, n_segments=2)
     assert idx.corpus_stats(spark).collect() == frames.corpus_stats.collect()
@@ -222,3 +225,5 @@ def test_frames_and_segmented_fit_agree(spark, frames, tmp_path):
     got = sorted(map(tuple, idx.dictionary(spark).select(*cols).collect()))
     assert got == sorted(map(tuple, frames.dictionary.select(*cols).collect()))
     assert len(got) > 20
+    packed = pack_segment(with_segment_id(frames.postings, 2), DEFAULT)
+    assert _blocks_digest(idx.blocks(spark)) == _blocks_digest(packed)
