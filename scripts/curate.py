@@ -75,7 +75,7 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         except ValueError:
             ap.error(f"--mix must be key=weight[,key=weight...], got {args.mix!r}")
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import Observation, SparkSession, functions as F
 
     owns_spark = spark is None
     if owns_spark:
@@ -86,9 +86,12 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     written: dict[str, int] = {}
 
     def _write(name: str, df) -> None:
-        path = os.path.join(args.output, f"{name}.parquet")
-        df.write.mode("overwrite").parquet(path)
-        written[name] = spark.read.parquet(path).count()
+        # the row count rides the write job as an observed aggregate
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
+            os.path.join(args.output, f"{name}.parquet")
+        )
+        written[name] = int(obs.get["n"])
 
     for op in ops:
         if op == "stats":

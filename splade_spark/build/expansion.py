@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from splade_spark.config import EngineConfig, DEFAULT
+from splade_spark.query.encode import query_term_counts
+from splade_spark.query.naive import score_naive
 from splade_spark.query.topk import per_query_topk
 
 
@@ -116,13 +118,7 @@ def splade_encode_queries(
     Own terms: qtf·idf. Expansions: weight·idf(term_b), max-pooled per
     (query, term). OOV terms drop out via the dictionary join as in B9.
     """
-    from splade_spark.text.udfs import analyze_udf
-
-    qterms = (
-        queries.select("query_id", F.explode(analyze_udf(cfg.analyzer)(F.col("text"))).alias("term"))
-        .groupBy("query_id", "term")
-        .agg(F.count(F.lit(1)).cast("double").alias("qtf"))
-    )
+    qterms = query_term_counts(queries, cfg)
     dic = F.broadcast(dictionary.select("term", "term_id", "idf"))
     own = qterms.join(dic, "term").select(
         "query_id", "term_id", (F.col("qtf") * F.col("idf")).alias("qweight")
@@ -154,9 +150,4 @@ def topk_splade(
     doc_side = splade_doc_impacts(impacts, expansion)
     posting = doc_side.join(dic, "term").select("term_id", "doc_id", "impact")
     encoded = splade_encode_queries(queries, frames.dictionary, expansion, cfg)
-    scored = (
-        posting.join(F.broadcast(encoded), "term_id")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("qweight") * F.col("impact")).alias("score"))
-    )
-    return per_query_topk(scored, k)
+    return per_query_topk(score_naive(encoded, posting), k)

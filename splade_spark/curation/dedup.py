@@ -1,8 +1,13 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash.
 
 All hot paths are Catalyst column math / joins — no Python UDFs. Hashes that
-feed results use the md5-prefix portable hash (dense/hash_embed.py) so the
+feed results use the md5-prefix portable hash (text/hashing.py) so the
 DuckDB oracle replays them bit-exactly.
+
+Three building blocks serve every pair-finding operator here, in
+curation/fingerprint.py and in dense/ann.py: ``cap_bucket_sizes`` (the one
+hot-key cap), ``shared_key_pairs`` (the one id-pair self-join on a shared
+key) and ``with_jaccard`` (the one set Jaccard over a key relation).
 
 Scale notes (100 TB):
 * exact_dups — one shuffle on the 16-byte text digest; combiner-friendly.
@@ -24,7 +29,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from splade_spark.dense.hash_embed import portable_hash
+from splade_spark.text.hashing import portable_hash
 
 MINHASH_PRIME = 2147483647  # 2^31 - 1 (Mersenne), arithmetic stays in long range
 SEED_SHINGLE = 101
@@ -32,11 +37,13 @@ SEED_SIMHASH = 7
 
 # Default hot-bucket cap for every LSH band self-join (VERDICT r3 Wrong #2:
 # the guards existed but defaulted OFF — at web scale the first degenerate
-# bucket is fatal, so the cap is now opt-OUT). 4096 bounds one bucket's
+# bucket is fatal, so the cap is now opt-OUT). It bounds one bucket's
 # candidate fan-out at ~8.4M pairs — far above any plausible genuine
 # near-dup cluster's band bucket, far below job-killing. Members of an
 # over-cap bucket still pair through their other bands, so recall on
 # mega-clusters degrades gracefully. Pass max_bucket_size=None to disable.
+# The oracle SQL mirrors it (``HAVING count(*) <= …`` band CTEs);
+# tests/test_curation.py::test_mirrored_caps_agree pins the two together.
 DEFAULT_MAX_BUCKET_SIZE = 4096
 
 
@@ -82,29 +89,12 @@ def ngram_jaccard_pairs(
     Exact set Jaccard via inverted self-join: |A∩B| from the shingle join,
     |A∪B| = |A| + |B| − |A∩B|. ``max_shingle_df`` drops shingles shared by
     more than that many docs (boilerplate) before the quadratic join — the
-    skew cap; pass None to disable.
+    skew cap (``cap_bucket_sizes``); pass None to disable.
     """
-    if max_shingle_df is not None:
-        df_ok = (
-            shingled.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("sdf"))
-            .filter(F.col("sdf") <= max_shingle_df)
-            .select("shingle")
-        )
-        shingled = shingled.join(df_ok, "shingle")
-    sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = shingled.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = shingled.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    shingled = cap_bucket_sizes(shingled, ["shingle"], max_shingle_df)
+    inter = shared_key_pairs(shingled, ["shingle"]).withColumnRenamed("shared", "inter")
     return (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb")), "doc_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
+        with_jaccard(inter, shingled, "inter")
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "inter", "na", "nb", "jaccard")
     )
@@ -138,10 +128,11 @@ def minhash_signatures(shingled: DataFrame, n_hashes: int = 64) -> DataFrame:
 
 
 def cap_bucket_sizes(
-    banded: DataFrame, keys: list[str], max_bucket_size: int | None
+    rows: DataFrame, keys: list[str], max_bucket_size: int | None
 ) -> DataFrame:
-    """Drop hash buckets larger than ``max_bucket_size`` before a bucket
-    self-join (None = off).
+    """Drop the rows of every key seen in more than ``max_bucket_size`` rows
+    (None = off) — the one hot-key cap ahead of every key self-join: LSH
+    band buckets, shingle df, fingerprint df.
 
     A bucket of size B emits B·(B-1)/2 candidate pairs — one degenerate
     bucket (empty-shingle docs, boilerplate, an adversarial hot key) turns
@@ -152,14 +143,48 @@ def cap_bucket_sizes(
     The capped relation is what a skew-aware 100 TB run feeds the join.
     """
     if max_bucket_size is None:
-        return banded
+        return rows
     sizes = (
-        banded.groupBy(*keys)
+        rows.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("_bsz"))
         .filter(F.col("_bsz") <= max_bucket_size)
         .select(*keys)
     )
-    return banded.join(sizes, keys)
+    return rows.join(sizes, keys)
+
+
+def shared_key_pairs(rows: DataFrame, keys: list[str], id_col: str = "doc_id") -> DataFrame:
+    """(id, *keys) rows → (doc_a, doc_b, shared): every id pair with
+    doc_a < doc_b that shares at least one key, and how many keys it shares.
+
+    The one inverted self-join of the pair finders; cap hot keys
+    (``cap_bucket_sizes``) first — a key held by B ids emits B·(B-1)/2 rows.
+    The count is a combiner-friendly aggregation on the pair.
+    """
+    a = rows.select(F.col(id_col).alias("doc_a"), *keys)
+    b = rows.select(F.col(id_col).alias("doc_b"), *keys)
+    return (
+        a.join(b, keys)
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+
+
+def with_jaccard(pairs: DataFrame, rows: DataFrame, shared: str = "shared") -> DataFrame:
+    """pairs(doc_a, doc_b, <shared>) + the (doc_id, key) set rows → adds
+    ``na``, ``nb`` and ``jaccard = shared / (na + nb − shared)``.
+
+    Exact set Jaccard, with |A∩B| = ``shared`` and the set sizes counted over
+    ``rows`` — pass the same (capped) relation the intersection was counted
+    on, so the Jaccard is exact w.r.t. that universe.
+    """
+    sizes = rows.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    return (
+        pairs.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
+        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
+        .withColumn("jaccard", F.col(shared) / (F.col("na") + F.col("nb") - F.col(shared)))
+    )
 
 
 def minhash_lsh_candidates(
@@ -189,14 +214,7 @@ def minhash_lsh_candidates(
         )))).alias("band_sig"))
     )
     banded = cap_bucket_sizes(banded, ["band", "band_sig"], max_bucket_size)
-    a = banded.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
-    b = banded.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
-    return (
-        a.join(b, ["band", "band_sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    return shared_key_pairs(banded, ["band", "band_sig"]).select("doc_a", "doc_b")
 
 
 def minhash_near_dup_pairs(
@@ -228,22 +246,13 @@ def minhash_near_dup_pairs(
     shingled relation before calling if the input is expensive to recompute —
     it is consumed by signatures, sizes, and both verification joins.
     """
-    shingled = shingle_tokens(docs, n)
-    if max_shingle_df is not None:
-        df_ok = (
-            shingled.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("sdf"))
-            .filter(F.col("sdf") <= max_shingle_df)
-            .select("shingle")
-        )
-        shingled = shingled.join(df_ok, "shingle")
+    shingled = cap_bucket_sizes(shingle_tokens(docs, n), ["shingle"], max_shingle_df)
     candidates = minhash_lsh_candidates(
         minhash_signatures(shingled, n_hashes),
         n_bands,
         n_hashes=n_hashes,
         max_bucket_size=max_bucket_size,
     )
-    sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     inter = (
         candidates.join(
             shingled.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a"
@@ -253,9 +262,7 @@ def minhash_near_dup_pairs(
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     return (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb")), "doc_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
+        with_jaccard(inter, shingled, "inter")
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -540,13 +547,10 @@ def simhash_near_pairs(
         ),
     )
     banded = cap_bucket_sizes(banded, ["band", "band_val"], max_bucket_size)
-    a = banded.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), "band", "band_val")
-    b = banded.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), "band", "band_val")
     return (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sim_a", "sim_b")
-        .distinct()
+        shared_key_pairs(banded, ["band", "band_val"])
+        .join(sims.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a")), "doc_a")
+        .join(sims.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b")), "doc_b")
         .withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from splade_spark.curation.dedup import cap_bucket_sizes, shared_key_pairs, with_jaccard
+
 HASH_BASE = 257
 HASH_MOD = (1 << 61) - 1  # Mersenne prime: fast mod, no overflow in float tricks
 DEFAULT_K = 8
@@ -140,24 +142,18 @@ def decontamination_pairs(
     conservative-from-below only through capped boilerplate, never through
     eval truncation.
     """
-    fps_c = (
+    fps_c = cap_bucket_sizes(
         winnow_fingerprints(corpus, text_col, k, w)
         .select("doc_id", F.explode("fingerprints").alias("fp"))
-        .distinct()
+        .distinct(),
+        ["fp"],
+        max_fingerprint_df,
     )
     fps_e = (
         winnow_fingerprints(eval_docs, text_col, k, w)
         .select(F.col("doc_id").alias("eval_id"), F.explode("fingerprints").alias("fp"))
         .distinct()
     )
-    if max_fingerprint_df is not None:
-        ok = (
-            fps_c.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_fingerprint_df)
-            .select("fp")
-        )
-        fps_c = fps_c.join(ok, "fp")
     sizes_e = fps_e.groupBy("eval_id").agg(F.count(F.lit(1)).alias("n_fp"))
     # The eval side is small by definition but a filtered scan is estimated
     # at the full scan's size, so only the hint makes it the broadcast side.
@@ -203,41 +199,12 @@ def fingerprint_overlap_pairs(
     capped universe so jaccard stays exact w.r.t. it (the SQL replay
     mirrors the cap).
     """
-    fps = winnow_fingerprints(docs, text_col, k, w).select(
-        "doc_id", F.explode("fingerprints").alias("fp")
+    fps = cap_bucket_sizes(
+        winnow_fingerprints(docs, text_col, k, w).select(
+            "doc_id", F.explode("fingerprints").alias("fp")
+        ),
+        ["fp"],
+        max_fingerprint_df,
     )
-    if max_fingerprint_df is not None:
-        ok = (
-            fps.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_fingerprint_df)
-            .select("fp")
-        )
-        fps = fps.join(ok, "fp")
-    sizes = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
-    pairs = (
-        fps.select(F.col("doc_id").alias("doc_a"), "fp")
-        .join(fps.select(F.col("doc_id").alias("doc_b"), "fp"), "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
-    return (
-        pairs.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_fp").alias("na")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_fp").alias("nb")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "shared",
-            (F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))).alias(
-                "jaccard"
-            ),
-        )
-    )
+    pairs = shared_key_pairs(fps, ["fp"]).filter(F.col("shared") >= min_shared)
+    return with_jaccard(pairs, fps).select("doc_a", "doc_b", "shared", "jaccard")

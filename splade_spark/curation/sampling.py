@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from splade_spark.curation.textstats import _WORD_RE
-from splade_spark.dense.hash_embed import portable_hash
+from splade_spark.text.hashing import portable_hash
 
 SEED_SAMPLE = 7331
 

@@ -20,6 +20,10 @@ Two paths over ``embeddings(vec_id long, embedding array<float>, label int)``
   multi-probe (flipping one bit) is included to recover near-boundary
   neighbors. Tested against the brute-force path for recall ≥ threshold
   (tests/test_dense.py).
+
+Every top-k here cuts through ``query.topk.per_query_topk`` on ``vec_id``
+(the frozen tie-break); the near-dup paths pair through
+``curation.dedup.shared_key_pairs`` behind its hot-bucket cap.
 """
 
 from __future__ import annotations
@@ -27,6 +31,11 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
+
+from splade_spark.curation.dedup import (
+    DEFAULT_MAX_BUCKET_SIZE, cap_bucket_sizes, shared_key_pairs,
+)
+from splade_spark.query.topk import per_query_topk
 
 ANN_SEED = 42
 
@@ -53,11 +62,13 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def _ranked(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("score"), 6).desc(), F.col("vec_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+def _cosine(a, b):
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _centroid_scores(cents, v):
+    """Per-centroid score array: centroid · v / |v| (the zero vector scores 0)."""
+    return F.transform(cents, lambda c: _dot(c, v) / F.greatest(_norm(v), F.lit(1e-300)))
 
 
 def brute_cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
@@ -70,22 +81,16 @@ def brute_cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10) ->
     relation (every corpus vector scored for every query) — the semantic
     ground truth the approximate paths are recall-tested against, not a 100 TB
     plan. The scale paths are ``lsh_cosine_topk`` / ``ivf_cosine_topk``,
-    whose ``_ranked`` input is already the narrow candidate set.
+    whose ranked input is already the narrow candidate set.
     """
     q = F.broadcast(queries.select("query_id", F.col("qvec").cast("array<double>").alias("qvec")))
     e = embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("vec"))
     scored = (
         e.crossJoin(q)
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            (_dot(F.col("vec"), F.col("qvec")) / (_norm(F.col("vec")) * _norm(F.col("qvec")))).alias(
-                "score"
-            ),
-        )
+        .select("query_id", "vec_id", _cosine(F.col("vec"), F.col("qvec")).alias("score"))
     )
-    return _ranked(scored, k)
+    return per_query_topk(scored, k, id_col="vec_id")
 
 
 def _planes_lit(dim: int, n_planes: int, table: int):
@@ -105,6 +110,25 @@ def _signature(vec_col, planes_col, n_planes: int):
     )
 
 
+def _table_signatures(
+    base: DataFrame, id_col: str, vec_col: str, dim: int, n_planes: int, n_tables: int
+) -> DataFrame:
+    """(id, vec) → (id, table, sig): one random-hyperplane signature per LSH
+    table, the tables unioned."""
+    sigs = [
+        base.select(
+            id_col,
+            F.lit(t).alias("table"),
+            _signature(F.col(vec_col), _planes_lit(dim, n_planes, t), n_planes).alias("sig"),
+        )
+        for t in range(n_tables)
+    ]
+    out = sigs[0]
+    for s in sigs[1:]:
+        out = out.unionByName(s)
+    return out
+
+
 def embedding_near_dup_pairs(
     embeddings: DataFrame, threshold: float = 0.95
 ) -> DataFrame:
@@ -122,13 +146,7 @@ def embedding_near_dup_pairs(
     return (
         a.crossJoin(b)
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            (_dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))).alias(
-                "score"
-            ),
-        )
+        .select("vec_a", "vec_b", _cosine(F.col("va"), F.col("vb")).alias("score"))
         .filter(F.col("score") >= threshold)
     )
 
@@ -139,7 +157,7 @@ def lsh_near_dup_pairs(
     n_planes: int = 8,
     n_tables: int = 6,
     dim: int | None = None,
-    max_bucket_size: int | None = 4096,
+    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """LSH-bucketed cosine near-dup pairs — the 10^12-row path.
 
@@ -149,47 +167,26 @@ def lsh_near_dup_pairs(
     blow-up is confined to same-bucket minibatches; ``max_bucket_size``
     additionally drops hot buckets (the all-zeros signature collects every
     near-origin vector) before the self-join — see
-    ``curation.dedup.cap_bucket_sizes``. ON by default (4096, mirroring
-    ``curation.dedup.DEFAULT_MAX_BUCKET_SIZE`` — kept a literal here to
-    avoid a module-level curation↔dense import cycle); None disables.
+    ``curation.dedup.cap_bucket_sizes``. ON by default
+    (``DEFAULT_MAX_BUCKET_SIZE``, the cap every LSH self-join shares); None
+    disables.
     """
     dim = _require_dim(dim)
     e_base = embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("vec"))
-    sigs = []
-    for t in range(n_tables):
-        planes = _planes_lit(dim, n_planes, t)
-        sigs.append(
-            e_base.select(
-                "vec_id", F.lit(t).alias("table"),
-                _signature(F.col("vec"), planes, n_planes).alias("sig"),
-            )
-        )
-    all_sigs = sigs[0]
-    for s in sigs[1:]:
-        all_sigs = all_sigs.unionByName(s)
-    from splade_spark.curation.dedup import cap_bucket_sizes
-
-    all_sigs = cap_bucket_sizes(all_sigs, ["table", "sig"], max_bucket_size)
-    a = all_sigs.select(F.col("vec_id").alias("vec_a"), "table", "sig")
-    b = all_sigs.select(F.col("vec_id").alias("vec_b"), "table", "sig")
-    candidates = (
-        a.join(b, ["table", "sig"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
+    sigs = cap_bucket_sizes(
+        _table_signatures(e_base, "vec_id", "vec", dim, n_planes, n_tables),
+        ["table", "sig"],
+        max_bucket_size,
+    )
+    candidates = shared_key_pairs(sigs, ["table", "sig"], "vec_id").select(
+        F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b")
     )
     va = e_base.select(F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"))
     vb = e_base.select(F.col("vec_id").alias("vec_b"), F.col("vec").alias("vb"))
     return (
         candidates.join(va, "vec_a")
         .join(vb, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            (_dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))).alias(
-                "score"
-            ),
-        )
+        .select("vec_a", "vec_b", _cosine(F.col("va"), F.col("vb")).alias("score"))
         .filter(F.col("score") >= threshold)
     )
 
@@ -257,10 +254,7 @@ def ivf_refine_centroids(
         )
     )
     for _ in range(iters):
-        lit = F.array(*[F.array(*[F.lit(float(x)) for x in row]) for row in cents])
-        scored = F.transform(
-            lit, lambda c: _dot(c, F.col("v")) / F.greatest(_norm(F.col("v")), F.lit(1e-300))
-        )
+        scored = _centroid_scores(_centroids_lit(dim, n_cells, cents), F.col("v"))
         cell = (F.array_position(scored, F.array_max(scored)) - 1).cast("int")
         rows = (
             e.select(cell.alias("cell"), F.posexplode("v").alias("d", "val"))
@@ -291,12 +285,9 @@ def ivf_assign(embeddings: DataFrame, dim: int, n_cells: int = 16,
     integer-exact accumulation keeps refined sets equally replayable).
     Ties break to the LOWEST cell id.
     """
-    cents = _centroids_lit(dim, n_cells, centroids)
-    v = F.col(vec_col).cast("array<double>")
     # score each centroid, pick argmax with lowest-id tie-break
-    scored = F.transform(
-        cents,
-        lambda c: _dot(c, v) / F.greatest(_norm(v), F.lit(1e-300)),
+    scored = _centroid_scores(
+        _centroids_lit(dim, n_cells, centroids), F.col(vec_col).cast("array<double>")
     )
     best = F.array_max(scored)
     cell = F.array_position(scored, best) - 1
@@ -332,13 +323,11 @@ def ivf_cosine_topk(
     e_base = embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("vec"))
     q_base = queries.select("query_id", F.col("qvec").cast("array<double>").alias("qvec"))
 
-    qv = F.col("qvec")
-    qscored = F.transform(cents, lambda c: _dot(c, qv) / F.greatest(_norm(qv), F.lit(1e-300)))
     # top-n_probe cells per query: rank centroid scores (desc, cell asc)
     q_cells = (
         q_base.select(
             "query_id",
-            F.posexplode(qscored).alias("cell", "cscore"),
+            F.posexplode(_centroid_scores(cents, F.col("qvec"))).alias("cell", "cscore"),
         )
         .withColumn(
             "crank",
@@ -359,15 +348,9 @@ def ivf_cosine_topk(
     scored = (
         candidates.join(e_base, "vec_id")
         .join(F.broadcast(q_base), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            (_dot(F.col("vec"), F.col("qvec")) / (_norm(F.col("vec")) * _norm(F.col("qvec")))).alias(
-                "score"
-            ),
-        )
+        .select("query_id", "vec_id", _cosine(F.col("vec"), F.col("qvec")).alias("score"))
     )
-    return _ranked(scored, k)
+    return per_query_topk(scored, k, id_col="vec_id")
 
 
 def lsh_cosine_topk(
@@ -392,36 +375,19 @@ def lsh_cosine_topk(
     e_base = embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("vec"))
     q_base = queries.select("query_id", F.col("qvec").cast("array<double>").alias("qvec"))
 
-    e_sigs, q_sigs = [], []
-    for t in range(n_tables):
-        planes = _planes_lit(dim, n_planes, t)
-        e_sigs.append(
-            e_base.select(
-                "vec_id",
-                F.lit(t).alias("table"),
-                _signature(F.col("vec"), planes, n_planes).alias("sig"),
-            )
-        )
-        sig0 = _signature(F.col("qvec"), planes, n_planes)
-        probes = F.array_union(
-            F.array(sig0),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_planes - 1)),
-                lambda i: sig0.bitwiseXOR(F.pow(F.lit(2.0), i).cast("long")),
-            ),
-        )
-        q_sigs.append(
-            q_base.select(
-                "query_id", F.lit(t).alias("table"), F.explode(probes).alias("sig")
-            )
-        )
-
-    e_all = e_sigs[0]
-    for s in e_sigs[1:]:
-        e_all = e_all.unionByName(s)
-    q_all = q_sigs[0]
-    for s in q_sigs[1:]:
-        q_all = q_all.unionByName(s)
+    e_all = _table_signatures(e_base, "vec_id", "vec", dim, n_planes, n_tables)
+    # multi-probe: the query's own signature plus every 1-bit flip of it
+    sig0 = F.col("sig")
+    probes = F.array_union(
+        F.array(sig0),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n_planes - 1)),
+            lambda i: sig0.bitwiseXOR(F.pow(F.lit(2.0), i).cast("long")),
+        ),
+    )
+    q_all = _table_signatures(q_base, "query_id", "qvec", dim, n_planes, n_tables).select(
+        "query_id", "table", F.explode(probes).alias("sig")
+    )
 
     candidates = (
         e_all.join(F.broadcast(q_all), ["table", "sig"])
@@ -432,12 +398,6 @@ def lsh_cosine_topk(
     scored = (
         candidates.join(e_base, "vec_id")
         .join(F.broadcast(q_base), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            (_dot(F.col("vec"), F.col("qvec")) / (_norm(F.col("vec")) * _norm(F.col("qvec")))).alias(
-                "score"
-            ),
-        )
+        .select("query_id", "vec_id", _cosine(F.col("vec"), F.col("qvec")).alias("score"))
     )
-    return _ranked(scored, k)
+    return per_query_topk(scored, k, id_col="vec_id")

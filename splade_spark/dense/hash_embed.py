@@ -15,33 +15,23 @@ val) — no UDFs, no dense arrays: the dot product is a join on bucket + a
 sum, which Spark executes as a shuffle join that scales with the number of
 NON-ZERO entries (≪ dim · docs). SQL-expressible, so the DuckDB oracle can
 replay it exactly (xxhash64 is replaced by a portable mix both sides share —
-see portable_hash).
+see text/hashing.py ``portable_hash``). Queries are analyzed by
+``query.encode.query_term_counts`` and ranked by ``query.topk.per_query_topk``,
+like every other Spark query path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
 
 from splade_spark.config import EngineConfig, DEFAULT
-from splade_spark.text.udfs import analyze_udf
+from splade_spark.query.encode import query_term_counts
+from splade_spark.query.topk import per_query_topk
+from splade_spark.text.hashing import portable_hash
 
 SEED_BUCKET = 1
 SEED_SIGN = 2
 DEFAULT_DIM = 256
-
-
-def portable_hash(col, seed: int):
-    """Portable 32-bit hash: first 8 hex chars of ``md5(term || '#seed')``.
-
-    Engine-internal hashing elsewhere uses xxhash64 (JVM-native, faster), but
-    the dense-channel hash must be REPLAYABLE BY THE ORACLE: DuckDB computes
-    the identical value as ``('0x'||substr(md5(term||'#seed'),1,8))::UBIGINT``
-    (tested bit-equal). md5 is a built-in JVM expression — stays in codegen.
-    """
-    return F.conv(
-        F.substring(F.md5(F.concat(col, F.lit(f"#{seed}"))), 1, 8), 16, 10
-    ).cast("long")
 
 
 def _long_form(tokens_exploded: DataFrame, id_col: str, dim: int) -> DataFrame:
@@ -71,13 +61,7 @@ def hash_embed_queries(
     queries: DataFrame, cfg: EngineConfig = DEFAULT, dim: int = DEFAULT_DIM
 ) -> DataFrame:
     """queries(query_id, text) → long-form (query_id, bucket, val)."""
-    tf = (
-        queries.select(
-            "query_id", F.explode(analyze_udf(cfg.analyzer)(F.col("text"))).alias("term")
-        )
-        .groupBy("query_id", "term")
-        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-    )
+    tf = query_term_counts(queries, cfg).withColumnRenamed("qtf", "tf")
     return _long_form(tf, "query_id", dim)
 
 
@@ -87,7 +71,7 @@ def cosine_topk_sparse(
     """Cosine top-k between long-form vectors → (query_id, doc_id, score, rank).
 
     dot = join on bucket (query side broadcast — queries ≪ docs);
-    norms = per-id aggregates. Ties: (round(score,6) desc, doc_id asc).
+    norms = per-id aggregates; ranked by ``per_query_topk`` (frozen tie-break).
     """
     doc_norm = doc_vecs.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("dnorm")
@@ -111,7 +95,4 @@ def cosine_topk_sparse(
             (F.col("dot") / (F.col("dnorm") * F.col("qnorm"))).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("score"), 6).desc(), F.col("doc_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return per_query_topk(scored, k)

@@ -7,6 +7,8 @@ terms drop out (inner join against the dictionary). ``encode_queries`` does
 this for a query table in Spark (``topk_naive``), ``encode_text`` for one
 query string on the driver (``LocalSearcher``, ``InteractiveSession``), and
 ``encode_query_set`` for a whole query table on the driver (``topk_wand``).
+Every Spark query encoder — this one, SPLADE's and the hash embedding's —
+starts from ``query_term_counts``.
 """
 
 from __future__ import annotations
@@ -59,6 +61,17 @@ def encode_query_set(
     return {q: w for q, w in encoded.items() if w}
 
 
+def query_term_counts(queries: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
+    """queries(query_id, text) → (query_id, term, qtf double): the analyzed
+    query terms and their counts — the one Spark query analysis, shared by
+    the BM25, SPLADE and hash-embedding query encoders."""
+    return (
+        queries.select("query_id", F.explode(analyze_udf(cfg.analyzer)(F.col("text"))).alias("term"))
+        .groupBy("query_id", "term")
+        .agg(F.count(F.lit(1)).cast("double").alias("qtf"))
+    )
+
+
 def encode_queries(
     queries: DataFrame, dictionary: DataFrame, cfg: EngineConfig = DEFAULT
 ) -> DataFrame:
@@ -67,12 +80,7 @@ def encode_queries(
     The query set is tiny relative to the index — downstream joins broadcast
     this result (J1/J2, SURVEY.md §2.4).
     """
-    qterms = (
-        queries.select("query_id", F.explode(analyze_udf(cfg.analyzer)(F.col("text"))).alias("term"))
-        .groupBy("query_id", "term")
-        .agg(F.count(F.lit(1)).cast("double").alias("qtf"))
-    )
-    return qterms.join(dictionary.select("term", "term_id", "idf"), "term").select(
+    return query_term_counts(queries, cfg).join(dictionary.select("term", "term_id", "idf"), "term").select(
         "query_id",
         "term_id",
         (F.col("qtf") * F.col("idf")).alias("qweight"),

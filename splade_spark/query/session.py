@@ -8,7 +8,8 @@ AQE re-planning — none of it compute. ``InteractiveSession`` removes all of
 it while keeping the INDEX distributed (unlike LocalSearcher, which collects
 the posting blocks):
 
-  * the dictionary is collected to the driver ONCE (term → (term_id, idf));
+  * the dictionary is collected to the driver ONCE, in one bounded Arrow
+    read (term → (term_id, idf));
     query encode becomes a driver-side dict lookup over the frozen analyzer
     — no UDF stage, no dictionary join, no broadcast exchange per query;
   * per-query term weights are injected as a literal CASE expression, so the
@@ -85,15 +86,22 @@ class InteractiveSession:
         self.cfg = cfg
         self._prepared = None
         self._spark = postings.sparkSession
-        # guard BEFORE any persistent side effect (prepared cache, conf
-        # tuning): a refused vocabulary must leave the session untouched
-        n_terms = dictionary.count()
-        if n_terms > _MAX_TERMS:
+        # the vocabulary is read ONCE, bounded one row past the limit, BEFORE
+        # any persistent side effect (prepared cache, conf tuning): a refused
+        # vocabulary leaves the session untouched
+        vocab = (
+            dictionary.select("term", "term_id", "idf").limit(_MAX_TERMS + 1).toArrow()
+        )
+        if vocab.num_rows > _MAX_TERMS:
             raise ValueError(
-                f"dictionary has {n_terms} terms > max_terms={_MAX_TERMS}: "
+                f"dictionary has more than max_terms={_MAX_TERMS} terms: "
                 "collecting it would strain the driver — use topk_naive/WAND "
                 "(broadcast query side)"
             )
+        self.vocab = dict(zip(
+            vocab["term"].to_pylist(),
+            zip(vocab["term_id"].to_pylist(), vocab["idf"].to_pylist()),
+        ))
         if prepare:
             prepared = prepare_postings(postings)
             try:
@@ -103,17 +111,7 @@ class InteractiveSession:
                 raise
             self._prepared = prepared
             postings = prepared
-        try:
-            self.postings = postings
-            self.vocab = {
-                r["term"]: (r["term_id"], r["idf"])
-                for r in dictionary.select("term", "term_id", "idf").collect()
-            }
-        except Exception:
-            if self._prepared is not None:
-                self._prepared.unpersist()
-                self._prepared = None
-            raise
+        self.postings = postings
         self._saved_conf: dict[str, str | None] = {}
         for key, val in self._TUNED.items():
             try:

@@ -1,4 +1,4 @@
-"""Pure-Python XXH64 and deterministic doc-id derivation.
+"""The oracle-replayable hashes: chunk doc ids and the portable md5 hash.
 
 Replaces the reference's non-reproducible ``uuid.uuid4()`` primary keys
 (/root/reference/ingest.py:139, see SURVEY.md §1.4): chunk identity is
@@ -9,11 +9,16 @@ No third-party xxhash is available in the sandbox, so the algorithm is
 implemented from the public XXH64 specification. It is used only inside
 already-Python stages (the chunking pandas UDF and the oracle); the Spark hot
 path never calls it per row outside an Arrow-batched UDF.
+
+``portable_hash`` is the Spark column hash every oracle-replayed result
+(hash embeddings, minhash shingles, samplers, sketches) keys on.
 """
 
 from __future__ import annotations
 
 import struct
+
+from pyspark.sql import functions as F
 
 _M = (1 << 64) - 1
 _P1 = 11400714785074694791
@@ -91,3 +96,17 @@ def chunk_doc_id(url: str, chunk_idx: int) -> int:
     """Deterministic signed-int64 chunk id (SURVEY.md §1.4, FIXTURES.md §2)."""
     payload = url.encode("utf-8") + b"\x00" + struct.pack("<i", chunk_idx)
     return to_signed64(xxh64(payload, seed=42))
+
+
+def portable_hash(col, seed: int):
+    """Portable 32-bit hash: first 8 hex chars of ``md5(term || '#seed')``.
+
+    Engine-internal hashing elsewhere uses xxhash64 (JVM-native, faster), but
+    a hash that feeds an oracle-checked result must be REPLAYABLE BY THE
+    ORACLE: DuckDB computes the identical value as
+    ``('0x'||substr(md5(term||'#seed'),1,8))::UBIGINT`` (tested bit-equal).
+    md5 is a built-in JVM expression — stays in codegen.
+    """
+    return F.conv(
+        F.substring(F.md5(F.concat(col, F.lit(f"#{seed}"))), 1, 8), 16, 10
+    ).cast("long")

@@ -404,6 +404,117 @@ def test_bucket_size_cap(spark):
     assert cap_bucket_sizes(banded, ["band", "sig"], 2).count() == 1
 
 
+# Every hot-key cap case below gives ONE key to ids 0-3 (cap + 1 ids at
+# cap=3) and a second key to the control ids 10 and 11.
+_HOT = range(4)
+_HOT_PAIRS = {(a, b) for a in _HOT for b in _HOT if a < b}
+
+
+def _ngram_cap_pairs(spark, cap):
+    shingled = spark.createDataFrame(
+        [(i, "hot") for i in _HOT] + [(i, f"own{i}") for i in _HOT]
+        + [(10, "warm"), (11, "warm")],
+        ["doc_id", "shingle"],
+    )
+    out = ngram_jaccard_pairs(shingled, threshold=0.0, max_shingle_df=cap)
+    return {(r.doc_a, r.doc_b) for r in out.collect()}, _HOT_PAIRS | {(10, 11)}
+
+
+def _minhash_cap_pairs(spark, cap):
+    docs = spark.createDataFrame(
+        [(i, ["a", "b", "c"]) for i in _HOT] + [(10, ["x", "y", "z"]), (11, ["x", "y", "z"])],
+        ["doc_id", "tokens"],
+    )
+    out = minhash_near_dup_pairs(docs, n_hashes=16, n_bands=4, max_shingle_df=cap)
+    return {(r.doc_a, r.doc_b) for r in out.collect()}, _HOT_PAIRS | {(10, 11)}
+
+
+def _decontamination_cap_pairs(spark, cap):
+    from splade_spark.curation import decontamination_pairs
+
+    hot = "the quick brown fox jumps over the lazy dog"
+    control = "pack my box with five dozen liquor jugs"
+    corpus = spark.createDataFrame(
+        [(i, hot) for i in _HOT] + [(10, control)], ["doc_id", "text"]
+    )
+    evals = spark.createDataFrame([(100, hot), (101, control)], ["doc_id", "text"])
+    out = decontamination_pairs(corpus, evals, min_shared=1, max_fingerprint_df=cap)
+    return (
+        {(r.doc_id, r.eval_id) for r in out.collect()},
+        {(i, 100) for i in _HOT} | {(10, 101)},
+    )
+
+
+def _simhash_cap_pairs(spark, cap):
+    sims = spark.createDataFrame(
+        [(i, 0) for i in _HOT] + [(10, (1 << 60) - 1), (11, (1 << 60) - 1)],
+        "doc_id long, simhash long",
+    )
+    out = simhash_near_pairs(sims, max_bucket_size=cap)
+    return {(r.doc_a, r.doc_b) for r in out.collect()}, _HOT_PAIRS | {(10, 11)}
+
+
+def _lsh_cap_pairs(spark, cap):
+    from splade_spark.dense import lsh_near_dup_pairs
+
+    v = [1.0, 2.0, 3.0, 4.0]
+    # -v flips the sign of every hyperplane dot: a different bucket per table
+    emb = spark.createDataFrame(
+        [(i, v) for i in _HOT] + [(10, [-x for x in v]), (11, [-x for x in v])],
+        "vec_id long, embedding array<float>",
+    )
+    out = lsh_near_dup_pairs(emb, dim=4, max_bucket_size=cap)
+    return {(r.vec_a, r.vec_b) for r in out.collect()}, _HOT_PAIRS | {(10, 11)}
+
+
+@pytest.mark.parametrize("pairs_at", [
+    _ngram_cap_pairs, _minhash_cap_pairs, _decontamination_cap_pairs,
+    _simhash_cap_pairs, _lsh_cap_pairs,
+], ids=["ngram_max_shingle_df", "minhash_max_shingle_df",
+        "decontamination_max_fingerprint_df", "simhash_max_bucket_size",
+        "lsh_near_dup_max_bucket_size"])
+def test_hot_key_caps(spark, pairs_at):
+    """Each pair finder's hot-key cap: a key held by cap + 1 ids forms no
+    pair, the control key still pairs, and at cap = its size (kept: <=) the
+    hot key pairs every id it holds."""
+    capped, everything = pairs_at(spark, 3)
+    assert capped == everything - {p for p in everything if p[0] in _HOT}
+    assert pairs_at(spark, 4)[0] == everything
+
+
+def test_mirrored_caps_agree():
+    """The hot-key caps mirrored in the oracle SQL equal the operators'
+    defaults: every LSH band cap is DEFAULT_MAX_BUCKET_SIZE, and the
+    fingerprint-df cap is the fingerprint operators' default."""
+    import inspect
+    import re
+
+    import __spark_entry__ as entry
+    from splade_spark.curation import decontamination_pairs, fingerprint_overlap_pairs
+    from splade_spark.curation.dedup import DEFAULT_MAX_BUCKET_SIZE
+    from splade_spark.dense import lsh_near_dup_pairs
+
+    def default(fn, name):
+        return inspect.signature(fn).parameters[name].default
+
+    sql = entry.oracle_sql()
+    band_caps = re.findall(
+        r"GROUP BY band, bsig HAVING count\(\*\) <= (\d+)", "\n".join(sql.values())
+    )
+    assert band_caps and {int(c) for c in band_caps} == {DEFAULT_MAX_BUCKET_SIZE}
+    for fn in (minhash_lsh_candidates, minhash_near_dup_pairs, simhash_near_pairs,
+               lsh_near_dup_pairs):
+        assert default(fn, "max_bucket_size") == DEFAULT_MAX_BUCKET_SIZE, fn.__name__
+
+    fp_cap = default(fingerprint_overlap_pairs, "max_fingerprint_df")
+    assert default(decontamination_pairs, "max_fingerprint_df") == fp_cap
+    for name, builder in (("fingerprint_overlap", entry._fingerprint_overlap_sql),
+                          ("decontamination", entry._decontamination_sql)):
+        assert default(builder, "max_fp_df") == fp_cap, name
+        assert [int(c) for c in re.findall(
+            r"GROUP BY fp HAVING count\(\*\) <= (\d+)", sql[name])] == [fp_cap], name
+
+
 def test_sampling_ops(spark):
     from splade_spark.curation.sampling import (
         capped_per_key_sample, token_budget_sample,
@@ -513,7 +624,7 @@ def test_pack_token_sequences(spark):
 
 
 def _portable_hash_py(s: str, seed: int) -> int:
-    """Driver-side replica of dense/hash_embed.portable_hash."""
+    """Driver-side replica of text/hashing.portable_hash."""
     import hashlib
 
     return int(hashlib.md5(f"{s}#{seed}".encode()).hexdigest()[:8], 16)
